@@ -5,13 +5,11 @@ Runs the catalog's headline queries at ``$SPARK_GRAFT_SF_DIR``
 prints ONE JSON line:
     {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
-Timing convention (BASELINE.md, revised r13): warm session — JVM
-startup and a per-query warm-up pass are excluded; each query is
-timed end-to-end including its parquet scan, drained with a noop
-write (no driver collect); each query's caches are released
-(clearCache) after its timed pass so the storage pool never
-accumulates the full 19-query footprint (the r12 bimodal-outlier
-fix — see BENCH_NOTES.md).
+Timing convention: warm session — JVM startup and a per-query
+warm-up pass are excluded; each query is timed end-to-end including
+its parquet scan, drained with a noop write (no driver collect); each
+query's caches are released (clearCache) after its timed pass so the
+storage pool never accumulates every query's footprint.
 """
 
 from __future__ import annotations
@@ -44,67 +42,24 @@ def main() -> None:
     spark = get_session(app_name="engine-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
-    # Timing convention (fixtures-v2 epoch, revised r13): per query,
-    # warm pass -> timed pass -> clearCache(). The warm pass excludes
-    # JVM startup, file-index builds, and first-run
-    # whole-stage-codegen compilation AND populates the query's own
-    # persisted frames, which the timed pass reuses (same canonical
-    # plans hit the CacheManager) — that part of the r01-r12
-    # convention survives. What changed: caches are RELEASED after
-    # each query's timed pass instead of accumulating across all
-    # 2x19 passes. The r12 closing sequences showed the accumulated
-    # footprint pushing the storage pool into an eviction mode where
-    # 2/7 runs spiked >2x (BENCH_NOTES.md r12) — a harness artifact
-    # that could make a single driver pass read as a false
-    # regression. clearCache() (not the opt-in persistence registry)
-    # is deliberate: several builders persist without registering,
-    # and session-wide release is the only form that provably bounds
-    # the footprint to one query. Set SPARK_GRAFT_BENCH_KEEP_CACHES=1
-    # to reproduce the legacy accumulate-everything convention.
-    keep_caches = os.environ.get("SPARK_GRAFT_BENCH_KEEP_CACHES") == "1"
+    # Untimed session-warm sweep, then per query: warm pass (reported as
+    # first_pass_sec) -> timed pass -> clearCache. History: BENCH_NOTES.md.
     timings: dict[str, float] = {}
-    # r15 (VERDICT r14 "report cold cost alongside warm"):
-    # the per-query warm pass is now TIMED and reported as
-    # first_pass_sec — the session-warm single-shot cost, which
-    # includes building any in-query persisted frames that the timed
-    # pass then reads back from the cache. ADDITIONS-ONLY: the timed
-    # pass, its convention (warm -> timed -> clearCache) and the
-    # headline `queries`/`value` fields are byte-for-byte the v2
-    # methodology, so round-over-round comparison continuity holds;
-    # the convention marker moves to v3 purely to signal the extra
-    # field.
     first_pass: dict[str, float] = {}
-    if keep_caches:
-        for warm in HEADLINE_QUERIES:
-            _drain(QUERIES[warm].fn(spark, sf_dir))
-        for name in HEADLINE_QUERIES:
-            start = time.perf_counter()
-            _drain(QUERIES[name].fn(spark, sf_dir))
-            timings[name] = round(time.perf_counter() - start, 3)
-    else:
-        # Full untimed session-warm sweep first: with per-query cache
-        # release, the first timed query would otherwise absorb the
-        # session's residual JIT (measured: the position-1 query ran
-        # ~30% slower in the release convention than in the legacy
-        # one until this sweep equalized session warmth — r13 A/B).
-        for warm in HEADLINE_QUERIES:
-            _drain(QUERIES[warm].fn(spark, sf_dir))
+    for warm in HEADLINE_QUERIES:
+        _drain(QUERIES[warm].fn(spark, sf_dir))
+    spark.catalog.clearCache()
+    for name in HEADLINE_QUERIES:
+        start = time.perf_counter()
+        _drain(QUERIES[name].fn(spark, sf_dir))  # warm cache pass
+        first_pass[name] = round(time.perf_counter() - start, 3)
+        start = time.perf_counter()
+        _drain(QUERIES[name].fn(spark, sf_dir))
+        timings[name] = round(time.perf_counter() - start, 3)
         spark.catalog.clearCache()
-        for name in HEADLINE_QUERIES:
-            start = time.perf_counter()
-            _drain(QUERIES[name].fn(spark, sf_dir))  # warm cache pass
-            first_pass[name] = round(time.perf_counter() - start, 3)
-            start = time.perf_counter()
-            _drain(QUERIES[name].fn(spark, sf_dir))
-            timings[name] = round(time.perf_counter() - start, 3)
-            spark.catalog.clearCache()
 
     total = round(sum(timings.values()), 3)
-    # Round-over-round continuity: the headline set was extended in
-    # round 8 (method comparison, bucketed range join, hybrid RRF),
-    # so the grand total is not comparable to rounds 1-7 on its
-    # face. legacy16_total re-sums exactly the original 16-query
-    # set for direct comparison against BENCH_r01..r07.
+    # The original 16-query headline set (BENCH_NOTES.md).
     legacy16 = (
         "dedup_minhash_lsh", "q1_pricing_summary", "dedup_exact_docs",
         "similarity_topk_cosine", "text_quality_scores", "token_counts_top",
@@ -124,28 +79,12 @@ def main() -> None:
                 "value": total,
                 "unit": "sec",
                 "queries": timings,
-                # Cold-ish single-shot cost per query (session warm,
-                # caches cold): includes persist-build work the timed
-                # pass reads back from the CacheManager. Empty under
-                # the legacy keep-caches convention (its warm pass is
-                # one global sweep, not per query).
+                # Single-shot cost per query (session warm, caches
+                # cold): includes persist builds the timed pass reuses.
                 "first_pass_sec": first_pass,
                 "legacy16_total": legacy16_total,
                 "sf": sf,
-                # Convention marker (ADVICE r13 #3): the r13 switch
-                # to per-query cache release changed what the timed
-                # pass measures, so BENCH_r13+ totals are not
-                # directly comparable to the r01-r12 series.
-                # Downstream tooling can key on this field instead
-                # of reading BENCH_NOTES.md prose. v3 (r15) ONLY adds
-                # the first_pass_sec field; the timed pass and the
-                # headline fields are exactly the v2 methodology, so
-                # v2 and v3 headline numbers remain comparable.
-                "convention": (
-                    "accumulate-legacy-v1"
-                    if keep_caches
-                    else "per-query-release-v3"
-                ),
+                "convention": "per-query-release-v3",
             }
         )
     )

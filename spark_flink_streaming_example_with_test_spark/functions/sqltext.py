@@ -22,6 +22,7 @@ escapes correctly instead of parsing wrong:
 
 from __future__ import annotations
 
+import re
 import uuid
 from typing import TYPE_CHECKING
 
@@ -38,15 +39,20 @@ def sql_with(spark: "SparkSession", query: str, **dfs: "DataFrame"):
     the PUBLIC catalog API — and ``Catalog.dropTempView`` uncaches any
     cached plan equal to the view's as a side effect. Binding an
     operator-persisted frame to a ``{df}`` placeholder therefore
-    silently unpersists it (found in r15 by the hybrid plan-shape pin:
+    silently unpersists it (the hybrid plan-shape pin caught this as
     InMemoryTableScan x0). This helper creates uuid-named views, runs
     the query, and removes the names through the INTERNAL
     SessionCatalog (a registry delete only — the cache entry
     survives). The returned DataFrame embeds the views' analyzed
     plans, so dropping the names afterwards is safe.
 
-    ``query`` uses ``str.format`` fields: every ``{name}`` must be a
-    keyword argument, and the query text must contain no other braces.
+    Classic sessions only keep the cache: where the JVM bridge is
+    missing (e.g. Spark Connect) the names are dropped through
+    ``spark.catalog.dropTempView``, with its uncache side effect.
+
+    Only an exact ``{name}`` token for a keyword argument is replaced;
+    every other brace — and anything inside a backtick-quoted
+    identifier or a quoted string literal — is left as written.
     """
     names: dict[str, str] = {}
     created: list[str] = []
@@ -56,14 +62,29 @@ def sql_with(spark: "SparkSession", query: str, **dfs: "DataFrame"):
             df.createTempView(n)
             created.append(n)
             names[key] = n
-        return spark.sql(query.format(**names))
+        return spark.sql(
+            _TOKEN.sub(lambda m: names.get(m.group(1), m.group(0)), query)
+        )
     finally:
-        cat = spark._jsparkSession.sessionState().catalog()
+        try:
+            drop = spark._jsparkSession.sessionState().catalog().dropTempView
+        except AttributeError:  # no JVM bridge
+            drop = spark.catalog.dropTempView
         for n in created:
             try:
-                cat.dropTempView(n)
+                drop(n)
             except Exception:  # noqa: BLE001 — cleanup is best-effort
                 pass
+
+
+#: Quoted identifiers and string literals are matched whole, so a
+#: brace inside one is never a token; group 1 is a ``{name}`` token.
+_TOKEN = re.compile(
+    r"`(?:[^`]|``)*`"
+    r"|'(?:[^'\\]|\\.)*'"
+    r'|"(?:[^"\\]|\\.)*"'
+    r"|\{(\w+)\}"
+)
 
 
 def sql_str_lit(s: str) -> str:

@@ -18,7 +18,7 @@ from spark_flink_streaming_example_with_test_spark.operators.activity import (
 )
 from spark_flink_streaming_example_with_test_spark.schemas import EVENTS_PROPS_SCHEMA
 from spark_flink_streaming_example_with_test_spark.sources.tables import load_table
-from spark_flink_streaming_example_with_test_spark.streaming.replay import replay_partitions
+from spark_flink_streaming_example_with_test_spark.streaming.replay import bounded_replay
 
 #: events-fixture analog of the reference's {liked, commented} keep
 #: list (universe: signup click error view purchase).
@@ -200,39 +200,18 @@ def streaming_running_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame
     DataFrame. The oracle is plain SQL aggregation — proving the
     stateful path converges to the batch answer (SURVEY.md §1.4
     duality, extended to custom state)."""
-    import shutil
-    import tempfile
-    import uuid
-
     from spark_flink_streaming_example_with_test_spark.streaming.ops import running_user_totals
 
     events = load_table(spark, sf_dir, "events").select("user_id", "value")
-    src = tempfile.mkdtemp(prefix="engine_stream_src_")
-    sink = f"rt_{uuid.uuid4().hex[:8]}"
-    try:
-        events.write.mode("overwrite").parquet(src)
-        stream = spark.readStream.schema("user_id long, value double").parquet(src)
-        with replay_partitions(spark, src):
-            query = (
-                running_user_totals(stream)
-                .writeStream.format("memory")
-                .queryName(sink)
-                .outputMode("update")
-                .start()
-            )
-            try:
-                query.processAllAvailable()
-            finally:
-                query.stop()
+    with bounded_replay(spark, events) as r:
+        out = r.memory(running_user_totals(r.stream()), "update")
         # Single micro-batch (no maxFilesPerTrigger) -> one final
         # state row per user; round the float sum for oracle parity.
-        return spark.table(sink).select(
+        return out.select(
             "user_id",
             "n_events",
             F.round("total_value", 4).alias("total_value"),
         )
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
 
 
 STREAMING_TOTALS_ORACLE = """
@@ -248,18 +227,11 @@ def streaming_session_windows_e2e(spark: SparkSession, sf_dir: str) -> DataFrame
     complete-mode memory sink. Shares the batch gaps-and-islands
     oracle with ``session_windows_per_user`` — streaming session
     merge semantics checked by value against plain SQL."""
-    import shutil
-    import tempfile
-    import uuid
-
     events = load_table(spark, sf_dir, "events").select("user_id", "ts")
-    src = tempfile.mkdtemp(prefix="engine_stream_sessions_")
-    sink = f"sw_{uuid.uuid4().hex[:8]}"
-    try:
-        events.write.mode("overwrite").parquet(src)
-        stream = spark.readStream.schema("user_id long, ts timestamp").parquet(src)
+    with bounded_replay(spark, events) as r:
         agg = (
-            stream.withWatermark("ts", "10 seconds")
+            r.stream()
+            .withWatermark("ts", "10 seconds")
             .groupBy("user_id", F.session_window("ts", "30 minutes"))
             .agg(F.count("*").alias("n_events"))
         )
@@ -269,20 +241,7 @@ def streaming_session_windows_e2e(spark: SparkSession, sf_dir: str) -> DataFrame
             F.col("session_window.end").alias("session_end"),
             "n_events",
         )
-        with replay_partitions(spark, src):
-            query = (
-                out.writeStream.format("memory")
-                .queryName(sink)
-                .outputMode("complete")
-                .start()
-            )
-            try:
-                query.processAllAvailable()
-            finally:
-                query.stop()
-        return spark.table(sink)
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
+        return r.memory(out, "complete")
 
 
 def streaming_dedup_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -291,39 +250,16 @@ def streaming_dedup_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     event_type). Output is restricted to the dedup keys themselves —
     which surviving row wins is engine-order-dependent, the key set
     is not — so the oracle is plain SELECT DISTINCT."""
-    import shutil
-    import tempfile
-    import uuid
-
     from spark_flink_streaming_example_with_test_spark.streaming.ops import dedup_within_watermark
 
     events = load_table(spark, sf_dir, "events").select(
         "user_id", "event_type", "ts"
     )
-    src = tempfile.mkdtemp(prefix="engine_stream_dedup_")
-    sink = f"dd_{uuid.uuid4().hex[:8]}"
-    try:
-        events.write.mode("overwrite").parquet(src)
-        stream = spark.readStream.schema(
-            "user_id long, event_type string, ts timestamp"
-        ).parquet(src)
+    with bounded_replay(spark, events) as r:
         deduped = dedup_within_watermark(
-            stream, keys=["user_id", "event_type"], ts_col="ts"
+            r.stream(), keys=["user_id", "event_type"], ts_col="ts"
         ).select("user_id", "event_type")
-        with replay_partitions(spark, src):
-            query = (
-                deduped.writeStream.format("memory")
-                .queryName(sink)
-                .outputMode("append")
-                .start()
-            )
-            try:
-                query.processAllAvailable()
-            finally:
-                query.stop()
-        return spark.table(sink)
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
+        return r.memory(deduped, "append")
 
 
 STREAMING_DEDUP_ORACLE = """
@@ -337,7 +273,6 @@ def _interval_join_replay(
     how: str,
     with_sentinels: bool,
     select_cols: tuple[str, ...],
-    prefix: str,
 ) -> DataFrame:
     """Shared bounded-replay scaffold for the stream-stream interval
     join family (inner / left_outer / left_semi / full_outer):
@@ -347,43 +282,30 @@ def _interval_join_replay(
     unmatched state flushes; sentinels are filtered back out.
 
     The sentinels are UNIONED into the events frame before the one
-    overwrite write: a separate single-file append to an
+    source write: a separate single-file append to an
     about-to-start file-stream source directory is racy in this
     sandbox (the file is sometimes never discovered), and a missed
     sentinel batch would silently drop every unmatched row from the
     outer variants — a row-count parity failure, not an error."""
-    import shutil
-    import tempfile
-    import uuid
-
     from spark_flink_streaming_example_with_test_spark.streaming.ops import interval_join_streams
 
     events = load_table(spark, sf_dir, "events").select(
         "user_id", "event_id", "event_type", "ts"
     )
-    src = tempfile.mkdtemp(prefix=f"engine_stream_{prefix}_")
-    sink = f"{prefix}_{uuid.uuid4().hex[:8]}"
-    try:
-        if with_sentinels:
-            sentinel_ts = events.agg(
-                (F.max("ts") + F.expr("INTERVAL 1 DAY")).alias("ts")
+    if with_sentinels:
+        sentinel_ts = events.agg(
+            (F.max("ts") + F.expr("INTERVAL 1 DAY")).alias("ts")
+        )
+        sentinels = sentinel_ts.crossJoin(
+            spark.createDataFrame(
+                [(-999, -1, "purchase"), (-999, -2, "click")],
+                "user_id long, event_id long, event_type string",
             )
-            sentinels = sentinel_ts.crossJoin(
-                spark.createDataFrame(
-                    [(-999, -1, "purchase"), (-999, -2, "click")],
-                    "user_id long, event_id long, event_type string",
-                )
-            ).select("user_id", "event_id", "event_type", "ts")
-            events = events.unionByName(sentinels)
-        events.write.mode("overwrite").parquet(src)
-
-        def read():
-            return spark.readStream.schema(
-                "user_id long, event_id long, event_type string, ts timestamp"
-            ).parquet(src)
-
+        ).select("user_id", "event_id", "event_type", "ts")
+        events = events.unionByName(sentinels)
+    with bounded_replay(spark, events) as r:
         purchases = (
-            read()
+            r.stream()
             .filter(F.col("event_type") == "purchase")
             .select(
                 "user_id",
@@ -392,7 +314,7 @@ def _interval_join_replay(
             )
         )
         clicks = (
-            read()
+            r.stream()
             .filter(F.col("event_type") == "click")
             .select(
                 "user_id",
@@ -405,23 +327,10 @@ def _interval_join_replay(
             left_ts="p_ts", right_ts="c_ts",
             within="1 hour", watermark="2 hours", how=how,
         ).select(*select_cols)
-        with replay_partitions(spark, src):
-            query = (
-                joined.writeStream.format("memory")
-                .queryName(sink)
-                .outputMode("append")
-                .start()
-            )
-            try:
-                query.processAllAvailable()
-            finally:
-                query.stop()
-        out = spark.table(sink)
+        out = r.memory(joined, "append")
         if with_sentinels:
             out = out.filter(F.col("user_id") != -999)
         return out
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
 
 
 def streaming_interval_join_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -432,7 +341,7 @@ def streaming_interval_join_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle is the equivalent batch theta join."""
     return _interval_join_replay(
         spark, sf_dir, how="inner", with_sentinels=False,
-        select_cols=("user_id", "purchase_id", "click_id"), prefix="ij",
+        select_cols=("user_id", "purchase_id", "click_id"),
     )
 
 
@@ -456,27 +365,11 @@ def streaming_windowed_count_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     replay ends before the watermark passes the last window; append
     semantics are covered by the late-drop micro-batch tests.
     """
-    import shutil
-    import tempfile
-    import uuid
-
-    from spark_flink_streaming_example_with_test_spark.operators.activity import (
-        filter_event_types,
-        flatten_window,
-        windowed_counts,
-    )
-
     events = load_table(spark, sf_dir, "events").select(
         "user_id", "event_type", "ts"
     )
-    src = tempfile.mkdtemp(prefix="engine_stream_flagship_")
-    sink = f"wc_{uuid.uuid4().hex[:8]}"
-    try:
-        events.write.mode("overwrite").parquet(src)
-        stream = spark.readStream.schema(
-            "user_id long, event_type string, ts timestamp"
-        ).parquet(src)
-        kept = filter_event_types(stream, FLAGSHIP_KEEP)
+    with bounded_replay(spark, events) as r:
+        kept = filter_event_types(r.stream(), FLAGSHIP_KEEP)
         counted = windowed_counts(
             kept, ts_col="ts", keys=("user_id", "event_type"),
             window="1 minute", watermark="10 seconds",
@@ -484,20 +377,7 @@ def streaming_windowed_count_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = flatten_window(
             counted, keys=("user_id", "event_type"), count_alias="cnt"
         )
-        with replay_partitions(spark, src):
-            query = (
-                out.writeStream.format("memory")
-                .queryName(sink)
-                .outputMode("complete")
-                .start()
-            )
-            try:
-                query.processAllAvailable()
-            finally:
-                query.stop()
-        return spark.table(sink)
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
+        return r.memory(out, "complete")
 
 
 def streaming_split_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -507,22 +387,14 @@ def streaming_split_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream, each with its own checkpoint (streaming/job.py
     start_split_pipelines). Returns per-branch row counts; the
     oracle is the two complementary batch filters."""
-    import shutil
-    import tempfile
-
     from spark_flink_streaming_example_with_test_spark.streaming.job import start_split_pipelines
     from spark_flink_streaming_example_with_test_spark.streaming.sinks import parquet_batch_writer
 
     events = load_table(spark, sf_dir, "events").select(
         "user_id", "event_type", "ts"
     )
-    root = tempfile.mkdtemp(prefix="engine_stream_split_")
-    src, out_a, out_b = f"{root}/src", f"{root}/kept", f"{root}/rest"
-    try:
-        events.write.mode("overwrite").parquet(src)
-        stream = spark.readStream.schema(
-            "user_id long, event_type string, ts timestamp"
-        ).parquet(src)
+    with bounded_replay(spark, events) as r:
+        out_a, out_b = r.dir("kept"), r.dir("rest")
         keep = list(FLAGSHIP_KEEP)
 
         def t_kept(df: DataFrame) -> DataFrame:
@@ -537,27 +409,21 @@ def streaming_split_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
                 & ~F.lower("event_type").isin(keep)
             )
 
-        queries = start_split_pipelines(
-            stream,
-            [
-                ("kept", t_kept, parquet_batch_writer(out_a)),
-                ("rest", t_rest, parquet_batch_writer(out_b)),
-            ],
-            checkpoint_root=f"{root}/ckpt",
+        r.drain(
+            lambda: start_split_pipelines(
+                r.stream(),
+                [
+                    ("kept", t_kept, parquet_batch_writer(out_a)),
+                    ("rest", t_rest, parquet_batch_writer(out_b)),
+                ],
+                checkpoint_root=r.dir("ckpt"),
+            )
         )
-        try:
-            for q in queries:
-                q.processAllAvailable()
-        finally:
-            for q in queries:
-                q.stop()
         kept_n = spark.read.schema("user_id long").parquet(out_a).count()
         rest_n = spark.read.schema("user_id long").parquet(out_b).count()
-        return spark.createDataFrame(
-            [("kept", kept_n), ("rest", rest_n)], "branch string, n long"
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    return spark.createDataFrame(
+        [("kept", kept_n), ("rest", rest_n)], "branch string, n long"
+    )
 
 
 STREAMING_SPLIT_ORACLE = """
@@ -575,37 +441,17 @@ def streaming_static_enrich_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     (broadcast — re-resolved each trigger, the standard slowly-
     changing-dimension pattern), then aggregated per segment in
     complete mode. Oracle: the equivalent batch join + aggregate."""
-    import shutil
-    import tempfile
-    import uuid
-
     events = load_table(spark, sf_dir, "events").select("user_id", "ts")
     dim = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment"
     )
-    src = tempfile.mkdtemp(prefix="engine_stream_enrich_")
-    sink = f"se_{uuid.uuid4().hex[:8]}"
-    try:
-        events.write.mode("overwrite").parquet(src)
-        stream = spark.readStream.schema("user_id long, ts timestamp").parquet(src)
+    with bounded_replay(spark, events) as r:
+        stream = r.stream()
         joined = stream.join(
             F.broadcast(dim), stream.user_id == dim.c_custkey
         )
         agg = joined.groupBy("c_mktsegment").agg(F.count("*").alias("n"))
-        with replay_partitions(spark, src):
-            query = (
-                agg.writeStream.format("memory")
-                .queryName(sink)
-                .outputMode("complete")
-                .start()
-            )
-            try:
-                query.processAllAvailable()
-            finally:
-                query.stop()
-        return spark.table(sink)
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
+        return r.memory(agg, "complete")
 
 
 STREAMING_ENRICH_ORACLE = """
@@ -663,42 +509,14 @@ def streaming_sliding_window_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded stream ends before the watermark passes the final
     windows; append-mode eviction is covered by the late-drop tests.
     """
-    import shutil
-    import tempfile
-    import uuid
-
-    from spark_flink_streaming_example_with_test_spark.operators.activity import (
-        flatten_window,
-        windowed_counts,
-    )
-
     events = load_table(spark, sf_dir, "events").select("event_type", "ts")
-    src = tempfile.mkdtemp(prefix="engine_stream_sliding_")
-    sink = f"slw_{uuid.uuid4().hex[:8]}"
-    try:
-        events.write.mode("overwrite").parquet(src)
-        stream = spark.readStream.schema(
-            "event_type string, ts timestamp"
-        ).parquet(src)
+    with bounded_replay(spark, events) as r:
         counted = windowed_counts(
-            stream, ts_col="ts", keys=("event_type",),
+            r.stream(), ts_col="ts", keys=("event_type",),
             window="10 minutes", slide="5 minutes", watermark="10 seconds",
         )
         out = flatten_window(counted, keys=("event_type",), count_alias="cnt")
-        with replay_partitions(spark, src):
-            query = (
-                out.writeStream.format("memory")
-                .queryName(sink)
-                .outputMode("complete")
-                .start()
-            )
-            try:
-                query.processAllAvailable()
-            finally:
-                query.stop()
-        return spark.table(sink)
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
+        return r.memory(out, "complete")
 
 
 def streaming_tws_user_stats_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -709,38 +527,16 @@ def streaming_tws_user_stats_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     plain batch SQL — the modern arbitrary-stateful API proven by
     value, alongside the applyInPandasWithState twin
     (``streaming_running_user_totals``)."""
-    import shutil
-    import tempfile
-    import uuid
-
     from spark_flink_streaming_example_with_test_spark.streaming.ops import running_user_stats_tws
 
     events = load_table(spark, sf_dir, "events").select("user_id", "value")
-    src = tempfile.mkdtemp(prefix="engine_stream_tws_")
-    sink = f"tws_{uuid.uuid4().hex[:8]}"
-    try:
-        events.write.mode("overwrite").parquet(src)
-        stream = spark.readStream.schema("user_id long, value double").parquet(src)
-        with replay_partitions(spark, src):
-            query = (
-                running_user_stats_tws(stream)
-                .writeStream.format("memory")
-                .queryName(sink)
-                .outputMode("update")
-                .start()
-            )
-            try:
-                query.processAllAvailable()
-            finally:
-                query.stop()
-        return spark.table(sink).select(
+    with bounded_replay(spark, events) as r:
+        return r.memory(running_user_stats_tws(r.stream()), "update").select(
             "user_id",
             "n_events",
             F.round("total_value", 4).alias("total_value"),
             F.round("max_value", 4).alias("max_value"),
         )
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
 
 
 STREAMING_TWS_ORACLE = """
@@ -764,7 +560,7 @@ def streaming_outer_interval_join_e2e(spark: SparkSession, sf_dir: str) -> DataF
     """
     return _interval_join_replay(
         spark, sf_dir, how="left_outer", with_sentinels=True,
-        select_cols=("user_id", "purchase_id", "click_id"), prefix="oij",
+        select_cols=("user_id", "purchase_id", "click_id"),
     )
 
 
@@ -810,38 +606,21 @@ def streaming_upsert_sink_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     against batch SQL. Proves the end-to-end exactly-once landing
     path (stateful op -> update stream -> idempotent keyed sink),
     not just the in-memory aggregate."""
-    import shutil
-    import tempfile
-
     from spark_flink_streaming_example_with_test_spark.streaming.ops import running_user_totals
     from spark_flink_streaming_example_with_test_spark.streaming.sinks import upsert_parquet_writer
 
     events = load_table(spark, sf_dir, "events").select("user_id", "value")
-    src = tempfile.mkdtemp(prefix="engine_stream_upsrc_")
-    table_dir = tempfile.mkdtemp(prefix="engine_stream_uptbl_")
-    ckpt = tempfile.mkdtemp(prefix="engine_stream_upckpt_")
-    try:
-        events.write.mode("overwrite").parquet(src)
-        stream = (
-            spark.readStream.schema("user_id long, value double")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        with replay_partitions(spark, src):
-            query = (
-                running_user_totals(stream)
-                .writeStream.foreachBatch(
-                    upsert_parquet_writer(table_dir, keys=["user_id"])
-                )
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .start()
+    with bounded_replay(spark, events) as r:
+        table_dir = r.dir("table")
+        r.drain(
+            running_user_totals(r.stream(maxFilesPerTrigger=1))
+            .writeStream.foreachBatch(
+                upsert_parquet_writer(table_dir, keys=["user_id"])
             )
-            try:
-                query.processAllAvailable()
-            finally:
-                query.stop()
-        schema = "user_id long, n_events long, total_value double"
+            .outputMode("update")
+            .option("checkpointLocation", r.dir("ckpt"))
+            .start
+        )
         try:
             final = spark.read.parquet(table_dir).select(
                 "user_id",
@@ -853,11 +632,9 @@ def streaming_upsert_sink_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         except Exception:
             # Zero input rows -> no micro-batch ever wrote the table.
             rows = []
-        return spark.createDataFrame(rows, schema)
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(table_dir, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
+    return spark.createDataFrame(
+        rows, "user_id long, n_events long, total_value double"
+    )
 
 
 def events_variant_kpi(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -896,9 +673,6 @@ def streaming_manifest_sink_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregated and checked against batch SQL over the original
     table. Proves the sink's commit protocol end to end: every input
     row visible exactly once, no uncommitted partials."""
-    import shutil
-    import tempfile
-
     from spark_flink_streaming_example_with_test_spark.sources.pydatasink import (
         read_committed,
         register,
@@ -908,29 +682,15 @@ def streaming_manifest_sink_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value"
     )
-    src = tempfile.mkdtemp(prefix="engine_stream_mansrc_")
-    sink_dir = tempfile.mkdtemp(prefix="engine_stream_mansink_")
-    ckpt = tempfile.mkdtemp(prefix="engine_stream_manckpt_")
-    try:
-        events.write.mode("overwrite").parquet(src)
-        stream = (
-            spark.readStream.schema(
-                "event_id long, user_id long, event_type string, value double"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        query = (
-            stream.writeStream.format("manifest_jsonl")
+    with bounded_replay(spark, events) as r:
+        sink_dir = r.dir("sink")
+        r.drain(
+            r.stream(maxFilesPerTrigger=1)
+            .writeStream.format("manifest_jsonl")
             .option("path", sink_dir)
-            .option("checkpointLocation", ckpt)
-            .start()
+            .option("checkpointLocation", r.dir("ckpt"))
+            .start
         )
-        try:
-            query.processAllAvailable()
-        finally:
-            query.stop()
-        schema = "event_type string, n long, sum_value double, n_users long"
         try:
             landed = read_committed(
                 spark,
@@ -948,11 +708,9 @@ def streaming_manifest_sink_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         except Exception:
             rows = []  # zero input rows -> no manifest ever committed
-        return spark.createDataFrame(rows, schema)
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(sink_dir, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
+    return spark.createDataFrame(
+        rows, "event_type string, n long, sum_value double, n_users long"
+    )
 
 
 STREAMING_MANIFEST_ORACLE = """
@@ -972,36 +730,18 @@ def streaming_state_reader_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB deployment debugs state-size incidents with: state is
     inspectable as a DataFrame, and its content is precisely the
     watermark-eviction semantics, not an opaque blob."""
-    import shutil
-    import tempfile
-
     events = load_table(spark, sf_dir, "events").select("user_id", "ts")
-    src = tempfile.mkdtemp(prefix="engine_stream_statesrc_")
-    ckpt = tempfile.mkdtemp(prefix="engine_stream_stateckpt_")
-    try:
-        events.write.mode("overwrite").parquet(src)
-        stream = (
-            spark.readStream.schema("user_id long, ts timestamp")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        with replay_partitions(spark, src):
-            query = (
-                stream.withWatermark("ts", "10 seconds")
-                .groupBy("user_id", F.window("ts", "1 minute"))
-                .agg(F.count("*").alias("cnt"))
-                .writeStream.format("noop")
-                .outputMode("append")
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-            try:
-                query.processAllAvailable()
-            finally:
-                query.stop()
-        schema = (
-            "user_id long, window_start timestamp, window_end timestamp, "
-            "cnt long"
+    with bounded_replay(spark, events) as r:
+        ckpt = r.dir("ckpt")
+        r.drain(
+            r.stream(maxFilesPerTrigger=1)
+            .withWatermark("ts", "10 seconds")
+            .groupBy("user_id", F.window("ts", "1 minute"))
+            .agg(F.count("*").alias("cnt"))
+            .writeStream.format("noop")
+            .outputMode("append")
+            .option("checkpointLocation", ckpt)
+            .start
         )
         try:
             state = spark.read.format("statestore").load(ckpt)
@@ -1013,10 +753,10 @@ def streaming_state_reader_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).collect()
         except Exception:
             rows = []  # zero input rows -> no state was ever committed
-        return spark.createDataFrame(rows, schema)
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
+    return spark.createDataFrame(
+        rows,
+        "user_id long, window_start timestamp, window_end timestamp, cnt long",
+    )
 
 
 STREAMING_STATE_READER_ORACLE = """
@@ -1054,20 +794,11 @@ def streaming_chained_windows_e2e(spark: SparkSession, sf_dir: str) -> DataFrame
     proved racy in this environment; the cutoff needs no extra
     batches beyond the trailing one the engine guarantees.)
     """
-    import shutil
-    import tempfile
-    import uuid
-
     events = load_table(spark, sf_dir, "events").select("user_id", "ts")
-    src = tempfile.mkdtemp(prefix="engine_stream_chain_")
-    sink = f"chain_{uuid.uuid4().hex[:8]}"
-    try:
-        events.write.mode("overwrite").parquet(src)
-        stream = spark.readStream.schema(
-            "user_id long, ts timestamp"
-        ).parquet(src)
+    with bounded_replay(spark, events) as r:
         lvl1 = (
-            stream.withWatermark("ts", "10 seconds")
+            r.stream()
+            .withWatermark("ts", "10 seconds")
             .groupBy(F.window("ts", "5 minutes"), "user_id")
             .agg(F.count("*").alias("cnt"))
         )
@@ -1085,20 +816,7 @@ def streaming_chained_windows_e2e(spark: SparkSession, sf_dir: str) -> DataFrame
                 "n_events",
             )
         )
-        with replay_partitions(spark, src):
-            query = (
-                lvl2.writeStream.format("memory")
-                .queryName(sink)
-                .outputMode("append")
-                .start()
-            )
-            try:
-                query.processAllAvailable()
-            finally:
-                query.stop()
-        return spark.table(sink)
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
+        return r.memory(lvl2, "append")
 
 
 STREAMING_CHAINED_WINDOWS_ORACLE = """
@@ -1127,7 +845,7 @@ def streaming_semi_join_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     unmatched purchases never emit). Oracle: batch EXISTS."""
     return _interval_join_replay(
         spark, sf_dir, how="left_semi", with_sentinels=False,
-        select_cols=("user_id", "purchase_id"), prefix="sj",
+        select_cols=("user_id", "purchase_id"),
     )
 
 
@@ -1150,36 +868,16 @@ def streaming_complete_topk_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     holds the final complete emission after the bounded replay, which
     must equal the batch top-5 with the same deterministic
     tiebreak."""
-    import shutil
-    import tempfile
-    import uuid
-
     events = load_table(spark, sf_dir, "events").select("user_id", "event_id")
-    src = tempfile.mkdtemp(prefix="engine_stream_topk_")
-    sink = f"topk_{uuid.uuid4().hex[:8]}"
-    try:
-        events.write.mode("overwrite").parquet(src)
-        stream = spark.readStream.schema("user_id long, event_id long").parquet(src)
+    with bounded_replay(spark, events) as r:
         top = (
-            stream.groupBy("user_id")
+            r.stream()
+            .groupBy("user_id")
             .agg(F.count("*").alias("n_events"))
             .orderBy(F.desc("n_events"), "user_id")
             .limit(5)
         )
-        with replay_partitions(spark, src):
-            query = (
-                top.writeStream.format("memory")
-                .queryName(sink)
-                .outputMode("complete")
-                .start()
-            )
-            try:
-                query.processAllAvailable()
-            finally:
-                query.stop()
-        return spark.table(sink)
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
+        return r.memory(top, "complete")
 
 
 STREAMING_COMPLETE_TOPK_ORACLE = """
@@ -1254,7 +952,7 @@ def streaming_full_outer_interval_join_e2e(
     back out."""
     return _interval_join_replay(
         spark, sf_dir, how="full_outer", with_sentinels=True,
-        select_cols=("user_id", "purchase_id", "click_id"), prefix="foij",
+        select_cols=("user_id", "purchase_id", "click_id"),
     )
 
 
@@ -1289,30 +987,15 @@ def streaming_union_two_sources_e2e(
     oracle is the batch windowed count over ALL events — union must
     lose or duplicate nothing.
     """
-    import shutil
-    import tempfile
-    import uuid
-
     events = load_table(spark, sf_dir, "events").select(
         "user_id", "event_type", "ts"
     )
-    src_a = tempfile.mkdtemp(prefix="engine_stream_union_a_")
-    src_b = tempfile.mkdtemp(prefix="engine_stream_union_b_")
-    sink = f"union2_{uuid.uuid4().hex[:8]}"
-    try:
-        events.filter(F.col("user_id") % 2 == 0).write.mode(
-            "overwrite"
-        ).parquet(src_a)
-        events.filter(F.col("user_id") % 2 != 0).write.mode(
-            "overwrite"
-        ).parquet(src_b)
-
-        def read(path: str):
-            return spark.readStream.schema(
-                "user_id long, event_type string, ts timestamp"
-            ).parquet(path)
-
-        unioned = read(src_a).unionByName(read(src_b))
+    with bounded_replay(
+        spark,
+        events.filter(F.col("user_id") % 2 == 0),
+        events.filter(F.col("user_id") % 2 != 0),
+    ) as r:
+        unioned = r.stream(0).unionByName(r.stream(1))
         counted = (
             unioned.withWatermark("ts", "10 seconds")
             .groupBy(F.window("ts", "1 minute"), "event_type")
@@ -1323,21 +1006,7 @@ def streaming_union_two_sources_e2e(
                 "cnt",
             )
         )
-        with replay_partitions(spark, src_a, src_b):
-            query = (
-                counted.writeStream.format("memory")
-                .queryName(sink)
-                .outputMode("complete")
-                .start()
-            )
-            try:
-                query.processAllAvailable()
-            finally:
-                query.stop()
-        return spark.table(sink)
-    finally:
-        shutil.rmtree(src_a, ignore_errors=True)
-        shutil.rmtree(src_b, ignore_errors=True)
+        return r.memory(counted, "complete")
 
 
 STREAMING_UNION_TWO_SOURCES_ORACLE = """
@@ -1365,49 +1034,33 @@ def streaming_available_now_incremental_e2e(
     the batch rollup of ALL events — double-processing half A or
     missing half B both fail the hash.
     """
-    import shutil
-    import tempfile
-    import uuid
-
     events = load_table(spark, sf_dir, "events").select(
         "user_id", "event_type", "ts"
     )
-    src = tempfile.mkdtemp(prefix="engine_stream_avnow_")
-    ckpt = tempfile.mkdtemp(prefix="engine_stream_avnow_ckpt_")
-    sink = f"avnow_{uuid.uuid4().hex[:8]}"
-    try:
-        half_a = events.filter(F.col("user_id") % 2 == 0)
-        half_b = events.filter(F.col("user_id") % 2 != 0)
-        half_a.write.mode("overwrite").parquet(src)
+    with bounded_replay(spark, events.filter(F.col("user_id") % 2 == 0)) as r:
 
         def run_once():
-            stream = spark.readStream.schema(
-                "user_id long, event_type string, ts timestamp"
-            ).parquet(src)
-            counts = stream.groupBy("event_type").agg(
+            counts = r.stream().groupBy("event_type").agg(
                 F.count("*").alias("cnt")
             )
-            with replay_partitions(spark, src):
-                q = (
-                    counts.writeStream.format("memory")
-                    .queryName(sink)
-                    .outputMode("complete")
-                    .option("checkpointLocation", ckpt)
-                    .trigger(availableNow=True)
-                    .start()
-                )
-                q.awaitTermination()
+            r.drain(
+                counts.writeStream.format("memory")
+                .queryName(r.sink)
+                .outputMode("complete")
+                .option("checkpointLocation", r.dir("ckpt"))
+                .trigger(availableNow=True)
+                .start
+            )
 
         run_once()
         # Multi-file append (one parquet dir write) between runs —
         # safe here because run 2 starts AFTER the files land and
         # does a fresh listing against the checkpointed offsets.
-        half_b.write.mode("append").parquet(src)
+        events.filter(F.col("user_id") % 2 != 0).write.mode("append").parquet(
+            r.dir("src/0")
+        )
         run_once()
-        return spark.table(sink)
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
+        return spark.table(r.sink)
 
 
 STREAMING_AVAILABLE_NOW_ORACLE = """
@@ -1428,8 +1081,6 @@ def streaming_jdbc_sink_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     and aggregated. Only the driver class and URL differ from the
     Postgres deployment — the sink code path is the production one.
     """
-    import shutil
-    import tempfile
     import uuid
 
     from spark_flink_streaming_example_with_test_spark.streaming.sinks import jdbc_batch_writer
@@ -1437,34 +1088,26 @@ def streaming_jdbc_sink_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events").select(
         "user_id", "event_type", "value"
     )
-    src = tempfile.mkdtemp(prefix="engine_stream_jdbc_")
     db = f"engine_jdbc_{uuid.uuid4().hex[:8]}"
     url = f"jdbc:derby:memory:{db};create=true"
     driver = "org.apache.derby.jdbc.EmbeddedDriver"
     table = "user_activity_sink"
     try:
-        events.write.mode("overwrite").parquet(src)
         # Pre-create the table via an empty overwrite so the
         # streaming appends land in a stable schema.
         events.limit(0).write.format("jdbc").option("url", url).option(
             "dbtable", table
         ).option("driver", driver).mode("overwrite").save()
-        stream = spark.readStream.schema(
-            "user_id long, event_type string, value double"
-        ).parquet(src)
         writer = jdbc_batch_writer(
             url=url, table=table, user="", password="",
             driver=driver, batchsize=1000,
         )
-        query = (
-            stream.writeStream.foreachBatch(writer)
-            .outputMode("append")
-            .start()
-        )
-        try:
-            query.processAllAvailable()
-        finally:
-            query.stop()
+        with bounded_replay(spark, events) as r:
+            r.drain(
+                r.stream().writeStream.foreachBatch(writer)
+                .outputMode("append")
+                .start
+            )
         back = (
             spark.read.format("jdbc")
             .option("url", url)
@@ -1481,7 +1124,6 @@ def streaming_jdbc_sink_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             rows, "event_type string, n long, total_value double"
         )
     finally:
-        shutil.rmtree(src, ignore_errors=True)
         try:
             # In-memory Derby DBs live until dropped; Derby signals a
             # successful drop with SQLException 08006.
@@ -1514,23 +1156,17 @@ def streaming_jdbc_merge_upsert_e2e(
     append-only sink can't express (append of an update-mode
     aggregate duplicates keys).
     """
-    import shutil
-    import tempfile
     import uuid
 
     from spark_flink_streaming_example_with_test_spark.streaming.ops import running_user_totals
     from spark_flink_streaming_example_with_test_spark.streaming.sinks import jdbc_merge_writer
 
     events = load_table(spark, sf_dir, "events").select("user_id", "value")
-    src = tempfile.mkdtemp(prefix="engine_stream_merge_")
     db = f"engine_merge_{uuid.uuid4().hex[:8]}"
     url = f"jdbc:derby:memory:{db};create=true"
     driver = "org.apache.derby.jdbc.EmbeddedDriver"
     target, staging = "user_totals", "user_totals_stage"
     try:
-        # Several part files -> several micro-batches (repartition
-        # guarantees >1 even at tiny scale).
-        events.repartition(4).write.mode("overwrite").parquet(src)
         empty = spark.createDataFrame(
             [], "user_id long, n_events long, total_value double"
         )
@@ -1538,24 +1174,19 @@ def streaming_jdbc_merge_upsert_e2e(
             empty.write.format("jdbc").option("url", url).option(
                 "dbtable", t
             ).option("driver", driver).mode("overwrite").save()
-        stream = spark.readStream.schema(
-            "user_id long, value double"
-        ).option("maxFilesPerTrigger", "1").parquet(src)
         writer = jdbc_merge_writer(
             url=url, target=target, staging=staging, key="user_id",
             set_cols=["n_events", "total_value"], driver=driver,
         )
-        with replay_partitions(spark, src):
-            query = (
-                running_user_totals(stream)
+        # Several part files -> several micro-batches (repartition
+        # guarantees >1 even at tiny scale).
+        with bounded_replay(spark, events.repartition(4)) as r:
+            r.drain(
+                running_user_totals(r.stream(maxFilesPerTrigger=1))
                 .writeStream.foreachBatch(writer)
                 .outputMode("update")
-                .start()
+                .start
             )
-            try:
-                query.processAllAvailable()
-            finally:
-                query.stop()
         back = (
             spark.read.format("jdbc")
             .option("url", url)
@@ -1572,7 +1203,6 @@ def streaming_jdbc_merge_upsert_e2e(
             rows, "user_id long, n_events long, total_value double"
         )
     finally:
-        shutil.rmtree(src, ignore_errors=True)
         try:
             spark._jvm.java.sql.DriverManager.getConnection(
                 f"jdbc:derby:memory:{db};drop=true"
@@ -1600,8 +1230,6 @@ def jdbc_parallel_read_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     the ingest RDD's partition count; range splitting must neither
     drop nor duplicate boundary rows — the rollup hash proves it.
     """
-    import shutil
-    import tempfile
     import uuid
 
     events = load_table(spark, sf_dir, "events").select(
@@ -1681,10 +1309,6 @@ def streaming_dedup_then_window_e2e(
     Complete-mode memory sink for the bounded replay, like
     streaming_windowed_count_e2e.
     """
-    import shutil
-    import tempfile
-    import uuid
-
     from spark_flink_streaming_example_with_test_spark.streaming.ops import dedup_within_watermark
 
     events = load_table(spark, sf_dir, "events").select(
@@ -1692,15 +1316,9 @@ def streaming_dedup_then_window_e2e(
     )
     dupes = events.filter(F.col("event_type") == "purchase")
     replay = events.unionByName(dupes)  # simulated redelivery
-    src = tempfile.mkdtemp(prefix="engine_stream_dedupwin_")
-    sink = f"ddw_{uuid.uuid4().hex[:8]}"
-    try:
-        replay.write.mode("overwrite").parquet(src)
-        stream = spark.readStream.schema(
-            "event_id long, event_type string, ts timestamp"
-        ).parquet(src)
+    with bounded_replay(spark, replay) as r:
         deduped = dedup_within_watermark(
-            stream, keys=["event_id"], ts_col="ts", delay="10 seconds"
+            r.stream(), keys=["event_id"], ts_col="ts", delay="10 seconds"
         )
         counted = (
             deduped.groupBy(
@@ -1713,20 +1331,7 @@ def streaming_dedup_then_window_e2e(
                 "cnt",
             )
         )
-        with replay_partitions(spark, src):
-            query = (
-                counted.writeStream.format("memory")
-                .queryName(sink)
-                .outputMode("complete")
-                .start()
-            )
-            try:
-                query.processAllAvailable()
-            finally:
-                query.stop()
-        return spark.table(sink)
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
+        return r.memory(counted, "complete")
 
 
 STREAMING_DEDUP_WINDOW_ORACLE = """
@@ -1746,65 +1351,45 @@ def streaming_progress_metrics_e2e(
     state rows tracked == distinct dedup keys, input rows == table
     rows. This is what an on-call engineer alerts on (state-store
     growth, input throughput); here those numbers are hash-checked
-    against SQL instead of eyeballed. Progress is read after
-    processAllAvailable from recentProgress (inputs summed across
+    against SQL instead of eyeballed. Progress is read after the
+    drain from recentProgress (inputs summed across
     micro-batches; state taken at its PEAK — the trailing no-data
     batch evicts behind the watermark and would under-report).
     """
-    import shutil
-    import tempfile
-    import uuid
-
     from spark_flink_streaming_example_with_test_spark.streaming.ops import dedup_within_watermark
 
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "ts"
     )
-    src = tempfile.mkdtemp(prefix="engine_stream_progress_")
-    sink = f"prog_{uuid.uuid4().hex[:8]}"
-    try:
-        events.write.mode("overwrite").parquet(src)
-        stream = spark.readStream.schema(
-            "event_id long, event_type string, ts timestamp"
-        ).parquet(src)
+    with bounded_replay(spark, events) as r:
         deduped = dedup_within_watermark(
-            stream, keys=["event_id"], ts_col="ts", delay="10 seconds"
+            r.stream(), keys=["event_id"], ts_col="ts", delay="10 seconds"
         ).select("event_id")
-        with replay_partitions(spark, src):
-            query = (
-                deduped.writeStream.format("memory")
-                .queryName(sink)
-                .outputMode("append")
-                .start()
-            )
-        try:
-            query.processAllAvailable()
-            progresses = [p for p in query.recentProgress if p is not None]
-            input_rows = sum(
-                int(p["numInputRows"]) for p in progresses
-            )
-            # PEAK state size: the trailing no-data batch evicts
-            # entries behind the watermark, so the final snapshot
-            # under-reports; the peak is what equals the distinct
-            # key count for a bounded replay.
-            state_rows = max(
-                (
-                    int(ops[0]["numRowsTotal"])
-                    for p in progresses
-                    for ops in [p.get("stateOperators") or []]
-                    if ops
-                ),
-                default=0,
-            )
-        finally:
-            query.stop()
-        emitted = spark.table(sink).count()
-        return spark.createDataFrame(
-            [(input_rows, state_rows, emitted)],
-            "input_rows long, state_rows long, emitted_rows long",
+        query = r.drain(
+            deduped.writeStream.format("memory")
+            .queryName(r.sink)
+            .outputMode("append")
+            .start
         )
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
+        emitted = spark.table(r.sink).count()
+    progresses = [p for p in query.recentProgress if p is not None]
+    input_rows = sum(int(p["numInputRows"]) for p in progresses)
+    # PEAK state size: the trailing no-data batch evicts entries
+    # behind the watermark, so the final snapshot under-reports; the
+    # peak is what equals the distinct key count for a bounded replay.
+    state_rows = max(
+        (
+            int(ops[0]["numRowsTotal"])
+            for p in progresses
+            for ops in [p.get("stateOperators") or []]
+            if ops
+        ),
+        default=0,
+    )
+    return spark.createDataFrame(
+        [(input_rows, state_rows, emitted)],
+        "input_rows long, state_rows long, emitted_rows long",
+    )
 
 
 STREAMING_PROGRESS_ORACLE = """
@@ -1827,10 +1412,6 @@ def streaming_funnel_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     to converge to the batch answer across arbitrary batch splits
     (min-timestamps commute). Oracle: the batch first-touch funnel
     in plain SQL."""
-    import shutil
-    import tempfile
-    import uuid
-
     from spark_flink_streaming_example_with_test_spark.streaming.ops import streaming_funnel_state
 
     ev = (
@@ -1842,31 +1423,13 @@ def streaming_funnel_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.unix_micros("ts").alias("us"),
         )
     )
-    src = tempfile.mkdtemp(prefix="engine_stream_src_")
-    sink = f"funnel_{uuid.uuid4().hex[:8]}"
-    try:
-        ev.repartition(4).write.mode("overwrite").parquet(src)
-        stream = (
-            spark.readStream.schema("user_id long, event_type string, us long")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
+    with bounded_replay(spark, ev.repartition(4)) as r:
+        updates = r.memory(
+            streaming_funnel_state(r.stream(maxFilesPerTrigger=1)), "update"
         )
-        with replay_partitions(spark, src):
-            query = (
-                streaming_funnel_state(stream)
-                .writeStream.format("memory")
-                .queryName(sink)
-                .outputMode("update")
-                .start()
-            )
-            try:
-                query.processAllAvailable()
-            finally:
-                query.stop()
         # final state per user = its max-version update row
         final = (
-            spark.table(sink)
-            .groupBy("user_id")
+            updates.groupBy("user_id")
             .agg(F.max(F.struct("version", "t1", "t2", "t3")).alias("s"))
             .select("s.t1", "s.t2", "s.t3")
         )
@@ -1893,8 +1456,6 @@ def streaming_funnel_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             "stack(3, 1, 'view', n1, 2, 'click', n2, 3, 'purchase', n3)"
             " AS (step, step_name, n_users)"
         ).orderBy("step")
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
 
 
 STREAMING_FUNNEL_ORACLE = """
@@ -1943,10 +1504,6 @@ def streaming_session_timeout_e2e(spark: SparkSession, sf_dir: str) -> DataFrame
     Returns the per-user emitted-session aggregate (count + total
     events + max session length) so the result is a compact stable
     frame."""
-    import shutil
-    import tempfile
-    import uuid
-
     from spark_flink_streaming_example_with_test_spark.streaming.ops import (
         sessionize_with_event_time_timeout,
     )
@@ -1962,38 +1519,24 @@ def streaming_session_timeout_e2e(spark: SparkSession, sf_dir: str) -> DataFrame
             for i, q in enumerate((0.25, 0.5, 0.75), start=1)
         ]
     ).first()
-    src = tempfile.mkdtemp(prefix="engine_stream_src_")
-    sink = f"sess_to_{uuid.uuid4().hex[:8]}"
-    try:
-        bounds = [None, qs["q1"], qs["q2"], qs["q3"], None]
-        for i in range(4):
-            part = ev
-            if bounds[i] is not None:
-                part = part.filter(F.col("us") > bounds[i])
-            if bounds[i + 1] is not None:
-                part = part.filter(F.col("us") <= bounds[i + 1])
-            part.coalesce(1).write.parquet(f"{src}/f{i + 1}")
-        stream = (
-            spark.readStream.schema("user_id long, ts timestamp, us long")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{src}/f*")
-            .withWatermark("ts", "10 seconds")
+    bounds = [None, qs["q1"], qs["q2"], qs["q3"], None]
+    parts = []
+    for lo, hi in zip(bounds, bounds[1:]):
+        part = ev
+        if lo is not None:
+            part = part.filter(F.col("us") > lo)
+        if hi is not None:
+            part = part.filter(F.col("us") <= hi)
+        parts.append(part.coalesce(1))
+    # Frames are written in order, one file each: one source over all
+    # of them replays the files in event-time order.
+    with bounded_replay(spark, *parts) as r:
+        stream = r.stream(None, maxFilesPerTrigger=1).withWatermark(
+            "ts", "10 seconds"
         )
-        with replay_partitions(spark, src):
-            query = (
-                sessionize_with_event_time_timeout(stream)
-                .writeStream.format("memory")
-                .queryName(sink)
-                .outputMode("append")
-                .start()
-            )
-            try:
-                query.processAllAvailable()
-            finally:
-                query.stop()
+        sessions = r.memory(sessionize_with_event_time_timeout(stream), "append")
         return (
-            spark.table(sink)
-            .groupBy("user_id")
+            sessions.groupBy("user_id")
             .agg(
                 F.count("*").alias("n_sessions"),
                 F.sum("n_events").alias("n_events"),
@@ -2004,8 +1547,6 @@ def streaming_session_timeout_e2e(spark: SparkSession, sf_dir: str) -> DataFrame
             )
             .orderBy("user_id")
         )
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
 
 
 STREAMING_SESSION_TIMEOUT_ORACLE = """

@@ -8,6 +8,7 @@ must NOT cache or materialize (that would block pushdown).
 from __future__ import annotations
 
 import os
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -27,24 +28,27 @@ TABLES = (
 
 DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 
-#: Unexecuted-plan cache (r14 optimization): ``spark.read.parquet``
-#: costs ~85 ms of driver-side py4j/schema work per call, and a
-#: 6-table query (TPC-H q5) pays it six times PER PASS — ~0.5 s of
-#: the bench second for zero data work. The cache stores the lazy
-#: DataFrame handle (a logical plan over the parquet files), never
-#: rows: every action still scans the parquet input, so this is a
-#: plan-construction memo, not result caching. Keyed (ADVICE r14
-#: hardening) by SESSION identity (``id(spark)`` — newSession()
-#: shares an applicationId but carries its own runtime conf, so a
-#: handle bound to one session is never served to another),
-#: directory, table, and the file's (mtime, size) fingerprint — a
-#: rewritten fixture (the empty-input sweeps write derived tables)
-#: invalidates its entry even on filesystems with 1 s mtime
-#: granularity, where size breaks most same-second ties. Stale
-#: fingerprints for the same (session, dir, table) are EVICTED on
-#: insert, so sweeps that rewrite derived fixtures in a loop don't
-#: grow the dict unboundedly.
-_PLAN_CACHE: dict[tuple[int, str, str, str], tuple[tuple[float, int], DataFrame]] = {}
+
+class _Plan:
+    __slots__ = ("fingerprint", "df", "__weakref__")
+
+    def __init__(self, fingerprint: tuple[float, int], df: DataFrame):
+        self.fingerprint = fingerprint
+        self.df = df
+
+
+#: Unexecuted-plan cache: ``spark.read.parquet`` costs ~85 ms of
+#: driver-side py4j/schema work per call, paid per table per pass.
+#: Entries are lazy DataFrame handles (plans), never rows. Keyed by
+#: session identity (a handle is never served to another session, which
+#: has its own runtime conf), directory and table; an entry whose file
+#: (mtime, size) fingerprint changed is replaced, not appended. Handles
+#: reference their session, so this index holds them weakly and the
+#: session owns them (``_OWNER_ATTR``): entries die with their session.
+_PLAN_CACHE: weakref.WeakValueDictionary[tuple[int, str, str, str], _Plan] = (
+    weakref.WeakValueDictionary()
+)
+_OWNER_ATTR = "_spark_graft_plans"
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -69,11 +73,12 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         fingerprint = (-1.0, -1)  # missing path: reader raises loudly
     key = (id(spark), spark.sparkContext.applicationId, sf_dir, name)
     cached = _PLAN_CACHE.get(key)
-    if cached is not None and cached[0] == fingerprint:
-        return cached[1]
-    df = _read_table(spark, path, name)
-    _PLAN_CACHE[key] = (fingerprint, df)  # replaces any stale fingerprint
-    return df
+    if cached is not None and cached.fingerprint == fingerprint:
+        return cached.df
+    plan = _Plan(fingerprint, _read_table(spark, path, name))
+    _PLAN_CACHE[key] = plan
+    vars(spark).setdefault(_OWNER_ATTR, {})[key] = plan
+    return plan.df
 
 
 def _read_table(spark: SparkSession, path: str, name: str) -> DataFrame:

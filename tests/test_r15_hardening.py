@@ -105,3 +105,49 @@ def test_bucketed_pairs_decimal_threshold(spark):
         emb, threshold=decimal.Decimal("0.9"), n_bits=2, dim=4
     )
     assert out.count() > 0
+
+
+def test_sql_with_braces_in_column_names(spark):
+    """Braces in ``sql_ident``-quoted names are text, not placeholders —
+    even a name that spells a placeholder of the same query."""
+    id_col, text_col = "{sh} id", "te{x}t"
+    df = spark.createDataFrame(
+        [(1, "a b c d e f"), (2, "a b c d e f"), (3, "u v w x y z")],
+        [id_col, text_col],
+    )
+    exact = dd.exact_duplicates(df, id_col=id_col, text_col=text_col)
+    assert {(r.keep_id, r.n_copies) for r in exact.collect()} == {(1, 2), (3, 1)}
+    near = dd.minhash_near_duplicates(df, id_col=id_col, text_col=text_col)
+    assert {(r.id_a, r.id_b) for r in near.collect()} == {(1, 2)}
+
+
+def test_sql_with_falls_back_without_jvm_bridge(spark):
+    """Without ``_jsparkSession`` (e.g. Spark Connect) the temp views are
+    dropped through the public catalog."""
+    from spark_flink_streaming_example_with_test_spark.functions.sqltext import sql_with
+
+    class NoBridge:
+        sql = spark.sql
+        catalog = spark.catalog
+
+    out = sql_with(NoBridge(), "SELECT count(*) AS n FROM {t}", t=spark.range(3))
+    assert out.first().n == 3
+    assert not [
+        t for t in spark.catalog.listTables() if t.name.startswith("__sql_with_")
+    ]
+
+
+def test_plan_cache_releases_dead_sessions(spark, sf_dir):
+    import gc
+    import weakref
+
+    s2 = spark.newSession()
+    first = tables.load_table(s2, sf_dir, "nation")
+    assert tables.load_table(s2, sf_dir, "nation") is first
+    dead = weakref.ref(s2)
+    del s2, first
+    # pyspark's RDD.toDF patch holds the most recently constructed
+    # session; constructing another releases that hold.
+    spark.newSession()
+    gc.collect()
+    assert dead() is None

@@ -1,63 +1,100 @@
-"""Round-15: bounded-replay state-partition sizing
-(streaming/replay.py). The derived count must scale with source
-bytes, never exceed the session's configured value, and the session
-conf must be restored on exit — including on error."""
+"""Bounded-replay helper (streaming/replay.py): the derived state
+partition count scales with source bytes and never exceeds the
+session's value; the helper holds it from start() to stop() and
+restores the session conf afterwards — including when the query
+raises."""
 
 from __future__ import annotations
 
-import os
-
 import pytest
 
+from pyspark.errors import StreamingQueryException
+
+from spark_flink_streaming_example_with_test_spark.streaming.ops import dedup_within_watermark
 from spark_flink_streaming_example_with_test_spark.streaming.replay import (
     DEFAULT_BYTES_PER_PARTITION,
+    bounded_replay,
     derive_partitions,
-    replay_partitions,
 )
 
 _CONF = "spark.sql.shuffle.partitions"
 
 
-def test_derive_scales_with_bytes_and_clamps(spark, tmp_path):
-    small = tmp_path / "small"
-    small.mkdir()
-    (small / "a.bin").write_bytes(b"x" * 1024)
-    assert derive_partitions(spark, str(small)) == 4  # floor
-
-    big = tmp_path / "big"
-    big.mkdir()
-    # 3 partitions' worth at a tiny target -> ceil, but never above
-    # the session value
-    (big / "a.bin").write_bytes(b"x" * 3000)
-    session_n = int(spark.conf.get(_CONF))
-    assert (
-        derive_partitions(spark, str(big), bytes_per_partition=1000)
-        == min(session_n, 4)
-    )
-    assert (
-        derive_partitions(spark, str(big), bytes_per_partition=1)
-        == session_n  # ceil saturates at the session value
-    )
-
-
-def test_context_sets_and_restores(spark, tmp_path):
-    d = tmp_path / "src"
-    d.mkdir()
-    (d / "a.bin").write_bytes(b"x" * 10)
+@pytest.fixture
+def session_partitions(spark):
+    """Raise the session value above the replay floor (4) so a held
+    derived count is distinguishable from the session's; restore it."""
     prev = spark.conf.get(_CONF)
-    with replay_partitions(spark, str(d)) as n:
-        assert spark.conf.get(_CONF) == str(n)
-    assert spark.conf.get(_CONF) == prev
-    with pytest.raises(RuntimeError):
-        with replay_partitions(spark, str(d)):
-            raise RuntimeError("boom")
-    assert spark.conf.get(_CONF) == prev
+    spark.conf.set(_CONF, "7")
+    yield 7
+    spark.conf.set(_CONF, prev)
 
 
-def test_multiple_paths_summed(spark, tmp_path):
-    a, b = tmp_path / "a", tmp_path / "b"
-    a.mkdir(), b.mkdir()
-    (a / "f").write_bytes(b"x" * DEFAULT_BYTES_PER_PARTITION)
-    (b / "f").write_bytes(b"x" * DEFAULT_BYTES_PER_PARTITION)
-    session_n = int(spark.conf.get(_CONF))
-    assert derive_partitions(spark, str(a), str(b)) == min(session_n, 4)
+def _sparse(path, n_bytes):
+    """A file of apparent size ``n_bytes`` that occupies no disk."""
+    path.parent.mkdir(exist_ok=True)
+    with open(path, "wb") as f:
+        f.truncate(n_bytes)
+
+
+def test_derive_scales_with_bytes_and_clamps(spark, tmp_path, session_partitions):
+    _sparse(tmp_path / "small" / "a.bin", 1024)
+    assert derive_partitions(spark, str(tmp_path / "small")) == 4  # floor
+    # ceil(5 partitions' worth + 1 byte) = 6, under the session's 7
+    _sparse(tmp_path / "mid" / "a.bin", 5 * DEFAULT_BYTES_PER_PARTITION + 1)
+    assert derive_partitions(spark, str(tmp_path / "mid")) == 6
+    # the ceil saturates at the session value
+    _sparse(tmp_path / "big" / "a.bin", 100 * DEFAULT_BYTES_PER_PARTITION)
+    assert derive_partitions(spark, str(tmp_path / "big")) == session_partitions
+
+
+def test_context_sets_and_restores(spark, session_partitions):
+    frame = spark.range(10).withColumnRenamed("id", "k")
+    seen = []
+
+    def fail(df, _epoch):
+        raise RuntimeError("boom")
+
+    with bounded_replay(spark, frame) as r:
+        derived = derive_partitions(spark, r.dir("src"))
+
+        def start():
+            seen.append(spark.conf.get(_CONF))
+            return r.stream().writeStream.format("noop").start()
+
+        r.drain(start)
+        assert seen == [str(derived)]
+        assert spark.conf.get(_CONF) == str(session_partitions)
+        with pytest.raises(StreamingQueryException):
+            r.drain(r.stream().writeStream.foreachBatch(fail).start)
+        assert spark.conf.get(_CONF) == str(session_partitions)
+
+
+def test_multiple_paths_summed(spark, tmp_path, session_partitions):
+    _sparse(tmp_path / "a" / "f", 3 * DEFAULT_BYTES_PER_PARTITION)
+    _sparse(tmp_path / "b" / "f", 2 * DEFAULT_BYTES_PER_PARTITION + 1)
+    assert derive_partitions(spark, str(tmp_path / "a"), str(tmp_path / "b")) == 6
+
+
+def test_stateful_replay_holds_derived_partitions(spark, sf_dir, session_partitions):
+    """The watermarked dedup replay: every micro-batch's state
+    operators run at the derived count, not the session's."""
+    from spark_flink_streaming_example_with_test_spark.sources.tables import load_table
+
+    events = load_table(spark, sf_dir, "events").select("event_id", "ts")
+    with bounded_replay(spark, events.repartition(3)) as r:
+        derived = derive_partitions(spark, r.dir("src"))
+        deduped = dedup_within_watermark(
+            r.stream(maxFilesPerTrigger=1), keys=["event_id"], ts_col="ts"
+        )
+        query = r.drain(deduped.writeStream.format("noop").start)
+    assert derived != session_partitions
+    ops = [
+        op
+        for p in query.recentProgress
+        for op in p.get("stateOperators") or []
+    ]
+    assert ops, "no stateful micro-batch ran"
+    assert {op["numShufflePartitions"] for op in ops} == {derived}
+    assert spark.conf.get(_CONF) == str(session_partitions)
+    assert sum(p["numInputRows"] for p in query.recentProgress) == events.count()

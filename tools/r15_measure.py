@@ -1,13 +1,11 @@
-"""Round-15 measurement harness.
+"""Measurement harness for driver-side build cost and query sweeps.
 
 Modes:
   construction  — time fn(spark, sf_dir) alone (driver-side build cost)
                   for the headline queries, 3 reps each.
   sweep         — time fn + noop drain for a named subset of catalog
-                  queries (default: streaming_* + graph-family), warm
-                  (one untimed pass then a timed pass), unpersist_after
-                  each.
-  phases        — phase breakdown of one streaming e2e replay.
+                  queries (default: streaming_*), warm (one untimed
+                  pass then a timed pass), unpersist_after each.
 
 Usage:
   python tools/r15_measure.py construction
