@@ -4,13 +4,15 @@ Jaccard — the training-data-pipeline dedup ladder.
 Scale design (100 TB posture):
 - Exact dedup groups by a 128-bit fingerprint, not the document
   body, so the shuffle carries 32 bytes per row instead of the text.
-- MinHash signatures are computed with k parallel min-aggregates
-  over exploded shingles — one shuffle keyed by doc_id, all JVM-side
-  hashing (xxhash64), no Python in the loop.
-- LSH banding turns the quadratic all-pairs comparison into an
-  equi-join on (band_index, band_hash): only documents agreeing on a
-  full band collide, so candidate volume scales with true-duplicate
-  density, not n². AQE skew-join handles hot buckets.
+- MinHash signatures are k min-aggregates over exploded shingles:
+  each shingle is xxhash64'd once, the partial aggregate runs below
+  the one shuffle keyed by doc_id, so the exchange carries one row per
+  document; all hashing is JVM-side codegen, no Python in the loop.
+- LSH banding turns the quadratic all-pairs comparison into one
+  aggregate on (band_index, band_hash): only documents agreeing on a
+  full band share a bucket, so candidate volume scales with
+  true-duplicate density, not n². A stop-bucket cap bounds hot
+  buckets.
 - Exact-Jaccard verification runs only on LSH candidates (or, in
   ``ngram_jaccard_pairs``, via an inverted-index join that shares a
   gram — never a blind cross join).
@@ -37,6 +39,10 @@ from spark_flink_streaming_example_with_test_spark.operators.text import fingerp
 
 DEFAULT_NUM_HASHES = 32
 DEFAULT_BANDS = 8
+
+# Stop-bucket cap for LSH banding: a bucket of k members emits k^2/2
+# candidate pairs, so buckets larger than this generate none.
+DEFAULT_MAX_BUCKET_SIZE = 10_000
 
 # Document-frequency cap for the exact inverted-index family — the
 # df twin of lsh_candidate_pairs' max_bucket_size. A gram shared by
@@ -189,35 +195,59 @@ def minhash_signatures(
     id_col: str = "doc_id",
     num_hashes: int = DEFAULT_NUM_HASHES,
 ) -> DataFrame:
-    """MinHash signature per document, computed entirely map-side:
-    each (variable-length) shingle string is xxhash64'd ONCE, then
-    the ``num_hashes`` per-seed values derive from that fixed-width
-    long via xxhash64(seed, h) — cheap, ANSI-safe, no overflow — and
-    sig[i] is an array_min over the per-row shingle set. No explode,
-    no shuffle: the 100 TB cost is one narrow pass over the corpus."""
-    # One fold over the hashed shingles computing all seed-mins at
-    # once: referencing `shingles` exactly once in the expression
-    # tree matters — Catalyst collapses projections and would
-    # otherwise duplicate the whole shingle construction per seed
-    # (higher-order functions get no codegen CSE). Spelled as one
-    # F.expr string (r14): same fold tree, one parse instead of the
-    # nested-lambda Column construction's py4j churn.
-    return shingled.selectExpr(
-        sql_ident(id_col), f"{_signature_expr_sql(num_hashes)} AS signature"
+    """MinHash signature per document: the shingles are exploded, each
+    is xxhash64'd ONCE, and sig[k] = min over the shingles of
+    xxhash64(k, h) — ``num_hashes`` plain min-aggregates keyed by the
+    document, so the whole step is whole-stage codegen. The partial
+    aggregate runs before the one shuffle keyed by ``id_col``: the
+    exchange carries one row per document, never one per shingle.
+
+    Edge inputs: an empty shingle array gives all ``Long.MAX``, a NULL
+    array gives a NULL signature, and every input row gives one output
+    row even when ids repeat."""
+    return sql_with(
+        shingled.sparkSession,
+        _signature_sql("{sh}", id_col, num_hashes),
+        sh=shingled,
     )
 
 
-def _signature_expr_sql(num_hashes: int) -> str:
-    """The MinHash all-seed fold over a ``shingles`` column, as SQL
-    text — shared by :func:`minhash_signatures` and the fused
-    :func:`minhash_near_duplicates` fragment so the trees stay
-    byte-identical."""
+def _signature_sql(rel: str, id_col: str, num_hashes: int) -> str:
+    """MinHash signatures of a relation ``rel`` carrying
+    (id_col, shingles), as SQL text — shared by
+    :func:`minhash_signatures` and the fused
+    :func:`minhash_near_duplicates` fragment.
+
+    ``__rk`` keys the aggregate per input row, so repeated ids stay
+    separate rows; it is projected below the explode (a select-list
+    generator evaluates its sibling expressions per OUTPUT row).
+    ``posexplode_outer`` keeps empty and NULL arrays as one row with a
+    NULL ``__pos`` (a NULL element has a position and hashes like any
+    other value); ``__null`` tells the two apart."""
+    idq = sql_ident(id_col)
+    long_max = "CAST(9223372036854775807 AS BIGINT)"
+    mins = ", ".join(
+        f"min(IF(__pos IS NULL, {long_max}, xxhash64({k}, __h)))"
+        for k in range(num_hashes)
+    )
     return (
-        "aggregate(transform(shingles, s -> xxhash64(s)), "
-        f"array_repeat(CAST(9223372036854775807 AS BIGINT), {num_hashes}), "
-        f"(acc, h) -> zip_with(acc, sequence(0, {num_hashes - 1}), "
-        "(m, seed) -> least(m, xxhash64(seed, h))))"
+        f"SELECT {idq}, IF(max(__null), NULL, array({mins})) AS signature "
+        f"FROM (SELECT {idq}, __rk, __null, __pos, xxhash64(__s) AS __h FROM ("
+        f"SELECT {idq}, __rk, shingles IS NULL AS __null, "
+        f"posexplode_outer(shingles) AS (__pos, __s) FROM ("
+        f"SELECT {idq}, shingles, monotonically_increasing_id() AS __rk "
+        f"FROM {rel}))) "
+        f"GROUP BY {idq}, __rk"
     )
+
+
+def _check_bands(num_hashes: int, bands: int) -> None:
+    if num_hashes % bands != 0:
+        raise ValueError(
+            f"bands ({bands}) must divide num_hashes ({num_hashes}): "
+            "a remainder would silently drop trailing signature slots "
+            "and flatten the S-curve"
+        )
 
 
 def lsh_candidate_pairs(
@@ -225,10 +255,10 @@ def lsh_candidate_pairs(
     id_col: str = "doc_id",
     num_hashes: int = DEFAULT_NUM_HASHES,
     bands: int = DEFAULT_BANDS,
-    max_bucket_size: int | None = 10_000,
+    max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
 ) -> DataFrame:
     """LSH banding: split each signature into ``bands`` bands of
-    ``num_hashes // bands`` rows, hash each band, and equi-join
+    ``num_hashes // bands`` rows, hash each band, and pair the
     documents sharing any (band_index, band_hash) bucket. Returns
     distinct candidate pairs (id_a < id_b).
 
@@ -243,20 +273,7 @@ def lsh_candidate_pairs(
     stop-word analog; members that are genuine near-dups of anything
     still collide in their other bands. None disables the guard.
     """
-    if num_hashes % bands != 0:
-        raise ValueError(
-            f"bands ({bands}) must divide num_hashes ({num_hashes}): "
-            "a remainder would silently drop trailing signature slots "
-            "and flatten the S-curve"
-        )
-    # One parsed SQL fragment for the whole banding chain (r15): the
-    # r14 form already spelled the per-band xxhash64 array as text
-    # but still paid ~10 structural py4j calls (select, window,
-    # filter, two projections, join, distinct) per invocation —
-    # ~150 ms of driver time. The fragment spells the SAME trees
-    # (posexplode -> bucket-size window guard -> self-equi-join on
-    # (band, bucket) -> distinct ordered pairs); rows identical by
-    # construction and pinned by the existing LSH recall tests.
+    _check_bands(num_hashes, bands)
     return sql_with(
         signatures.sparkSession,
         _lsh_pairs_sql("{sigs}", id_col, num_hashes, bands, max_bucket_size),
@@ -274,7 +291,14 @@ def _lsh_pairs_sql(
     """The banding chain over a relation ``rel`` carrying
     (id_col, signature), as SQL text — shared by
     :func:`lsh_candidate_pairs` and the fused
-    :func:`minhash_near_duplicates` fragment."""
+    :func:`minhash_near_duplicates` fragment.
+
+    One aggregate per (band, bucket) collects the sorted member ids;
+    each member pairs with the members after it. The bucket size
+    counts every row (NULL ids too) while the list holds the non-NULL
+    ids, so NULL ids never pair but still count toward the cap. A
+    bucket over the cap still builds its id list (8 bytes per member
+    for long ids) before HAVING drops it; it emits no pairs."""
     rows_per_band = num_hashes // bands
     band_hashes = "array(" + ", ".join(
         f"xxhash64({b}, " + ", ".join(
@@ -284,20 +308,17 @@ def _lsh_pairs_sql(
         for b in range(bands)
     ) + ")"
     idq = sql_ident(id_col)
-    buckets = f"SELECT {idq}, posexplode({band_hashes}) AS (band, bucket) FROM {rel}"
-    if max_bucket_size is not None:
-        src = (
-            f"(SELECT {idq}, band, bucket FROM ("
-            f"SELECT *, count(*) OVER (PARTITION BY band, bucket) AS __n "
-            f"FROM ({buckets})) WHERE __n <= {max_bucket_size})"
-        )
-    else:
-        src = f"({buckets})"
+    size_ok = "count(*) >= 2" if max_bucket_size is None else (
+        f"count(*) BETWEEN 2 AND {max_bucket_size}"
+    )
     return (
-        f"SELECT DISTINCT a.{idq} AS id_a, b.{idq} AS id_b "
-        f"FROM {src} a JOIN {src} b "
-        f"ON a.band = b.band AND a.bucket = b.bucket "
-        f"WHERE a.{idq} < b.{idq}"
+        "SELECT DISTINCT id_a, id_b FROM ("
+        f"SELECT sort_array(collect_list({idq})) AS __ids FROM ("
+        f"SELECT {idq}, posexplode({band_hashes}) AS (__band, __bucket) "
+        f"FROM {rel}) GROUP BY __band, __bucket HAVING {size_ok}) "
+        "LATERAL VIEW posexplode(__ids) a AS __i, id_a "
+        "LATERAL VIEW explode(slice(__ids, __i + 2, size(__ids))) b AS id_b "
+        "WHERE id_a < id_b"
     )
 
 
@@ -359,32 +380,27 @@ def minhash_near_duplicates(
     ``shingle_sets``."""
     from pyspark import StorageLevel
 
+    _check_bands(num_hashes, bands)
     # The shingled frame feeds three consumers (signatures + both
     # sides of the verify join); without persist each one re-runs
     # the tokenize/hash/gram chain — the dominant cost. Persisted
     # MEMORY_AND_DISK: at 100 TB this spills rather than OOMs, and
     # one materialization still beats three recomputes.
-    if num_hashes % bands != 0:
-        raise ValueError(
-            f"bands ({bands}) must divide num_hashes ({num_hashes}): "
-            "a remainder would silently drop trailing signature slots "
-            "and flatten the S-curve"
-        )
     shingled = register(
         hashed_shingle_sets(
             df, id_col, text_col, shingle_len, tokens=tokens
         ).persist(StorageLevel.MEMORY_AND_DISK)
     )
-    # One fused SQL fragment (r15): signature fold -> LSH banding ->
-    # exact-Jaccard verification, composed from the SAME text
-    # builders the standalone operators parse, so the trees are
-    # byte-identical — one parse+analyze instead of three chained
-    # fragments re-analyzing the growing plan.
-    idq = sql_ident(id_col)
+    # One fused SQL fragment: signatures -> LSH banding ->
+    # exact-Jaccard verification, composed from the SAME text builders
+    # the standalone operators parse, so the trees are identical — one
+    # parse+analyze instead of three chained fragments.
+    sigs = _signature_sql("{sh}", id_col, num_hashes)
+    cands = _lsh_pairs_sql(
+        "sigs", id_col, num_hashes, bands, DEFAULT_MAX_BUCKET_SIZE
+    )
     q = (
-        f"WITH sigs AS (SELECT {idq}, "
-        f"{_signature_expr_sql(num_hashes)} AS signature FROM {{sh}}), "
-        f"cands AS ({_lsh_pairs_sql('sigs', id_col, num_hashes, bands, 10_000)}) "
+        f"WITH sigs AS ({sigs}), cands AS ({cands}) "
         + _verify_sql("cands", "{sh}", id_col, threshold)
     )
     return sql_with(df.sparkSession, q, sh=shingled)

@@ -8,6 +8,9 @@ streaming job uses — the reference's own test strategy (SURVEY.md
 
 from __future__ import annotations
 
+import uuid
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -19,6 +22,37 @@ from spark_flink_streaming_example_with_test_spark.operators.activity import (
 from spark_flink_streaming_example_with_test_spark.schemas import EVENTS_PROPS_SCHEMA
 from spark_flink_streaming_example_with_test_spark.sources.tables import load_table
 from spark_flink_streaming_example_with_test_spark.streaming.replay import bounded_replay
+
+
+class _Derby:
+    """JDBC coordinates of one in-memory Derby database."""
+
+    driver = "org.apache.derby.jdbc.EmbeddedDriver"
+
+    def __init__(self, name: str) -> None:
+        self.url = f"jdbc:derby:memory:{name};create=true"
+
+    def options(self, table: str, **extra: str) -> dict[str, str]:
+        """Reader/writer options for ``table`` in this database."""
+        return {"url": self.url, "dbtable": table, "driver": self.driver, **extra}
+
+
+@contextmanager
+def _derby(spark: SparkSession, prefix: str):
+    """A fresh in-memory Derby database, dropped on exit."""
+    name = f"{prefix}_{uuid.uuid4().hex[:8]}"
+    try:
+        yield _Derby(name)
+    finally:
+        try:
+            # In-memory Derby DBs live until dropped; Derby signals a
+            # successful drop with SQLException 08006.
+            spark._jvm.java.sql.DriverManager.getConnection(
+                f"jdbc:derby:memory:{name};drop=true"
+            )
+        except Exception:  # noqa: BLE001 — cleanup is best-effort
+            pass
+
 
 #: events-fixture analog of the reference's {liked, commented} keep
 #: list (universe: signup click error view purchase).
@@ -1081,26 +1115,21 @@ def streaming_jdbc_sink_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     and aggregated. Only the driver class and URL differ from the
     Postgres deployment — the sink code path is the production one.
     """
-    import uuid
-
     from spark_flink_streaming_example_with_test_spark.streaming.sinks import jdbc_batch_writer
 
     events = load_table(spark, sf_dir, "events").select(
         "user_id", "event_type", "value"
     )
-    db = f"engine_jdbc_{uuid.uuid4().hex[:8]}"
-    url = f"jdbc:derby:memory:{db};create=true"
-    driver = "org.apache.derby.jdbc.EmbeddedDriver"
     table = "user_activity_sink"
-    try:
+    with _derby(spark, "engine_jdbc") as db:
         # Pre-create the table via an empty overwrite so the
         # streaming appends land in a stable schema.
-        events.limit(0).write.format("jdbc").option("url", url).option(
-            "dbtable", table
-        ).option("driver", driver).mode("overwrite").save()
+        events.limit(0).write.format("jdbc").options(
+            **db.options(table)
+        ).mode("overwrite").save()
         writer = jdbc_batch_writer(
-            url=url, table=table, user="", password="",
-            driver=driver, batchsize=1000,
+            url=db.url, table=table, user="", password="",
+            driver=db.driver, batchsize=1000,
         )
         with bounded_replay(spark, events) as r:
             r.drain(
@@ -1108,13 +1137,7 @@ def streaming_jdbc_sink_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .outputMode("append")
                 .start
             )
-        back = (
-            spark.read.format("jdbc")
-            .option("url", url)
-            .option("dbtable", table)
-            .option("driver", driver)
-            .load()
-        )
+        back = spark.read.format("jdbc").options(**db.options(table)).load()
         out = back.groupBy("event_type").agg(
             F.count("*").alias("n"),
             F.round(F.sum("value"), 2).alias("total_value"),
@@ -1123,15 +1146,6 @@ def streaming_jdbc_sink_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame(
             rows, "event_type string, n long, total_value double"
         )
-    finally:
-        try:
-            # In-memory Derby DBs live until dropped; Derby signals a
-            # successful drop with SQLException 08006.
-            spark._jvm.java.sql.DriverManager.getConnection(
-                f"jdbc:derby:memory:{db};drop=true"
-            )
-        except Exception:
-            pass
 
 
 STREAMING_JDBC_SINK_ORACLE = """
@@ -1156,27 +1170,22 @@ def streaming_jdbc_merge_upsert_e2e(
     append-only sink can't express (append of an update-mode
     aggregate duplicates keys).
     """
-    import uuid
-
     from spark_flink_streaming_example_with_test_spark.streaming.ops import running_user_totals
     from spark_flink_streaming_example_with_test_spark.streaming.sinks import jdbc_merge_writer
 
     events = load_table(spark, sf_dir, "events").select("user_id", "value")
-    db = f"engine_merge_{uuid.uuid4().hex[:8]}"
-    url = f"jdbc:derby:memory:{db};create=true"
-    driver = "org.apache.derby.jdbc.EmbeddedDriver"
     target, staging = "user_totals", "user_totals_stage"
-    try:
+    with _derby(spark, "engine_merge") as db:
         empty = spark.createDataFrame(
             [], "user_id long, n_events long, total_value double"
         )
         for t in (target, staging):
-            empty.write.format("jdbc").option("url", url).option(
-                "dbtable", t
-            ).option("driver", driver).mode("overwrite").save()
+            empty.write.format("jdbc").options(**db.options(t)).mode(
+                "overwrite"
+            ).save()
         writer = jdbc_merge_writer(
-            url=url, target=target, staging=staging, key="user_id",
-            set_cols=["n_events", "total_value"], driver=driver,
+            url=db.url, target=target, staging=staging, key="user_id",
+            set_cols=["n_events", "total_value"], driver=db.driver,
         )
         # Several part files -> several micro-batches (repartition
         # guarantees >1 even at tiny scale).
@@ -1187,13 +1196,7 @@ def streaming_jdbc_merge_upsert_e2e(
                 .outputMode("update")
                 .start
             )
-        back = (
-            spark.read.format("jdbc")
-            .option("url", url)
-            .option("dbtable", target)
-            .option("driver", driver)
-            .load()
-        )
+        back = spark.read.format("jdbc").options(**db.options(target)).load()
         rows = back.select(
             "user_id",
             "n_events",
@@ -1202,13 +1205,6 @@ def streaming_jdbc_merge_upsert_e2e(
         return spark.createDataFrame(
             rows, "user_id long, n_events long, total_value double"
         )
-    finally:
-        try:
-            spark._jvm.java.sql.DriverManager.getConnection(
-                f"jdbc:derby:memory:{db};drop=true"
-            )
-        except Exception:
-            pass
 
 
 STREAMING_JDBC_MERGE_ORACLE = """
@@ -1230,35 +1226,24 @@ def jdbc_parallel_read_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     the ingest RDD's partition count; range splitting must neither
     drop nor duplicate boundary rows — the rollup hash proves it.
     """
-    import uuid
-
     events = load_table(spark, sf_dir, "events").select(
         "user_id", "event_type", "value"
     )
-    db = f"engine_pread_{uuid.uuid4().hex[:8]}"
-    url = f"jdbc:derby:memory:{db};create=true"
-    driver = "org.apache.derby.jdbc.EmbeddedDriver"
     table = "events_oltp"
-    try:
-        (
-            events.write.format("jdbc")
-            .option("url", url)
-            .option("dbtable", table)
-            .option("driver", driver)
-            .option("batchsize", "1000")
-            .mode("overwrite")
-            .save()
-        )
+    with _derby(spark, "engine_pread") as db:
+        events.write.format("jdbc").options(
+            **db.options(table, batchsize="1000")
+        ).mode("overwrite").save()
         hi = events.agg(F.max("user_id")).first()[0] or 1
         ingest = (
             spark.read.format("jdbc")
-            .option("url", url)
-            .option("dbtable", table)
-            .option("driver", driver)
-            .option("partitionColumn", "user_id")
-            .option("lowerBound", "0")
-            .option("upperBound", str(int(hi) + 1))
-            .option("numPartitions", "4")
+            .options(**db.options(
+                table,
+                partitionColumn="user_id",
+                lowerBound="0",
+                upperBound=str(int(hi) + 1),
+                numPartitions="4",
+            ))
             .load()
         )
         parallel = ingest.rdd.getNumPartitions() == 4
@@ -1276,13 +1261,6 @@ def jdbc_parallel_read_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type string, n long, total_value double, "
             "read_parallel boolean",
         )
-    finally:
-        try:
-            spark._jvm.java.sql.DriverManager.getConnection(
-                f"jdbc:derby:memory:{db};drop=true"
-            )
-        except Exception:
-            pass
 
 
 JDBC_PARALLEL_READ_ORACLE = """

@@ -251,3 +251,146 @@ def test_weighted_jaccard_and_cross_lingual_emit_dropped_count(spark, tmp_path):
     odf = con.execute(DEDUP_WEIGHTED_JACCARD_ORACLE).fetchdf()
     assert len(odf) == len(rows)
     assert (odf.n_hot_grams_dropped == 0).all()
+
+
+# --- Reference forms of the MinHash/LSH chain -------------------------
+# The earlier spellings of the signature and banding SQL, kept here as
+# the specification the codegen'd aggregates in operators/dedup.py
+# must reproduce row for row: an interpreted all-seed fold over the
+# hashed shingles, and a bucket-size window + self-join for the bands.
+
+def fold_signatures(shingled, num_hashes=32):
+    fold = (
+        "aggregate(transform(shingles, s -> xxhash64(s)), "
+        f"array_repeat(CAST(9223372036854775807 AS BIGINT), {num_hashes}), "
+        f"(acc, h) -> zip_with(acc, sequence(0, {num_hashes - 1}), "
+        "(m, seed) -> least(m, xxhash64(seed, h))))"
+    )
+    return shingled.selectExpr("doc_id", f"{fold} AS signature")
+
+
+def window_join_pairs(signatures, max_bucket_size, num_hashes=32, bands=8):
+    rows = num_hashes // bands
+    band_hashes = "array(" + ", ".join(
+        f"xxhash64({b}, "
+        + ", ".join(f"signature[{b * rows + r}]" for r in range(rows)) + ")"
+        for b in range(bands)
+    ) + ")"
+    buckets = signatures.selectExpr(
+        "doc_id", f"posexplode({band_hashes}) AS (band, bucket)"
+    )
+    if max_bucket_size is not None:
+        buckets = buckets.selectExpr(
+            "*", "count(*) OVER (PARTITION BY band, bucket) AS n"
+        ).filter(f"n <= {max_bucket_size}")
+    a = buckets.selectExpr("doc_id AS id_a", "band", "bucket")
+    b = buckets.selectExpr("doc_id AS id_b", "band", "bucket")
+    return (
+        a.join(b, ["band", "bucket"]).filter("id_a < id_b")
+        .select("id_a", "id_b").distinct()
+    )
+
+
+def assert_same_rows(got, want):
+    assert got.count() == want.count()
+    assert got.exceptAll(want).count() == 0
+    assert want.exceptAll(got).count() == 0
+
+
+@pytest.mark.parametrize("elem", ["bigint", "string"])
+def test_signatures_match_fold_on_edge_inputs(spark, elem):
+    """Empty array -> all Long.MAX; NULL array -> NULL signature; a
+    NULL element hashes as the fold hashed it; repeated ids (and NULL
+    ids) keep one output row per input row."""
+    def arr(*xs):
+        return [x if x is None or elem == "bigint" else str(x) for x in xs]
+
+    rows = [
+        (1, arr(1, 2, 3)),
+        (1, arr(1, 2, 3)),
+        (1, arr(4)),
+        (2, []),
+        (3, None),
+        (4, arr(None, 5)),
+        (5, arr(5, None)),
+        (6, arr(None)),
+        (None, arr(9)),
+        (None, None),
+    ]
+    df = spark.createDataFrame(rows, f"doc_id bigint, shingles array<{elem}>")
+    got = minhash_signatures(df)
+    assert_same_rows(got, fold_signatures(df))
+
+    by_id: dict = {}
+    for r in got.collect():
+        by_id.setdefault(r.doc_id, []).append(r.signature)
+    assert len(by_id[1]) == 3 and len(by_id[None]) == 2
+    assert by_id[2] == [[2**63 - 1] * 32]
+    assert by_id[3] == [None]
+    assert by_id[4] == by_id[5]  # same set, NULL element included
+    assert by_id[6][0] != [2**63 - 1] * 32  # a NULL element still hashes
+
+
+def test_lsh_matches_window_join_with_bucket_over_cap(spark):
+    """The bucket aggregate keeps the window guard's semantics: a
+    bucket over the cap is dropped, one at the cap pairs fully, and
+    NULL ids count toward the cap but never pair."""
+    from spark_flink_streaming_example_with_test_spark.operators.dedup import (
+        hashed_shingle_sets,
+    )
+
+    over = "the same boilerplate footer repeated on every single page of the site"
+    at = "another shared banner text that exactly ten rows carry in this corpus"
+    rows = (
+        [(i, over) for i in range(12)]
+        + [(100 + i, at) for i in range(9)] + [(None, at)]
+        + [(200, BASE), (201, NEAR_DUP), (202, UNRELATED), (202, UNRELATED)]
+    )
+    df = spark.createDataFrame(rows, "doc_id bigint, text string")
+    sigs = minhash_signatures(hashed_shingle_sets(df)).persist()
+    try:
+        for cap in (None, 10, 9):
+            assert_same_rows(
+                lsh_candidate_pairs(sigs, max_bucket_size=cap),
+                window_join_pairs(sigs, cap),
+            )
+        capped = {(r.id_a, r.id_b) for r in lsh_candidate_pairs(
+            sigs, max_bucket_size=10).collect()}
+        assert not any(a < 12 for a, _ in capped)  # 12 > cap: dropped
+        assert sum(100 <= a < 200 for a, _ in capped) == 9 * 8 // 2
+        assert (202, 202) not in capped
+    finally:
+        sigs.unpersist()
+
+
+def test_minhash_near_duplicates_matches_reference_chain(spark):
+    """The fused fragment equals fold signatures -> window+join LSH ->
+    exact-Jaccard verification on the sf0.01 documents."""
+    import os
+
+    from spark_flink_streaming_example_with_test_spark.operators.dedup import (
+        hashed_shingle_sets,
+        verify_jaccard,
+    )
+    from spark_flink_streaming_example_with_test_spark.sources.tables import load_table
+    from tests.conftest import SF_DIR
+
+    docs = load_table(spark, os.path.join(os.path.dirname(SF_DIR), "sf0.01"), "documents")
+    sh = hashed_shingle_sets(docs)
+    want = verify_jaccard(
+        window_join_pairs(fold_signatures(sh), 10_000), sh, threshold=0.5
+    )
+    got = minhash_near_duplicates(docs, threshold=0.5)
+    assert got.count() > 0
+    assert_same_rows(got, want)
+
+
+@pytest.mark.parametrize("id_col", ["band", "pos", "ids"])
+def test_minhash_id_column_may_share_an_internal_name(docs, id_col):
+    """The signature and banding SQL name their own columns; an id
+    column called like a common helper name must not clash."""
+    want = {tuple(r) for r in minhash_near_duplicates(docs, threshold=0.3).collect()}
+    renamed = docs.withColumnRenamed("doc_id", id_col)
+    got = {tuple(r) for r in minhash_near_duplicates(
+        renamed, id_col=id_col, threshold=0.3).collect()}
+    assert got == want

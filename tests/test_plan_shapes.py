@@ -68,8 +68,8 @@ PINS: dict[str, list[tuple[str, int | None, int | None]]] = {
         ("documents.parquet", None, 28),
         ("SortMergeJoin", None, 2),
     ],
-    # Banded LSH: equi-join on (band, signature) buckets; the pair
-    # join may be SMJ but never more than the one candidate join.
+    # Banded LSH: candidate pairs come from one (band, bucket)
+    # aggregate; only the verify joins may plan as SMJ.
     "dedup_minhash_lsh": [
         ("InMemoryTableScan", 2, None),
         ("documents.parquet", None, 40),

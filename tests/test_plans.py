@@ -53,10 +53,15 @@ def test_flagship_single_shuffle(spark):
     assert plan.count("Exchange") == 1
 
 
-def test_minhash_signatures_no_shuffle(spark):
-    """MinHash signatures must compute map-side: no exchange between
-    the shingle projection and the signature projection (only the
-    parallelism-guard round-robin repartition of the input)."""
+def test_minhash_signatures_one_keyed_shuffle_of_partial_aggregates(spark):
+    """MinHash signatures are codegen'd min-aggregates keyed by the
+    document: besides the parallelism-guard round-robin of the input,
+    the plan has exactly one exchange, hash-partitioned on the id, with
+    the partial HashAggregate below it — so the shuffle carries one row
+    per document, never one per shingle — and no ObjectHashAggregate
+    or SortAggregate (array-buffer aggregates that lose codegen)."""
+    import re
+
     from spark_flink_streaming_example_with_test_spark.operators import dedup as dd
     from spark_flink_streaming_example_with_test_spark.sources.tables import load_table
 
@@ -68,7 +73,12 @@ def test_minhash_signatures_no_shuffle(spark):
     sigs = dd.minhash_signatures(dd.hashed_shingle_sets(docs))
     plan = sigs._jdf.queryExecution().executedPlan().toString()
     assert "RoundRobin" in plan  # the parallelism guard
-    assert plan.count("Exchange") == 1  # ...and nothing else
+    assert plan.count("Exchange") == 2  # the guard + the keyed shuffle
+    assert re.findall(r"Exchange hashpartitioning\((\w+)#", plan) == ["doc_id"]
+    below = plan.split("Exchange hashpartitioning", 1)[1]
+    assert "HashAggregate" in below and "partial_min(" in below
+    assert "ObjectHashAggregate" not in plan
+    assert "SortAggregate" not in plan
 
 
 def test_topk_cosine_broadcasts_queries(spark):
