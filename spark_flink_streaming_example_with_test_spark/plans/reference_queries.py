@@ -1110,8 +1110,9 @@ def streaming_jdbc_sink_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     embedded Derby database (the JDBC engine Spark itself ships for
     its metastore), replacing the previously test-only status of the
     JDBC path: events replay through a bounded file stream, the REAL
-    jdbc_batch_writer (batchsize=1000, single-action persist fix)
-    appends each micro-batch, and the result is read back over JDBC
+    jdbc_batch_writer (batchsize=1000; one save per micro-batch, whose
+    row count is logged from an Observation on that save) appends each
+    micro-batch, and the result is read back over JDBC
     and aggregated. Only the driver class and URL differ from the
     Postgres deployment — the sink code path is the production one.
     """

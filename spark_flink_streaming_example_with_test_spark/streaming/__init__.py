@@ -5,7 +5,6 @@ from spark_flink_streaming_example_with_test_spark.streaming.job import (
     start_split_pipelines,
 )
 from spark_flink_streaming_example_with_test_spark.streaming.sinks import (
-    foreach_batch_sink,
     jdbc_batch_writer,
     parquet_batch_writer,
 )
@@ -15,7 +14,6 @@ __all__ = [
     "read_activity_file_stream",
     "start_pipeline",
     "start_split_pipelines",
-    "foreach_batch_sink",
     "jdbc_batch_writer",
     "parquet_batch_writer",
 ]

@@ -35,15 +35,10 @@ def read_activity_kafka_stream(
     spark/spark_streaming.py:40-51). Requires the Kafka connector
     package on the classpath (reference: spark/submit.txt).
 
-    Sandbox probe (r13, VERDICT r12 stretch item #8): a pure-Python
-    broker shim cannot stand in for Kafka the way Derby stands in
-    for Postgres — the gap is not (only) the broker: this
-    environment's /opt/spark/jars has NO spark-sql-kafka connector
-    jar, so ``format("kafka")`` fails at source resolution before
-    any socket is opened, and installs are off-limits. The dated
-    env-gate note stands; the file/memory-stream twins remain the
-    driver-checked forms (same substitution as the reference's own
-    tests, FlinkTest.java:117).
+    The Spark install the engine is tested on has no Kafka connector
+    jar, so ``format("kafka")`` fails at source resolution there; the
+    file and memory-stream twins are the checked forms (the same
+    substitution as the reference's own tests, FlinkTest.java:117).
 
     Scale knobs: ``max_offsets_per_trigger`` bounds each micro-batch
     so a backlogged topic can't produce one giant catch-up batch that

@@ -1,10 +1,13 @@
 """Streaming sink adapters.
 
 The engine's sink-extension point is ``foreachBatch`` (reference:
-spark/spark_streaming.py:81-92), with one fix over the reference:
-its lambda runs ``df.count()`` AND the JDBC save — two actions, so
-every micro-batch plan executed twice (SURVEY.md §3.1 step 5). Our
-wrapper persists the batch across its actions and unpersists after.
+spark/spark_streaming.py:81-92). The reference's lambda runs
+``df.count()`` for its log line and then the JDBC save: two actions,
+so every micro-batch plan executes twice (SURVEY.md §3.1 step 5).
+Here the count rides on the save itself: the batch is written once
+through ``df.observe(Observation, count)``, and the log line reads
+the observed count after the write returns. One micro-batch, one
+execution of its plan.
 """
 
 from __future__ import annotations
@@ -12,31 +15,25 @@ from __future__ import annotations
 import logging
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.errors import AnalysisException
+from pyspark.sql import DataFrame, Observation
+from pyspark.sql import functions as F
 
 log = logging.getLogger(__name__)
 
 BatchWriter = Callable[[DataFrame, int], None]
 
 
-def foreach_batch_sink(
-    write: Callable[[DataFrame], None],
-    log_counts: bool = True,
-) -> BatchWriter:
-    """Wrap a batch write so the micro-batch plan executes once even
-    when counted for logging (persist -> actions -> unpersist)."""
+def _counted_batch_sink(write: Callable[[DataFrame], None]) -> BatchWriter:
+    """Write each micro-batch once and log its row count, observed on
+    that same write. ``write`` must run exactly one action on the frame
+    it is given: ``Observation.get`` blocks until an action on the
+    observed frame finishes."""
 
     def sink(df: DataFrame, batch_id: int) -> None:
-        needs_persist = log_counts
-        if needs_persist:
-            df.persist()
-        try:
-            if log_counts:
-                log.info("Processing batch %s with %s rows", batch_id, df.count())
-            write(df)
-        finally:
-            if needs_persist:
-                df.unpersist()
+        rows = Observation()
+        write(df.observe(rows, F.count(F.lit(1)).alias("rows")))
+        log.info("Processing batch %s with %s rows", batch_id, rows.get["rows"])
 
     return sink
 
@@ -48,11 +45,11 @@ def jdbc_batch_writer(
     password: str,
     driver: str = "org.postgresql.Driver",
     batchsize: int = 1000,
-    log_counts: bool = True,
 ) -> BatchWriter:
     """Per-micro-batch JDBC append (reference:
     spark/spark_streaming.py:67-78; batchsize mirrors the Flink
     twin's JdbcExecutionOptions, UserActivityFilterAgg.java:130-133).
+    One save per micro-batch; its row count is logged from that save.
     """
 
     def write(df: DataFrame) -> None:
@@ -68,17 +65,18 @@ def jdbc_batch_writer(
             .save()
         )
 
-    return foreach_batch_sink(write, log_counts=log_counts)
+    return _counted_batch_sink(write)
 
 
-def parquet_batch_writer(path: str, log_counts: bool = False) -> BatchWriter:
+def parquet_batch_writer(path: str) -> BatchWriter:
     """Append each micro-batch to a parquet directory — the
-    file-based analog used in tests and batch backfills."""
+    file-based analog used in tests and batch backfills. One write
+    per micro-batch; its row count is logged from that write."""
 
     def write(df: DataFrame) -> None:
         df.write.mode("append").parquet(path)
 
-    return foreach_batch_sink(write, log_counts=log_counts)
+    return _counted_batch_sink(write)
 
 
 def idempotent_parquet_writer(path: str) -> BatchWriter:
@@ -108,15 +106,18 @@ def upsert_parquet_writer(
     batch's row.
 
     Mechanics per micro-batch:
+    - the deduplicated, bucketed batch is EAGERLY checkpointed first,
+      so the micro-batch plan upstream of the sink runs once, however
+      many times the merge below reads the batch;
     - the table is hash-partitioned on ``pmod(xxhash64(keys), n)``
       so an upsert rewrites only the buckets its keys land in, not
-      the whole table (dynamic partition overwrite);
+      the whole table (``partitionOverwriteMode=dynamic``, set on this
+      write only: the session conf is shared with other queries);
     - surviving old rows = old rows of affected buckets anti-joined
-      on the key; merged = survivors + batch;
-    - the merged frame is EAGERLY checkpointed before the overwrite
-      — otherwise the lazy scan of the old files would race the
+      on the key, eagerly checkpointed before the overwrite —
+      otherwise the lazy scan of the old files would race the
       overwrite of those same files (the classic self-overwrite
-      trap);
+      trap); merged = survivors + batch;
     - a replayed batch (crash between write and offset commit)
       re-produces the identical merged content — the upsert is
       idempotent, giving exactly-once table state.
@@ -127,49 +128,33 @@ def upsert_parquet_writer(
     key, so this only matters for malformed inputs).
     """
 
-    _OVERWRITE_MODE = "spark.sql.sources.partitionOverwriteMode"
-
     def sink(df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import functions as F
-
-        spark = df.sparkSession
-        # Dynamic overwrite only for the duration of this batch's
-        # write — restore the session's prior setting afterwards so a
-        # foreachBatch sink never leaks config into unrelated jobs
-        # sharing the session.
+        batch = (
+            df.dropDuplicates(keys)
+            .withColumn("__bucket", F.pmod(F.xxhash64(*keys), n_buckets))
+            .localCheckpoint(eager=True)
+        )
         try:
-            prev = spark.conf.get(_OVERWRITE_MODE)
-        except Exception:
-            prev = None
-        spark.conf.set(_OVERWRITE_MODE, "dynamic")
-        try:
-            batch = df.dropDuplicates(keys).withColumn(
-                "__bucket", F.pmod(F.xxhash64(*keys), n_buckets)
+            old = df.sparkSession.read.parquet(path)
+        except AnalysisException:  # no table yet: the batch is the table
+            merged = batch
+        else:
+            affected = [
+                r["__bucket"]
+                for r in batch.select("__bucket").distinct().collect()
+            ]
+            survivors = (
+                old.filter(old["__bucket"].isin(affected))
+                .join(batch.select(*keys), keys, "left_anti")
+                .localCheckpoint(eager=True)
             )
-            try:
-                old = spark.read.parquet(path)
-                exists = True
-            except Exception:
-                exists = False
-            if exists:
-                affected = [
-                    r["__bucket"]
-                    for r in batch.select("__bucket").distinct().collect()
-                ]
-                survivors = old.filter(old["__bucket"].isin(affected)).join(
-                    batch.select(*keys), keys, "left_anti"
-                )
-                merged = survivors.unionByName(batch)
-            else:
-                merged = batch
-            merged.localCheckpoint(eager=True).write.mode(
-                "overwrite"
-            ).partitionBy("__bucket").parquet(path)
-        finally:
-            if prev is None:
-                spark.conf.unset(_OVERWRITE_MODE)
-            else:
-                spark.conf.set(_OVERWRITE_MODE, prev)
+            merged = survivors.unionByName(batch)
+        (
+            merged.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("__bucket")
+            .parquet(path)
+        )
 
     return sink
 

@@ -8,7 +8,9 @@ exactly-once window emission), stream splitting, checkpoint restart.
 from __future__ import annotations
 
 import json
+import logging
 import os
+import threading
 
 import pytest
 
@@ -294,6 +296,171 @@ def test_upsert_sink_end_to_end_stream(spark, tmp_path):
         .collect()
     }
     assert got == expect
+
+
+SINKS_LOGGER = "spark_flink_streaming_example_with_test_spark.streaming.sinks"
+
+
+def _logged_counts(caplog) -> dict[int, int]:
+    """batch id -> row count, from the sinks' per-batch log lines."""
+    return {
+        int(r.args[0]): int(r.args[1])
+        for r in caplog.records
+        if r.name == SINKS_LOGGER and r.msg.startswith("Processing batch")
+    }
+
+
+def _executed_batches(query) -> list[dict]:
+    """Progress entries of the micro-batches that ran (idle triggers
+    report progress without an addBatch phase)."""
+    return [
+        p for p in (json.loads(x.json) for x in query.recentProgress)
+        if "addBatch" in p["durationMs"]
+    ]
+
+
+def _process_all_available(query, timeout_s: float = 120) -> None:
+    """processAllAvailable, bounded: a sink that blocks fails the test
+    instead of hanging it."""
+    t = threading.Thread(target=query.processAllAvailable, daemon=True)
+    t.start()
+    t.join(timeout_s)
+    assert not t.is_alive(), f"micro-batches still running after {timeout_s} s"
+
+
+def test_flagship_jdbc_sink_one_job_per_batch(spark, tmp_path, caplog):
+    """The flagship stream into jdbc_batch_writer runs one Spark job per
+    micro-batch: the row count it logs is observed on the save itself,
+    not taken by a second action. The logged counts add up to the rows
+    in the table, and a zero-row no-data batch logs 0 without
+    blocking."""
+    from spark_flink_streaming_example_with_test_spark.plans.reference_queries import _derby
+    from spark_flink_streaming_example_with_test_spark.streaming.sinks import jdbc_batch_writer
+
+    src = tmp_path / "src"
+    src.mkdir()
+    caplog.set_level(logging.INFO, logger=SINKS_LOGGER)
+    with _derby(spark, "test_flagship") as db:
+        spark.createDataFrame(
+            [], "id string, event_type string, window_start timestamp, "
+                "window_end timestamp, count long"
+        ).write.format("jdbc").options(**db.options("agg")).mode("overwrite").save()
+        writer = jdbc_batch_writer(
+            url=db.url, table="agg", user="", password="", driver=db.driver
+        )
+        stream = read_activity_file_stream(spark, str(src))
+        query = start_pipeline(
+            stream, flagship_pipeline, writer, str(tmp_path / "ckpt")
+        )
+        try:
+            # Batch 0 closes no window; the watermark it sets closes
+            # none either, so its no-data batch writes zero rows.
+            _write_file(str(src), "f1.json", [
+                _event("1", 1_000, "liked"),
+                _event("2", 2_000, "commented"),
+            ])
+            _process_all_available(query)
+            # Moves the watermark past minute 0: its no-data batch
+            # emits the two minute-0 windows.
+            _write_file(str(src), "f2.json", [_event("1", 130_000, "liked")])
+            _process_all_available(query)
+            batches = _executed_batches(query)
+            jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(
+                str(query.runId)
+            )
+        finally:
+            query.stop()
+        table_rows = spark.read.format("jdbc").options(**db.options("agg")).load().count()
+
+    logged = _logged_counts(caplog)
+    assert sorted(logged) == [p["batchId"] for p in batches]
+    assert len(jobs) == len(batches)
+    assert sum(logged.values()) == table_rows == 2
+    no_data = [p["batchId"] for p in batches if p["numInputRows"] == 0]
+    assert any(logged[b] == 0 for b in no_data)
+
+
+def test_parquet_batch_writer_logs_each_batch(spark, tmp_path, caplog):
+    """parquet_batch_writer logs one row count per micro-batch, and the
+    counts add up to the rows it wrote."""
+    src = tmp_path / "src"
+    src.mkdir()
+    out = str(tmp_path / "out")
+    caplog.set_level(logging.INFO, logger=SINKS_LOGGER)
+
+    from spark_flink_streaming_example_with_test_spark.operators.activity import clean_activity
+
+    stream = read_activity_file_stream(spark, str(src))
+    query = start_pipeline(
+        stream, clean_activity, parquet_batch_writer(out), str(tmp_path / "ckpt")
+    )
+    try:
+        _write_file(str(src), "f1.json", [_event("1", 1_000, "liked")])
+        _process_all_available(query)
+        _write_file(str(src), "f2.json", [
+            _event("2", 2_000, "viewed"),
+            _event("3", 3_000, "liked"),
+        ])
+        _process_all_available(query)
+        batches = _executed_batches(query)
+    finally:
+        query.stop()
+
+    logged = _logged_counts(caplog)
+    assert sorted(logged) == [p["batchId"] for p in batches]
+    assert [logged[p["batchId"]] for p in batches] == [
+        p["numInputRows"] for p in batches
+    ]
+    assert sum(logged.values()) == spark.read.parquet(out).count() == 3
+
+
+def test_upsert_sink_runs_upstream_once_per_row(spark, tmp_path):
+    """upsert_parquet_writer executes the micro-batch plan once: a UDF
+    placed above the streaming aggregate runs once per output row,
+    also once the table exists and batches merge into it."""
+    from pyspark.sql.types import DoubleType
+
+    from spark_flink_streaming_example_with_test_spark.streaming.sinks import upsert_parquet_writer
+
+    src = tmp_path / "src"
+    src.mkdir()
+    out = str(tmp_path / "table")
+    calls = spark.sparkContext.accumulator(0)
+
+    def counted(v):
+        calls.add(1)
+        return v
+
+    counted_udf = F.udf(counted, DoubleType())
+    for b in range(4):
+        _write_file(str(src), f"b{b}.json", [
+            json.dumps({"user_id": u, "value": float(b)}) for u in range(10)
+        ])
+    stream = (
+        spark.readStream.schema("user_id long, value double")
+        .option("maxFilesPerTrigger", 1)
+        .json(str(src))
+    )
+    totals = stream.groupBy("user_id").agg(
+        F.sum("value").alias("total")
+    ).withColumn("total", counted_udf("total"))
+    query = (
+        totals.writeStream.foreachBatch(upsert_parquet_writer(out, keys=["user_id"]))
+        .outputMode("update")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .start()
+    )
+    try:
+        _process_all_available(query)
+        batches = _executed_batches(query)
+    finally:
+        query.stop()
+
+    assert len(batches) == 4
+    table = {r.user_id: r.total for r in spark.read.parquet(out).collect()}
+    assert table == {u: 6.0 for u in range(10)}
+    # 4 batches x 10 updated users.
+    assert calls.value == 40
 
 
 def test_state_metadata_reader_describes_operator(spark, tmp_path):
