@@ -639,12 +639,15 @@ def streaming_upsert_sink_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     replaces its keys' rows — and the FINAL TABLE STATE is checked
     against batch SQL. Proves the end-to-end exactly-once landing
     path (stateful op -> update stream -> idempotent keyed sink),
-    not just the in-memory aggregate."""
+    not just the in-memory aggregate. Several part files and
+    ``maxFilesPerTrigger=1`` make several micro-batches, so batches
+    after the first take the sink's merge path (affected buckets,
+    anti-join, dynamic overwrite)."""
     from spark_flink_streaming_example_with_test_spark.streaming.ops import running_user_totals
     from spark_flink_streaming_example_with_test_spark.streaming.sinks import upsert_parquet_writer
 
     events = load_table(spark, sf_dir, "events").select("user_id", "value")
-    with bounded_replay(spark, events) as r:
+    with bounded_replay(spark, events.repartition(4)) as r:
         table_dir = r.dir("table")
         r.drain(
             running_user_totals(r.stream(maxFilesPerTrigger=1))

@@ -33,31 +33,54 @@ RUNTIME_CONFS: dict[str, str] = {
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     # Prune unused struct leaves at the parquet scan.
     "spark.sql.optimizer.nestedSchemaPruning.enabled": "true",
-    # Streaming state at scale: RocksDB spills keyed state to local
-    # disk instead of holding it on the JVM heap (SURVEY.md §4) —
-    # a large windowed aggregation or stream-stream join otherwise
-    # OOMs executors long before 100 TB.
+    # Streaming state on local disk, not the JVM heap: large state does not OOM.
     "spark.sql.streaming.stateStore.providerClass": (
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
     ),
-    # RocksDB changelog checkpointing (r15): commit uploads the
-    # batch's changelog instead of a full SST snapshot — the
-    # documented way to cut per-batch commit latency for large state
-    # at scale; locally measured neutral-to-slightly-better on the
-    # bounded replays (the dominant local cost was instance count,
-    # see streaming/replay.py). Snapshot maintenance still runs in
-    # the background thread, so recovery cost stays bounded.
+    # A state commit uploads the batch's changelog, not a full snapshot.
     "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": "true",
 }
+
+#: Checkpoint files are written to a temp file and renamed atomically
+#: with ``FileSystem.rename``: Spark's default ``FileContext`` manager
+#: forks a shell (readlink, chmod) per file without the native Hadoop
+#: library. The class is Spark-internal and moved package in 4.0, so
+#: ``apply_runtime_confs`` sets it only once the JVM loads one of these.
+CHECKPOINT_MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
+RENAME_CHECKPOINT_MANAGERS = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager",  # Spark 4.x
+    "org.apache.spark.sql.execution.streaming."
+    "FileSystemBasedCheckpointFileManager",  # Spark 3.x
+)
+
+
+def _rename_checkpoint_manager(spark: SparkSession) -> str | None:
+    """The first of ``RENAME_CHECKPOINT_MANAGERS`` the session's JVM can
+    load, else None (also when the session has no JVM bridge)."""
+    for name in RENAME_CHECKPOINT_MANAGERS:
+        try:
+            spark._jvm.java.lang.Class.forName(name)
+        except Exception:
+            continue
+        return name
+    return None
 
 
 def apply_runtime_confs(spark: SparkSession) -> SparkSession:
     """Apply the engine's runtime confs to an existing session.
 
     Safe to call repeatedly; used on driver-provided sessions where
-    we don't control builder config.
+    we don't control builder config. A checkpoint manager the session
+    already names is kept; with none loadable, Spark's default stays:
+    a class name that does not load fails every streaming query.
     """
-    for key, value in RUNTIME_CONFS.items():
+    confs = dict(RUNTIME_CONFS)
+    if not spark.conf.get(CHECKPOINT_MANAGER_CONF, None):
+        manager = _rename_checkpoint_manager(spark)
+        if manager:
+            confs[CHECKPOINT_MANAGER_CONF] = manager
+    for key, value in confs.items():
         try:
             spark.conf.set(key, value)
         except Exception:

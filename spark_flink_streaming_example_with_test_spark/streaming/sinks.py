@@ -120,7 +120,9 @@ def upsert_parquet_writer(
       trap); merged = survivors + batch;
     - a replayed batch (crash between write and offset commit)
       re-produces the identical merged content — the upsert is
-      idempotent, giving exactly-once table state.
+      idempotent, giving exactly-once table state;
+    - both checkpoints are released once the overwrite returns, so
+      block-manager storage does not grow batch after batch.
 
     At scale, bucket count spreads rewrite IO; the anti-join is
     per-affected-bucket, not per-table. Batches with duplicate keys
@@ -134,29 +136,47 @@ def upsert_parquet_writer(
             .withColumn("__bucket", F.pmod(F.xxhash64(*keys), n_buckets))
             .localCheckpoint(eager=True)
         )
+        checkpoints = [batch]
         try:
-            old = df.sparkSession.read.parquet(path)
-        except AnalysisException:  # no table yet: the batch is the table
-            merged = batch
-        else:
-            affected = [
-                r["__bucket"]
-                for r in batch.select("__bucket").distinct().collect()
-            ]
-            survivors = (
-                old.filter(old["__bucket"].isin(affected))
-                .join(batch.select(*keys), keys, "left_anti")
-                .localCheckpoint(eager=True)
+            try:
+                old = df.sparkSession.read.parquet(path)
+            except AnalysisException:  # no table yet: the batch is the table
+                merged = batch
+            else:
+                affected = [
+                    r["__bucket"]
+                    for r in batch.select("__bucket").distinct().collect()
+                ]
+                survivors = (
+                    old.filter(old["__bucket"].isin(affected))
+                    .join(batch.select(*keys), keys, "left_anti")
+                    .localCheckpoint(eager=True)
+                )
+                checkpoints.append(survivors)
+                merged = survivors.unionByName(batch)
+            (
+                merged.write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("__bucket")
+                .parquet(path)
             )
-            merged = survivors.unionByName(batch)
-        (
-            merged.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__bucket")
-            .parquet(path)
-        )
+        finally:
+            for frame in checkpoints:
+                _release_local_checkpoint(frame)
 
     return sink
+
+
+def _release_local_checkpoint(frame: DataFrame) -> None:
+    """Free a local checkpoint's blocks now, not at the next driver GC.
+    ``DataFrame.unpersist`` does not reach them: they belong to the RDD
+    under the frame's ``LogicalRDD`` plan, a Spark internal. Where that
+    is out of reach (no JVM bridge, another plan shape), Spark's
+    ContextCleaner still frees them once the frame is collected."""
+    try:
+        frame._jdf.queryExecution().logical().rdd().unpersist(False)
+    except Exception:
+        pass
 
 
 def jdbc_merge_writer(

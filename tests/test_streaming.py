@@ -565,3 +565,250 @@ def test_chained_windows_multibatch_matches_single_batch(spark, tmp_path):
     # (same final watermark => same closed-window set), and never
     # emits a window the single-batch run disagrees with.
     assert multi == single
+
+
+def test_upsert_sink_releases_local_checkpoints(spark, tmp_path):
+    """upsert_parquet_writer frees each batch's local checkpoints once
+    its overwrite returns: no batch leaves blocks in the block manager,
+    where they used to pile up until a driver GC."""
+    from spark_flink_streaming_example_with_test_spark.streaming.sinks import upsert_parquet_writer
+
+    sc = spark.sparkContext._jsc.sc()
+
+    def stored() -> set[int]:
+        """Ids of the RDDs holding blocks (earlier tests' may be freed
+        meanwhile, so the check is that no new one stays)."""
+        return {i.id() for i in sc.getRDDStorageInfo()}
+
+    out = str(tmp_path / "table")
+    sink = upsert_parquet_writer(out, keys=["user_id"], n_buckets=4)
+    before = stored()
+    for b in range(6):
+        # Half of each batch's keys were in the previous one, so every
+        # batch after the first merges (survivors checkpoint included).
+        sink(
+            spark.range(b * 500, b * 500 + 1000).selectExpr(
+                "id AS user_id", f"CAST({b} AS double) AS total"
+            ),
+            b,
+        )
+        assert stored() <= before, f"storage grew after batch {b}"
+    table = spark.read.parquet(out)
+    assert table.count() == 3500
+    assert table.filter("user_id >= 3000").agg(F.min("total")).first()[0] == 5.0
+
+
+def test_streaming_upsert_sink_e2e_replays_several_batches(spark, sf_dir):
+    """The catalog's upsert-sink replay runs as several micro-batches,
+    so its oracle check reaches the sink's merge path."""
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    from spark_flink_streaming_example_with_test_spark.plans.reference_queries import (
+        streaming_upsert_sink_e2e,
+    )
+    from spark_flink_streaming_example_with_test_spark.sources.tables import load_table
+
+    class DataBatches(StreamingQueryListener):
+        def __init__(self) -> None:
+            self.rows: list[int] = []
+
+        def onQueryStarted(self, event) -> None:
+            pass
+
+        def onQueryProgress(self, event) -> None:
+            if event.progress.numInputRows:
+                self.rows.append(event.progress.numInputRows)
+
+        def onQueryIdle(self, event) -> None:
+            pass
+
+        def onQueryTerminated(self, event) -> None:
+            pass
+
+    listener = DataBatches()
+    spark.streams.addListener(listener)
+    try:
+        got = streaming_upsert_sink_e2e(spark, sf_dir).collect()
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    finally:
+        spark.streams.removeListener(listener)
+
+    events = load_table(spark, sf_dir, "events")
+    assert len(listener.rows) >= 2
+    assert sum(listener.rows) == events.count()
+    assert len(got) == events.select("user_id").distinct().count()
+
+
+# Streaming checkpoints go through Spark's rename-based checkpoint file
+# manager (session.RENAME_CHECKPOINT_MANAGERS), resolved in the JVM.
+
+
+def _checkpoint_manager(session, path: str):
+    """The CheckpointFileManager ``session`` gives a checkpoint at ``path``."""
+    jvm = session._jvm
+    managers = jvm.org.apache.spark.sql.execution.streaming.checkpointing
+    return managers.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(path),
+        session._jsparkSession.sessionState().newHadoopConf(),
+    )
+
+
+def test_session_uses_rename_checkpoint_manager(spark, tmp_path):
+    from spark_flink_streaming_example_with_test_spark.session import (
+        CHECKPOINT_MANAGER_CONF,
+        RENAME_CHECKPOINT_MANAGERS,
+    )
+
+    manager = _checkpoint_manager(spark, f"file:{tmp_path}/ckpt")
+    assert manager.getClass().getName() == RENAME_CHECKPOINT_MANAGERS[0]
+    assert spark.conf.get(CHECKPOINT_MANAGER_CONF) == RENAME_CHECKPOINT_MANAGERS[0]
+
+
+def test_session_keeps_a_checkpoint_manager_it_already_names(spark):
+    from spark_flink_streaming_example_with_test_spark.session import (
+        CHECKPOINT_MANAGER_CONF,
+        apply_runtime_confs,
+    )
+
+    other = spark.newSession()
+    other.conf.set(CHECKPOINT_MANAGER_CONF, "org.example.CustomCheckpointFileManager")
+    apply_runtime_confs(other)
+    assert other.conf.get(CHECKPOINT_MANAGER_CONF) == (
+        "org.example.CustomCheckpointFileManager"
+    )
+
+
+def test_rename_checkpoint_refuses_existing_batch_file(spark, tmp_path):
+    """createAtomic(p, overwriteIfPossible=false) on an existing file
+    raises on close and leaves the file as it was, the same as Spark's
+    default manager. Both leave the refused write's temp file (and its
+    checksum) next to it: Spark's rename-based output stream marks
+    itself closed before the rename, so its cancel() deletes nothing.
+    Neither manager leaves anything else."""
+    default = spark.newSession()
+    assert default.conf.get(
+        "spark.sql.streaming.checkpointFileManagerClass", None
+    ) is None
+    managers = {}
+    for name, session in (("rename", spark), ("default", default)):
+        d = tmp_path / name
+        d.mkdir()
+        manager = _checkpoint_manager(session, f"file:{d}")
+        batch = session._jvm.org.apache.hadoop.fs.Path(f"file:{d}/0")
+        out = manager.createAtomic(batch, False)
+        out.write(b"first")
+        out.close()
+        out = manager.createAtomic(batch, False)
+        out.write(b"second")
+        with pytest.raises(Exception, match="already exists|FileAlreadyExists"):
+            out.close()
+        out.cancel()
+        assert (d / "0").read_bytes() == b"first"
+        left = sorted(set(os.listdir(d)) - {"0", ".0.crc"})
+        assert len(left) == 2
+        assert all(f.endswith((".tmp", ".tmp.crc")) for f in left)
+        managers[name] = manager.getClass().getSimpleName()
+    assert managers == {
+        "rename": "FileSystemBasedCheckpointFileManager",
+        "default": "FileContextBasedCheckpointFileManager",
+    }
+
+
+def test_unresolvable_checkpoint_manager_keeps_spark_default(
+    spark, tmp_path, monkeypatch
+):
+    """With no loadable manager class the conf stays unset, so Spark's
+    default manager writes the checkpoint and the stream still runs."""
+    from spark_flink_streaming_example_with_test_spark import session as engine_session
+
+    monkeypatch.setattr(
+        engine_session, "RENAME_CHECKPOINT_MANAGERS", ("org.example.NoSuchManager",)
+    )
+    other = engine_session.apply_runtime_confs(spark.newSession())
+    assert other.conf.get(engine_session.CHECKPOINT_MANAGER_CONF, None) is None
+    ckpt = f"{tmp_path}/ckpt"
+    assert _checkpoint_manager(other, f"file:{ckpt}").getClass().getSimpleName() == (
+        "FileContextBasedCheckpointFileManager"
+    )
+
+    src = tmp_path / "src"
+    src.mkdir()
+    _write_file(str(src), "f1.json", [_event("1", 1_000, "liked")])
+    query = (
+        read_activity_file_stream(other, str(src))
+        .writeStream.format("memory").queryName("default_manager_stream")
+        .option("checkpointLocation", ckpt)
+        .start()
+    )
+    try:
+        _process_all_available(query)
+    finally:
+        query.stop()
+    assert other.table("default_manager_stream").count() == 1
+    assert os.listdir(f"{ckpt}/commits")
+
+
+def test_flagship_restart_from_checkpoint_matches_uninterrupted_run(spark, tmp_path):
+    """The flagship pipeline into Derby, stopped after its second file
+    and restarted from its checkpoint, lands the same windows as an
+    uninterrupted run fed the same files one at a time. The third
+    file's late event is dropped by both: the restarted query resumes
+    the watermark its checkpoint recorded (had it restarted from zero,
+    the event would re-open the already emitted first window)."""
+    from spark_flink_streaming_example_with_test_spark.plans.reference_queries import _derby
+    from spark_flink_streaming_example_with_test_spark.streaming.sinks import jdbc_batch_writer
+
+    files = [
+        [_event("1", 1_000, "liked"), _event("2", 2_000, "commented")],
+        [_event("1", 30_000, "liked"), _event("1", 70_000, "liked")],
+        # 5 s is behind the 60 s watermark the second file set.
+        [_event("2", 75_000, "commented"), _event("1", 5_000, "liked")],
+        [_event("1", 130_000, "liked"), _event("2", 200_000, "liked")],
+        [_event("1", 260_000, "liked")],
+    ]
+
+    def windows(stop_after: int | None) -> list[tuple]:
+        name = "uninterrupted" if stop_after is None else "restarted"
+        src = tmp_path / name / "src"
+        src.mkdir(parents=True)
+        ckpt = str(tmp_path / name / "ckpt")
+        with _derby(spark, f"test_restart_{name}") as db:
+            spark.createDataFrame(
+                [], "id string, event_type string, window_start timestamp, "
+                    "window_end timestamp, count long"
+            ).write.format("jdbc").options(**db.options("agg")).mode("overwrite").save()
+            writer = jdbc_batch_writer(
+                url=db.url, table="agg", user="", password="", driver=db.driver
+            )
+            query = None
+            try:
+                for i, lines in enumerate(files, start=1):
+                    if query is None:
+                        query = start_pipeline(
+                            read_activity_file_stream(spark, str(src)),
+                            flagship_pipeline, writer, ckpt,
+                        )
+                    _write_file(str(src), f"f{i}.json", lines)
+                    _process_all_available(query)
+                    if i == stop_after:
+                        query.stop()
+                        query = None
+            finally:
+                if query is not None:
+                    query.stop()
+            return sorted(
+                tuple(r)
+                for r in spark.read.format("jdbc").options(**db.options("agg"))
+                .load().select("id", "event_type", "window_start", "count")
+                .collect()
+            )
+
+    uninterrupted = windows(None)
+    restarted = windows(2)
+    assert restarted == uninterrupted
+    # [0,60): 1/liked x2, 2/commented; [60,120): 1/liked, 2/commented;
+    # [120,180): 1/liked; [180,240): 2/liked. [240,300) is still open.
+    assert [(r[0], r[1], r[3]) for r in uninterrupted] == [
+        ("1", "liked", 2), ("1", "liked", 1), ("1", "liked", 1),
+        ("2", "commented", 1), ("2", "commented", 1), ("2", "liked", 1),
+    ]
