@@ -11,6 +11,7 @@ from __future__ import annotations
 import uuid
 from contextlib import contextmanager
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -632,25 +633,35 @@ def pyds_synthetic_activity_stats(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
+def _user_totals(events: DataFrame) -> DataFrame:
+    """Per-user running ``(n_events, total_value)`` as a native
+    update-mode aggregate: one updated row per user per micro-batch,
+    state a count and a sum per user in the state store."""
+    return events.groupBy("user_id").agg(
+        F.count("*").alias("n_events"), F.sum("value").alias("total_value")
+    )
+
+
 def streaming_upsert_sink_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The keyed-upsert (MERGE) sink on the real engine: per-user
-    running totals in update mode land in a bucket-partitioned
-    parquet table via ``upsert_parquet_writer`` — every micro-batch
-    replaces its keys' rows — and the FINAL TABLE STATE is checked
-    against batch SQL. Proves the end-to-end exactly-once landing
-    path (stateful op -> update stream -> idempotent keyed sink),
-    not just the in-memory aggregate. Several part files and
+    running totals (``_user_totals``, a native update-mode aggregate)
+    land in a bucket-partitioned parquet table via
+    ``upsert_parquet_writer`` — every micro-batch replaces its keys'
+    rows — and the FINAL TABLE STATE is checked against batch SQL.
+    Proves the end-to-end exactly-once landing path (stateful
+    aggregate -> update stream -> idempotent keyed sink), not just
+    the in-memory aggregate. Several part files and
     ``maxFilesPerTrigger=1`` make several micro-batches, so batches
     after the first take the sink's merge path (affected buckets,
-    anti-join, dynamic overwrite)."""
-    from spark_flink_streaming_example_with_test_spark.streaming.ops import running_user_totals
+    anti-join, dynamic overwrite). Zero input rows write no table;
+    any other read failure propagates."""
     from spark_flink_streaming_example_with_test_spark.streaming.sinks import upsert_parquet_writer
 
     events = load_table(spark, sf_dir, "events").select("user_id", "value")
     with bounded_replay(spark, events.repartition(4)) as r:
         table_dir = r.dir("table")
         r.drain(
-            running_user_totals(r.stream(maxFilesPerTrigger=1))
+            _user_totals(r.stream(maxFilesPerTrigger=1))
             .writeStream.foreachBatch(
                 upsert_parquet_writer(table_dir, keys=["user_id"])
             )
@@ -666,7 +677,7 @@ def streaming_upsert_sink_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             # Materialize before the temp dirs disappear.
             rows = final.collect()
-        except Exception:
+        except AnalysisException:
             # Zero input rows -> no micro-batch ever wrote the table.
             rows = []
     return spark.createDataFrame(
@@ -743,7 +754,7 @@ def streaming_manifest_sink_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
                 .collect()
             )
-        except Exception:
+        except FileNotFoundError:
             rows = []  # zero input rows -> no manifest ever committed
     return spark.createDataFrame(
         rows, "event_type string, n long, sum_value double, n_users long"
@@ -788,7 +799,7 @@ def streaming_state_reader_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("key.window.end").alias("window_end"),
                 F.col("value.count").alias("cnt"),
             ).collect()
-        except Exception:
+        except AnalysisException:
             rows = []  # zero input rows -> no state was ever committed
     return spark.createDataFrame(
         rows,
@@ -1164,8 +1175,8 @@ def streaming_jdbc_merge_upsert_e2e(
 ) -> DataFrame:
     """Update-mode streaming aggregate landed in a relational store
     via server-side MERGE (streaming/sinks.py jdbc_merge_writer),
-    end to end on embedded Derby: the custom stateful running-totals
-    operator (applyInPandasWithState) emits per-user updates,
+    end to end on embedded Derby: the native running-totals
+    aggregate (``_user_totals``) emits per-user updates,
     ``maxFilesPerTrigger=1`` forces MULTIPLE micro-batches so the
     same user's row is genuinely UPDATED across merges (not just
     inserted once), and the final JDBC table must equal the batch
@@ -1174,7 +1185,6 @@ def streaming_jdbc_merge_upsert_e2e(
     append-only sink can't express (append of an update-mode
     aggregate duplicates keys).
     """
-    from spark_flink_streaming_example_with_test_spark.streaming.ops import running_user_totals
     from spark_flink_streaming_example_with_test_spark.streaming.sinks import jdbc_merge_writer
 
     events = load_table(spark, sf_dir, "events").select("user_id", "value")
@@ -1195,7 +1205,7 @@ def streaming_jdbc_merge_upsert_e2e(
         # guarantees >1 even at tiny scale).
         with bounded_replay(spark, events.repartition(4)) as r:
             r.drain(
-                running_user_totals(r.stream(maxFilesPerTrigger=1))
+                _user_totals(r.stream(maxFilesPerTrigger=1))
                 .writeStream.foreachBatch(writer)
                 .outputMode("update")
                 .start
@@ -1385,15 +1395,16 @@ FROM events
 def streaming_funnel_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end STREAMING first-touch funnel: the events table
     replayed as FOUR micro-batches (maxFilesPerTrigger=1 over a
-    4-file source) through the per-user journey state operator
-    (streaming/ops.py:streaming_funnel_state); each user's FINAL
-    state row (max version from the update-mode memory sink) yields
-    the strict view -> click -> purchase conversion counts — the
-    cross-event user-journey semantic the reference's windowed
-    counts (spark/spark_streaming.py:50-65) cannot express, proven
-    to converge to the batch answer across arbitrary batch splits
-    (min-timestamps commute). Oracle: the batch first-touch funnel
-    in plain SQL."""
+    4-file source) through the per-user journey state
+    (streaming/ops.py:streaming_funnel_state, a native update-mode
+    aggregate of three first-touch minimums and an event count);
+    each user's FINAL state row (max version from the update-mode
+    memory sink) yields the strict view -> click -> purchase
+    conversion counts — the cross-event user-journey semantic the
+    reference's windowed counts (spark/spark_streaming.py:50-65)
+    cannot express, proven to converge to the batch answer across
+    arbitrary batch splits (min-timestamps commute). Oracle: the
+    batch first-touch funnel in plain SQL."""
     from spark_flink_streaming_example_with_test_spark.streaming.ops import streaming_funnel_state
 
     ev = (

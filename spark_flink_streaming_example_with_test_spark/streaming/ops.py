@@ -1,12 +1,16 @@
 """Streaming-only operator surface: watermarked dedup, stream-stream
-interval join, and a custom stateful aggregate.
+interval join, the user-journey funnel state and the arbitrary-state
+operators.
 
 The reference's streaming coverage stops at watermark + tumbling
 window + count (spark/spark_streaming.py:64-65); these fill the
 "arbitrary stateful ops" and stream-join rows of the gap map
-(SURVEY.md §2.6). All three are pure DataFrame -> DataFrame wiring —
-state lives in Spark's state store (RocksDB provider at scale), so a
+(SURVEY.md §2.6). All are pure DataFrame -> DataFrame wiring — state
+lives in Spark's state store (RocksDB provider at scale), so a
 1000-executor cluster shards state by key exactly like any shuffle.
+State that is a min, a count or a sum stays a native aggregate;
+``applyInPandasWithState`` is kept for the gate-checked
+arbitrary-state form and for event-time timers.
 """
 
 from __future__ import annotations
@@ -202,65 +206,30 @@ def running_user_stats_tws(events: DataFrame) -> DataFrame:
     )
 
 
-FUNNEL_STATE_OUTPUT = (
-    "user_id long, t1 long, t2 long, t3 long, version long"
-)
-FUNNEL_STATE_SCHEMA = "t1 long, t2 long, t3 long, version long"
-
-_FUNNEL_STEP_COL = {"view": "t1", "click": "t2", "purchase": "t3"}
-
-
-def _funnel_state_fn(
-    key: tuple[Any, ...],
-    pdfs: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    t1, t2, t3, version = (
-        state.get if state.exists else (None, None, None, 0)
-    )
-    firsts = {"t1": t1, "t2": t2, "t3": t3}
-    for pdf in pdfs:
-        for step, col in _FUNNEL_STEP_COL.items():
-            us = pdf.loc[pdf["event_type"] == step, "us"]
-            if len(us):
-                m = int(us.min())
-                if firsts[col] is None or m < firsts[col]:
-                    firsts[col] = m
-    version += 1
-    state.update((firsts["t1"], firsts["t2"], firsts["t3"], version))
-    yield pd.DataFrame(
-        {
-            "user_id": [key[0]],
-            "t1": [firsts["t1"]],
-            "t2": [firsts["t2"]],
-            "t3": [firsts["t3"]],
-            "version": [version],
-        }
-    )
-
-
 def streaming_funnel_state(events: DataFrame) -> DataFrame:
     """Cross-event USER-JOURNEY state on a stream: per user, the
     first-touch frontier (first view / first click / first purchase
-    as epoch-micros longs) maintained incrementally across
-    micro-batches via applyInPandasWithState — the stateful form of
-    the batch first-touch funnel (measures.funnel_conversion_rates).
-    Minimum-timestamps are commutative across batches, so the state
-    converges to the batch answer regardless of arrival order; a
-    monotone per-user version counter lets the consumer select each
-    user's FINAL state row from an update-mode sink.
+    as epoch-micros longs) as a native update-mode aggregate — the
+    stateful form of the batch first-touch funnel
+    (measures.funnel_conversion_rates). Each step is a ``min`` and
+    ``version`` is the user's event count, so the state store keeps
+    four values per user and no row leaves the JVM. Minimums commute
+    across batches, so the state converges to the batch answer
+    regardless of arrival order; ``version`` grows strictly with each
+    update a user gets, so the consumer selects each user's FINAL
+    state row from an update-mode sink as its max-version row.
 
-    Scale: state is three nullable longs + a counter per user,
-    sharded by user_id in the state store (RocksDB at scale); Arrow
-    moves only each micro-batch's rows, never accumulated history.
     Input columns: user_id long, event_type string, us long.
     """
-    return events.groupBy("user_id").applyInPandasWithState(
-        _funnel_state_fn,
-        outputStructType=FUNNEL_STATE_OUTPUT,
-        stateStructType=FUNNEL_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+
+    def first(step: str):
+        return F.min(F.when(F.col("event_type") == step, F.col("us")))
+
+    return events.groupBy("user_id").agg(
+        first("view").alias("t1"),
+        first("click").alias("t2"),
+        first("purchase").alias("t3"),
+        F.count("*").alias("version"),
     )
 
 

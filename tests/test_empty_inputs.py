@@ -72,3 +72,38 @@ def test_cogroup_one_empty_side(spark, no_clicks_sf_dir):
     assert all(r.n_clicks == 0 for r in rows)
     assert all(r.n_purchases > 0 for r in rows)
     assert all(r.first_delay_sec is None for r in rows)
+
+
+@pytest.mark.parametrize(
+    "name, read",
+    [
+        ("streaming_upsert_sink_e2e", "parquet"),
+        ("streaming_manifest_sink_e2e", "json"),
+        ("streaming_state_reader_e2e", "load"),
+    ],
+)
+def test_replay_output_read_failure_propagates(spark, monkeypatch, name, read):
+    """Only a never-written replay output reads as zero rows: any other
+    failure reading it back must raise, not turn into an empty result
+    that shows up only as a row-count mismatch."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from spark_flink_streaming_example_with_test_spark.streaming.replay import Replay
+
+    drained = []
+    drain, original = Replay.drain, getattr(DataFrameReader, read)
+
+    def drain_then_arm(self, start):
+        out = drain(self, start)
+        drained.append(True)
+        return out
+
+    def failing_read(self, *args, **kwargs):
+        if drained:
+            raise RuntimeError("replay output unreadable")
+        return original(self, *args, **kwargs)
+
+    monkeypatch.setattr(Replay, "drain", drain_then_arm)
+    monkeypatch.setattr(DataFrameReader, read, failing_read)
+    with pytest.raises(RuntimeError, match="replay output unreadable"):
+        QUERIES[name].fn(spark, SF_DIR)

@@ -1,7 +1,7 @@
 """Micro-batch tests for the streaming-only operators: watermarked
 dedup, stream-stream interval join, applyInPandasWithState running
-totals. File sources stand in for Kafka (one file = one micro-batch
-via maxFilesPerTrigger)."""
+totals, the native funnel state. File sources stand in for Kafka (one
+file = one micro-batch via maxFilesPerTrigger)."""
 
 from __future__ import annotations
 
@@ -10,6 +10,7 @@ import os
 
 import pytest
 
+from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
     LongType,
@@ -19,10 +20,12 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from spark_flink_streaming_example_with_test_spark.plans.reference_queries import _user_totals
 from spark_flink_streaming_example_with_test_spark.streaming.ops import (
     dedup_within_watermark,
     interval_join_streams,
     running_user_totals,
+    streaming_funnel_state,
 )
 
 EVENT_SCHEMA = StructType(
@@ -273,13 +276,9 @@ def test_streaming_funnel_state_converges_across_batch_splits(spark, tmp_path):
     across micro-batches: user 1's click lands in batch 1, the
     earlier view only in batch 2 — the conversion flag flips from
     false to true, which only the final (max-version) state row may
-    decide. Also pins that multiple micro-batches really ran (the
-    version counter exceeds 1 for the split user)."""
+    decide. Also pins that the state spanned both micro-batches: the
+    split user gets one update row per batch."""
     import uuid
-
-    from pyspark.sql import functions as F
-
-    from spark_flink_streaming_example_with_test_spark.streaming.ops import streaming_funnel_state
 
     src = tmp_path / "funnel_src"
     src.mkdir()
@@ -310,8 +309,12 @@ def test_streaming_funnel_state_converges_across_batch_splits(spark, tmp_path):
     )
     try:
         q.processAllAvailable()
+        data_batches = [p for p in q.recentProgress if p["numInputRows"] > 0]
     finally:
         q.stop()
+    assert len(data_batches) == 2
+    u1_updates = spark.table(sink).filter("user_id = 1").collect()
+    assert sorted(r["version"] for r in u1_updates) == [1, 2]
     final = {
         r["user_id"]: r
         for r in spark.table(sink)
@@ -321,7 +324,6 @@ def test_streaming_funnel_state_converges_across_batch_splits(spark, tmp_path):
         .collect()
     }
     u1, u2 = final[1], final[2]
-    assert u1["version"] >= 2  # user 1's state spanned >= 2 batches
     assert (u1["t1"], u1["t2"], u1["t3"]) == (100, 200, None)
     assert u1["t2"] > u1["t1"]  # late view flipped the conversion
     assert (u2["t1"], u2["t2"], u2["t3"]) == (10, 20, 30)
@@ -386,3 +388,136 @@ def test_session_timeout_closes_by_gap_and_by_timer(spark, tmp_path):
     # u1's reopened session is captive (horizon above final watermark)
     assert (1, 4 * h) not in rows
     assert len(rows) == 2
+
+
+@pytest.mark.parametrize(
+    "build, native",
+    [
+        (
+            lambda s: streaming_funnel_state(
+                s.select("user_id", "event_type", F.unix_micros("ts").alias("us"))
+            ),
+            True,
+        ),
+        (_user_totals, True),
+        (running_user_totals, False),
+    ],
+    ids=["funnel", "user_totals", "running_user_totals"],
+)
+def test_algebraic_state_is_a_native_aggregate(spark, tmp_path, capsys, build, native):
+    """State that is a min, a count or a sum runs as Spark's native
+    streaming aggregate (StateStoreSave), not through
+    FlatMapGroupsInPandasWithState; the arbitrary-state form keeps
+    the pandas operator, which shows the probe tells them apart."""
+    src = tmp_path / "src"
+    src.mkdir()
+    _write_file(str(src), "f1.json", [
+        _line(1, 1, "2024-01-01 10:00:00", "view"),
+        _line(2, 1, "2024-01-01 10:00:01", "click"),
+    ])
+    q = (
+        build(_file_stream(spark, str(src)))
+        .writeStream.format("noop")
+        .outputMode("update")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+        capsys.readouterr()
+        q.explain()
+        plan = capsys.readouterr().out
+    finally:
+        q.stop()
+    assert ("StateStoreSave" in plan) is native
+    assert ("FlatMapGroupsInPandasWithState" in plan) is not native
+
+
+def test_streaming_funnel_state_survives_restart(spark, tmp_path):
+    """The native funnel state restarts from its checkpoint: four
+    one-file micro-batches, stopped after batch 2 and restarted under
+    a different session shuffle-partition count, give the same
+    per-user final rows as an uninterrupted run and as the batch
+    first-touch answer. The sink appends each batch to parquet via
+    foreachBatch (the memory sink cannot recover update mode)."""
+    from spark_flink_streaming_example_with_test_spark.streaming.sinks import (
+        idempotent_parquet_writer,
+    )
+
+    schema = "user_id long, event_type string, us long"
+    batches = [
+        [(1, "click", 200), (2, "view", 10), (3, "purchase", 50)],
+        [(1, "view", 100), (2, "click", 20), (3, "view", 5)],
+        [(2, "purchase", 30), (3, "click", 40), (4, "view", 7)],
+        [(1, "purchase", 300), (4, "click", 3), (1, "view", 150)],
+    ]
+
+    def write(src, i):
+        spark.createDataFrame(batches[i], schema).coalesce(1).write.parquet(
+            str(src / f"f{i}")
+        )
+
+    def run(src, out, ckpt):
+        q = (
+            streaming_funnel_state(
+                spark.readStream.schema(schema)
+                .option("maxFilesPerTrigger", 1)
+                .parquet(f"{src}/*")
+            )
+            .writeStream.foreachBatch(idempotent_parquet_writer(out))
+            .outputMode("update")
+            .option("checkpointLocation", ckpt)
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        return [
+            op["numShufflePartitions"]
+            for p in q.recentProgress
+            for op in p["stateOperators"]
+        ]
+
+    def final(out):
+        return {
+            r["user_id"]: (r["t1"], r["t2"], r["t3"], r["version"])
+            for r in spark.read.parquet(out)
+            .groupBy("user_id")
+            .agg(F.max(F.struct("version", "t1", "t2", "t3")).alias("s"))
+            .select("user_id", "s.*")
+            .collect()
+        }
+
+    whole, split = tmp_path / "whole", tmp_path / "split"
+    split_out, split_ckpt = str(tmp_path / "split_out"), str(tmp_path / "split_ckpt")
+    for i in range(4):
+        write(whole, i)
+    for i in range(2):
+        write(split, i)
+    conf = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(conf)
+    try:
+        spark.conf.set(conf, "2")
+        run(whole, str(tmp_path / "whole_out"), str(tmp_path / "whole_ckpt"))
+        first_parts = run(split, split_out, split_ckpt)
+        assert sorted(os.listdir(split_out)) == ["batch_id=0", "batch_id=1"]
+        for i in range(2, 4):
+            write(split, i)
+        spark.conf.set(conf, "3")
+        restart_parts = run(split, split_out, split_ckpt)
+    finally:
+        spark.conf.set(conf, prev)
+    # The checkpoint pins the state partitioning across the restart.
+    assert set(restart_parts) == set(first_parts) == {2}
+    assert sorted(os.listdir(split_out)) == [f"batch_id={i}" for i in range(4)]
+
+    expected = {}
+    for rows in batches:
+        for uid, step, us in rows:
+            t = list(expected.get(uid, (None, None, None, 0)))
+            col = ["view", "click", "purchase"].index(step)
+            t[col] = us if t[col] is None else min(t[col], us)
+            t[3] += 1
+            expected[uid] = tuple(t)
+    assert final(split_out) == final(str(tmp_path / "whole_out")) == expected
