@@ -46,6 +46,7 @@ from spark_flink_streaming_example_with_test_spark.functions.hashing import (
     md5_nibble_sql,
 )
 from spark_flink_streaming_example_with_test_spark.sources.tables import load_table
+from spark_flink_streaming_example_with_test_spark.streaming.ops import funnel_step_flags
 
 
 # ---------------------------------------------------------------------
@@ -2024,22 +2025,7 @@ def funnel_conversion_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min(F.when(F.col("event_type") == "purchase", F.col("ts"))).alias("t3"),
         )
     )
-    flags = firsts.select(
-        F.col("t1").isNotNull().cast("int").alias("r1"),
-        (
-            F.col("t1").isNotNull()
-            & F.col("t2").isNotNull()
-            & (F.col("t2") > F.col("t1"))
-        ).cast("int").alias("r2"),
-        (
-            F.col("t1").isNotNull()
-            & F.col("t2").isNotNull()
-            & (F.col("t2") > F.col("t1"))
-            & F.col("t3").isNotNull()
-            & (F.col("t3") > F.col("t2"))
-        ).cast("int").alias("r3"),
-    )
-    agg = flags.agg(
+    agg = funnel_step_flags(firsts).agg(
         F.sum("r1").cast("decimal(38,0)").alias("n1"),
         F.sum("r2").cast("decimal(38,0)").alias("n2"),
         F.sum("r3").cast("decimal(38,0)").alias("n3"),

@@ -554,34 +554,6 @@ def streaming_sliding_window_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         return r.memory(out, "complete")
 
 
-def streaming_tws_user_stats_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark 4 transformWithStateInPandas (StatefulProcessor + typed
-    ValueState) executed on the real micro-batch engine: per-user
-    running (count, sum, max) accumulated in the state store over a
-    bounded replay of the events table, final state checked against
-    plain batch SQL — the modern arbitrary-stateful API proven by
-    value, alongside the applyInPandasWithState twin
-    (``streaming_running_user_totals``)."""
-    from spark_flink_streaming_example_with_test_spark.streaming.ops import running_user_stats_tws
-
-    events = load_table(spark, sf_dir, "events").select("user_id", "value")
-    with bounded_replay(spark, events) as r:
-        return r.memory(running_user_stats_tws(r.stream()), "update").select(
-            "user_id",
-            "n_events",
-            F.round("total_value", 4).alias("total_value"),
-            F.round("max_value", 4).alias("max_value"),
-        )
-
-
-STREAMING_TWS_ORACLE = """
-SELECT user_id, COUNT(*) AS n_events,
-       ROUND(SUM(value), 4) AS total_value,
-       ROUND(MAX(value), 4) AS max_value
-FROM events GROUP BY user_id
-"""
-
-
 def streaming_outer_interval_join_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream LEFT OUTER interval join on the real engine:
     purchases joined to the same user's clicks within the following
@@ -643,37 +615,42 @@ def _user_totals(events: DataFrame) -> DataFrame:
 
 
 def streaming_upsert_sink_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The keyed-upsert (MERGE) sink on the real engine: per-user
-    running totals (``_user_totals``, a native update-mode aggregate)
-    land in a bucket-partitioned parquet table via
-    ``upsert_parquet_writer`` — every micro-batch replaces its keys'
-    rows — and the FINAL TABLE STATE is checked against batch SQL.
-    Proves the end-to-end exactly-once landing path (stateful
-    aggregate -> update stream -> idempotent keyed sink), not just
-    the in-memory aggregate. Several part files and
-    ``maxFilesPerTrigger=1`` make several micro-batches, so batches
-    after the first take the sink's merge path (affected buckets,
-    anti-join, dynamic overwrite). Zero input rows write no table;
-    any other read failure propagates."""
-    from spark_flink_streaming_example_with_test_spark.streaming.sinks import upsert_parquet_writer
+    """An update-mode aggregate landed exactly-once in parquet, on the
+    real engine: per-user running totals (``_user_totals``, a native
+    update-mode aggregate) land through ``parquet_batch_writer``, one
+    overwritten ``batch_id=N`` directory per micro-batch, and each
+    user's current row is read back as its row with the largest
+    ``batch_id`` (merge-on-read). That FINAL TABLE STATE is checked
+    against batch SQL: stateful aggregate -> update stream ->
+    idempotent sink, not just the in-memory aggregate. Several part
+    files and ``maxFilesPerTrigger=1`` make several micro-batches, so
+    most users have more than one row to choose from. Zero input rows
+    write no table; any other read failure propagates."""
+    from spark_flink_streaming_example_with_test_spark.streaming.sinks import parquet_batch_writer
 
     events = load_table(spark, sf_dir, "events").select("user_id", "value")
     with bounded_replay(spark, events.repartition(4)) as r:
         table_dir = r.dir("table")
         r.drain(
             _user_totals(r.stream(maxFilesPerTrigger=1))
-            .writeStream.foreachBatch(
-                upsert_parquet_writer(table_dir, keys=["user_id"])
-            )
+            .writeStream.foreachBatch(parquet_batch_writer(table_dir))
             .outputMode("update")
             .option("checkpointLocation", r.dir("ckpt"))
             .start
         )
         try:
-            final = spark.read.parquet(table_dir).select(
-                "user_id",
-                "n_events",
-                F.round("total_value", 4).alias("total_value"),
+            final = (
+                spark.read.parquet(table_dir)
+                .groupBy("user_id")
+                .agg(
+                    F.max_by(F.struct("n_events", "total_value"), "batch_id")
+                    .alias("s")
+                )
+                .select(
+                    "user_id",
+                    "s.n_events",
+                    F.round("s.total_value", 4).alias("total_value"),
+                )
             )
             # Materialize before the temp dirs disappear.
             rows = final.collect()
@@ -1405,7 +1382,10 @@ def streaming_funnel_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     cannot express, proven to converge to the batch answer across
     arbitrary batch splits (min-timestamps commute). Oracle: the
     batch first-touch funnel in plain SQL."""
-    from spark_flink_streaming_example_with_test_spark.streaming.ops import streaming_funnel_state
+    from spark_flink_streaming_example_with_test_spark.streaming.ops import (
+        funnel_step_flags,
+        streaming_funnel_state,
+    )
 
     ev = (
         load_table(spark, sf_dir, "events")
@@ -1426,22 +1406,7 @@ def streaming_funnel_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.max(F.struct("version", "t1", "t2", "t3")).alias("s"))
             .select("s.t1", "s.t2", "s.t3")
         )
-        flags = final.select(
-            F.col("t1").isNotNull().cast("int").alias("r1"),
-            (
-                F.col("t1").isNotNull()
-                & F.col("t2").isNotNull()
-                & (F.col("t2") > F.col("t1"))
-            ).cast("int").alias("r2"),
-            (
-                F.col("t1").isNotNull()
-                & F.col("t2").isNotNull()
-                & (F.col("t2") > F.col("t1"))
-                & F.col("t3").isNotNull()
-                & (F.col("t3") > F.col("t2"))
-            ).cast("int").alias("r3"),
-        )
-        return flags.agg(
+        return funnel_step_flags(final).agg(
             F.sum("r1").alias("n1"),
             F.sum("r2").alias("n2"),
             F.sum("r3").alias("n3"),

@@ -84,7 +84,7 @@ def start_pipeline(
     checkpoint_dir: str,
     output_mode: str = "append",
     query_name: str | None = None,
-    processing_time: str | None = None,
+    trigger: dict[str, str | bool] | None = None,
 ) -> StreamingQuery:
     """Wire source -> transform -> foreachBatch sink and start.
 
@@ -93,11 +93,17 @@ def start_pipeline(
     beyond the watermark are dropped from state (reference:
     spark/spark_streaming.py:81-92 and README.md:25).
 
-    ``processing_time`` is the latency/throughput knob — the
-    micro-batch analog of the reference's 20 ms JDBC flush interval
-    (reference: UserActivityFilterAgg.java:130-133): e.g.
-    ``"5 seconds"`` caps sink-write frequency and amortizes per-batch
-    overhead; None (default) re-triggers as fast as data arrives.
+    ``trigger`` is passed to ``.trigger(**trigger)``; None (default)
+    re-triggers as fast as data arrives.
+    ``{"processingTime": "5 seconds"}`` is the latency/throughput
+    knob, the micro-batch analog of the reference's 20 ms JDBC flush
+    interval (reference: UserActivityFilterAgg.java:130-133): it caps
+    sink-write frequency and amortizes per-batch overhead.
+    ``{"availableNow": True}`` is a bounded backfill: it processes
+    everything currently available (in rate-limited micro-batches,
+    honoring source options like maxFilesPerTrigger) and then stops,
+    on the same checkpoint as the continuous pipeline so the two can
+    alternate.
     """
     writer = (
         transform(source)
@@ -105,8 +111,8 @@ def start_pipeline(
         .outputMode(output_mode)
         .option("checkpointLocation", checkpoint_dir)
     )
-    if processing_time:
-        writer = writer.trigger(processingTime=processing_time)
+    if trigger:
+        writer = writer.trigger(**trigger)
     if query_name:
         writer = writer.queryName(query_name)
     return writer.start()
@@ -134,26 +140,3 @@ def start_split_pipelines(
         )
         for name, transform, sink in branches
     ]
-
-
-def start_backfill(
-    source: DataFrame,
-    transform: Transform,
-    sink: BatchWriter,
-    checkpoint_dir: str,
-    output_mode: str = "append",
-) -> StreamingQuery:
-    """Bounded catch-up run: ``Trigger.AvailableNow`` processes
-    everything currently available (in rate-limited micro-batches,
-    honoring source options like maxFilesPerTrigger) and then stops —
-    the modern replacement for ``trigger(once=True)`` backfills, with
-    the same checkpoint as the continuous pipeline so the two can
-    alternate."""
-    return (
-        transform(source)
-        .writeStream.foreachBatch(sink)
-        .outputMode(output_mode)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )

@@ -147,65 +147,6 @@ def running_user_totals(events: DataFrame) -> DataFrame:
     )
 
 
-TWS_OUTPUT = "user_id long, n_events long, total_value double, max_value double"
-
-
-def running_user_stats_tws(events: DataFrame) -> DataFrame:
-    """The same custom-stateful shape on Spark 4's
-    ``transformWithStateInPandas`` (StatefulProcessor + typed
-    ValueState) — the successor API to applyInPandasWithState, with
-    composable state variables, timers, and TTL. Keeping both forms
-    covers the old and new arbitrary-stateful surfaces; at scale the
-    execution shape is identical (state sharded by the group key in
-    the RocksDB state store, Arrow-batched transfer of each
-    micro-batch, never of accumulated history).
-
-    Runtime requirement: the TWS streaming runner imports
-    ``google.protobuf`` at query start; in environments without it
-    (this sandbox) the query fails at .start() — the
-    applyInPandasWithState twin above has no such dependency and is
-    the oracle-gated form.
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class RunningStats(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState(
-                "stats", "n long, total double, vmax double"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            prev = self._state.get()
-            n, total, vmax = prev if prev is not None else (0, 0.0, None)
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-                batch_max = float(pdf["value"].max())
-                vmax = batch_max if vmax is None else max(vmax, batch_max)
-            self._state.update((n, total, vmax))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "total_value": [total],
-                    "max_value": [vmax],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=RunningStats(),
-        outputStructType=TWS_OUTPUT,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
 def streaming_funnel_state(events: DataFrame) -> DataFrame:
     """Cross-event USER-JOURNEY state on a stream: per user, the
     first-touch frontier (first view / first click / first purchase
@@ -230,6 +171,23 @@ def streaming_funnel_state(events: DataFrame) -> DataFrame:
         first("click").alias("t2"),
         first("purchase").alias("t3"),
         F.count("*").alias("version"),
+    )
+
+
+def funnel_step_flags(firsts: DataFrame) -> DataFrame:
+    """Strict first-touch view -> click -> purchase flags from per-user
+    first-touch columns ``t1``, ``t2``, ``t3`` (timestamps or longs;
+    NULL = step never reached): ``r1``, ``r2``, ``r3`` are 1 where the
+    user reached that step after every earlier one, strictly in time,
+    and 0 otherwise."""
+    t1, t2, t3 = F.col("t1"), F.col("t2"), F.col("t3")
+    r1 = t1.isNotNull()
+    r2 = r1 & t2.isNotNull() & (t2 > t1)
+    r3 = r2 & t3.isNotNull() & (t3 > t2)
+    return firsts.select(
+        r1.cast("int").alias("r1"),
+        r2.cast("int").alias("r2"),
+        r3.cast("int").alias("r3"),
     )
 
 

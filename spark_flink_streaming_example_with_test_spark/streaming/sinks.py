@@ -8,6 +8,19 @@ Here the count rides on the save itself: the batch is written once
 through ``df.observe(Observation, count)``, and the log line reads
 the observed count after the write returns. One micro-batch, one
 execution of its plan.
+
+Delivery guarantees. A micro-batch re-runs when the query crashes
+after the sink wrote it but before its commit-log entry landed;
+what the re-run leaves behind depends on the writer:
+
+- ``parquet_batch_writer``: exactly-once. The batch overwrites its
+  own ``batch_id=N`` directory. An update-mode aggregate lands as a
+  log of per-batch rows; a key's current row is its row with the
+  largest ``batch_id`` (merge-on-read).
+- ``jdbc_merge_writer``: exactly-once table state. The re-run merges
+  the same rows on the same keys.
+- ``jdbc_batch_writer``: at-least-once. The re-run appends its rows
+  again, as the reference's sink does.
 """
 
 from __future__ import annotations
@@ -15,7 +28,6 @@ from __future__ import annotations
 import logging
 from collections.abc import Callable
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
@@ -69,114 +81,19 @@ def jdbc_batch_writer(
 
 
 def parquet_batch_writer(path: str) -> BatchWriter:
-    """Append each micro-batch to a parquet directory — the
-    file-based analog used in tests and batch backfills. One write
-    per micro-batch; its row count is logged from that write."""
-
-    def write(df: DataFrame) -> None:
-        df.write.mode("append").parquet(path)
-
-    return _counted_batch_sink(write)
-
-
-def idempotent_parquet_writer(path: str) -> BatchWriter:
-    """Exactly-once file sink via foreachBatch: each micro-batch
-    writes to ``path/batch_id=N`` with overwrite. After a crash
-    between "batch written" and "offsets committed", the replayed
-    batch overwrites its own directory instead of appending
-    duplicates — idempotent replay, the standard foreachBatch
-    exactly-once recipe. Readers just scan ``path`` (batch_id is a
-    partition column)."""
+    """Write each micro-batch to ``path/batch_id=N``, overwriting that
+    directory: a batch replayed after a crash between its write and
+    its commit replaces its own rows, so the sink is exactly-once.
+    Readers scan ``path``, where ``batch_id`` is a partition column.
+    One write per micro-batch; its row count is logged from that
+    write."""
 
     def sink(df: DataFrame, batch_id: int) -> None:
-        df.write.mode("overwrite").parquet(f"{path}/batch_id={batch_id}")
+        _counted_batch_sink(
+            lambda d: d.write.mode("overwrite").parquet(f"{path}/batch_id={batch_id}")
+        )(df, batch_id)
 
     return sink
-
-
-def upsert_parquet_writer(
-    path: str,
-    keys: list[str],
-    n_buckets: int = 16,
-) -> BatchWriter:
-    """Keyed UPSERT (MERGE) into a bucket-partitioned parquet table —
-    the foreachBatch recipe for landing an update-mode streaming
-    aggregate in a plain file store (no lakehouse table format
-    needed): new keys insert, existing keys are replaced by the
-    batch's row.
-
-    Mechanics per micro-batch:
-    - the deduplicated, bucketed batch is EAGERLY checkpointed first,
-      so the micro-batch plan upstream of the sink runs once, however
-      many times the merge below reads the batch;
-    - the table is hash-partitioned on ``pmod(xxhash64(keys), n)``
-      so an upsert rewrites only the buckets its keys land in, not
-      the whole table (``partitionOverwriteMode=dynamic``, set on this
-      write only: the session conf is shared with other queries);
-    - surviving old rows = old rows of affected buckets anti-joined
-      on the key, eagerly checkpointed before the overwrite —
-      otherwise the lazy scan of the old files would race the
-      overwrite of those same files (the classic self-overwrite
-      trap); merged = survivors + batch;
-    - a replayed batch (crash between write and offset commit)
-      re-produces the identical merged content — the upsert is
-      idempotent, giving exactly-once table state;
-    - both checkpoints are released once the overwrite returns, so
-      block-manager storage does not grow batch after batch.
-
-    At scale, bucket count spreads rewrite IO; the anti-join is
-    per-affected-bucket, not per-table. Batches with duplicate keys
-    keep one arbitrary row (update-mode aggregates emit one row per
-    key, so this only matters for malformed inputs).
-    """
-
-    def sink(df: DataFrame, batch_id: int) -> None:
-        batch = (
-            df.dropDuplicates(keys)
-            .withColumn("__bucket", F.pmod(F.xxhash64(*keys), n_buckets))
-            .localCheckpoint(eager=True)
-        )
-        checkpoints = [batch]
-        try:
-            try:
-                old = df.sparkSession.read.parquet(path)
-            except AnalysisException:  # no table yet: the batch is the table
-                merged = batch
-            else:
-                affected = [
-                    r["__bucket"]
-                    for r in batch.select("__bucket").distinct().collect()
-                ]
-                survivors = (
-                    old.filter(old["__bucket"].isin(affected))
-                    .join(batch.select(*keys), keys, "left_anti")
-                    .localCheckpoint(eager=True)
-                )
-                checkpoints.append(survivors)
-                merged = survivors.unionByName(batch)
-            (
-                merged.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("__bucket")
-                .parquet(path)
-            )
-        finally:
-            for frame in checkpoints:
-                _release_local_checkpoint(frame)
-
-    return sink
-
-
-def _release_local_checkpoint(frame: DataFrame) -> None:
-    """Free a local checkpoint's blocks now, not at the next driver GC.
-    ``DataFrame.unpersist`` does not reach them: they belong to the RDD
-    under the frame's ``LogicalRDD`` plan, a Spark internal. Where that
-    is out of reach (no JVM bridge, another plan shape), Spark's
-    ContextCleaner still frees them once the frame is collected."""
-    try:
-        frame._jdf.queryExecution().logical().rdd().unpersist(False)
-    except Exception:
-        pass
 
 
 def jdbc_merge_writer(

@@ -1,5 +1,5 @@
 """Regression tests for the round-2..4 hygiene backlog (VERDICT
-"What's wrong" #4): session-conf leakage, name clobbering, comparator
+"What's wrong" #4): name clobbering, comparator
 NaN handling, checkpoint-aware stream-reader restart, redundant
 repartition shuffles, and the centroid dimension precondition."""
 
@@ -8,35 +8,6 @@ from __future__ import annotations
 from decimal import Decimal
 
 import pytest
-from pyspark.sql import functions as F
-
-
-def test_upsert_writer_restores_overwrite_mode(spark, tmp_path):
-    """(a) upsert_parquet_writer must not leak
-    partitionOverwriteMode=dynamic into the session, and must still
-    overwrite dynamically under a static session: the batch rewrites
-    only the bucket its keys land in."""
-    from spark_flink_streaming_example_with_test_spark.streaming.sinks import upsert_parquet_writer
-
-    key = "spark.sql.sources.partitionOverwriteMode"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, "static")
-    try:
-        out = str(tmp_path / "t")
-        sink = upsert_parquet_writer(out, keys=["k"], n_buckets=2)
-        df = spark.createDataFrame([(1, "a"), (2, "b")], ["k", "v"])
-        sink(df, 0)
-        assert spark.conf.get(key).lower() == "static"
-        # Keys 1 and 2 land in different buckets.
-        buckets = {r.k: r["__bucket"] for r in spark.read.parquet(out).collect()}
-        assert buckets[1] != buckets[2]
-        # Second batch exercises the merge path (table exists).
-        sink(spark.createDataFrame([(1, "a2")], ["k", "v"]), 1)
-        assert spark.conf.get(key).lower() == "static"
-        table = {r.k: r.v for r in spark.read.parquet(out).collect()}
-        assert table == {1: "a2", 2: "b"}
-    finally:
-        spark.conf.set(key, prev)
 
 
 def test_chunk_udtf_calls_do_not_clobber(spark):

@@ -177,7 +177,7 @@ def test_checkpoint_restart_no_duplicates(spark, tmp_path):
 
 
 def test_pipeline_trigger_processing_time(spark, tmp_path):
-    """The processing_time knob (micro-batch analog of the
+    """A processingTime trigger (micro-batch analog of the
     reference's 20 ms JDBC flush interval) is actually wired into
     the writer: a valid interval runs end to end, an invalid one is
     rejected at start — proving the option reaches .trigger() rather
@@ -197,7 +197,7 @@ def test_pipeline_trigger_processing_time(spark, tmp_path):
         flagship_pipeline,
         collect,
         checkpoint_dir=str(tmp_path / "ckpt_trig"),
-        processing_time="100 milliseconds",
+        trigger={"processingTime": "100 milliseconds"},
     )
     try:
         _write_file(str(src), "f1.json", [
@@ -222,19 +222,32 @@ def test_pipeline_trigger_processing_time(spark, tmp_path):
             flagship_pipeline,
             collect,
             checkpoint_dir=str(tmp_path / "ckpt_trig2"),
-            processing_time="not-a-duration",
+            trigger={"processingTime": "not-a-duration"},
         )
 
 
-def test_upsert_sink_keyed_merge(spark, tmp_path):
-    """upsert_parquet_writer lands an update-mode aggregate as a
-    keyed table: second batch replaces existing keys and inserts new
-    ones; replaying a batch leaves the table unchanged (idempotent
-    exactly-once state)."""
-    from spark_flink_streaming_example_with_test_spark.streaming.sinks import upsert_parquet_writer
+def _current_rows(spark, path: str) -> dict:
+    """Merge-on-read of an update-mode log written by
+    parquet_batch_writer: user_id -> the other columns of that user's
+    row with the largest batch_id."""
+    log = spark.read.parquet(path)
+    cols = [c for c in log.columns if c not in ("user_id", "batch_id")]
+    return {
+        r.user_id: tuple(r.s)
+        for r in log.groupBy("user_id")
+        .agg(F.max_by(F.struct(*cols), "batch_id").alias("s"))
+        .collect()
+    }
 
+
+def test_upsert_sink_keyed_merge(spark, tmp_path):
+    """An update-mode aggregate lands through parquet_batch_writer as
+    a keyed table, read as each key's latest row: the second batch
+    replaces existing keys and inserts new ones; replaying a batch
+    leaves the table and its row count unchanged (idempotent
+    exactly-once state)."""
     out = str(tmp_path / "upsert_out")
-    sink = upsert_parquet_writer(out, keys=["user_id"], n_buckets=4)
+    sink = parquet_batch_writer(out)
 
     b0 = spark.createDataFrame(
         [(1, 10.0), (2, 20.0)], "user_id long, total double"
@@ -245,24 +258,18 @@ def test_upsert_sink_keyed_merge(spark, tmp_path):
     )
     sink(b1, 1)
 
-    def table():
-        return {
-            r.user_id: r.total
-            for r in spark.read.parquet(out).select("user_id", "total").collect()
-        }
-
-    assert table() == {1: 10.0, 2: 25.0, 3: 30.0}
+    expect = {1: (10.0,), 2: (25.0,), 3: (30.0,)}
+    assert _current_rows(spark, out) == expect
     sink(b1, 1)  # crash-replay of the same batch
-    assert table() == {1: 10.0, 2: 25.0, 3: 30.0}
+    assert _current_rows(spark, out) == expect
+    assert spark.read.parquet(out).count() == 4
 
 
 def test_upsert_sink_end_to_end_stream(spark, tmp_path):
-    """Full streaming path: update-mode running totals land via the
-    upsert sink; the final table equals the batch aggregate."""
-    import pyspark.sql.functions as F
-
+    """Full streaming path: update-mode running totals land via
+    parquet_batch_writer; each user's latest row equals the batch
+    aggregate."""
     from spark_flink_streaming_example_with_test_spark.streaming.ops import running_user_totals
-    from spark_flink_streaming_example_with_test_spark.streaming.sinks import upsert_parquet_writer
 
     src = str(tmp_path / "upsert_src")
     out = str(tmp_path / "upsert_table")
@@ -273,7 +280,7 @@ def test_upsert_sink_end_to_end_stream(spark, tmp_path):
     stream = spark.readStream.schema("user_id long, value double").parquet(src)
     q = (
         running_user_totals(stream)
-        .writeStream.foreachBatch(upsert_parquet_writer(out, keys=["user_id"]))
+        .writeStream.foreachBatch(parquet_batch_writer(out))
         .outputMode("update")
         .option("checkpointLocation", str(tmp_path / "upsert_ckpt"))
         .start()
@@ -283,19 +290,13 @@ def test_upsert_sink_end_to_end_stream(spark, tmp_path):
     finally:
         q.stop()
 
-    got = {
-        r.user_id: (r.n_events, r.total_value)
-        for r in spark.read.parquet(out)
-        .select("user_id", "n_events", "total_value")
-        .collect()
-    }
     expect = {
         r.user_id: (r.n, r.total)
         for r in data.groupBy("user_id")
         .agg(F.count("*").alias("n"), F.sum("value").alias("total"))
         .collect()
     }
-    assert got == expect
+    assert _current_rows(spark, out) == expect
 
 
 SINKS_LOGGER = "spark_flink_streaming_example_with_test_spark.streaming.sinks"
@@ -415,12 +416,10 @@ def test_parquet_batch_writer_logs_each_batch(spark, tmp_path, caplog):
 
 
 def test_upsert_sink_runs_upstream_once_per_row(spark, tmp_path):
-    """upsert_parquet_writer executes the micro-batch plan once: a UDF
-    placed above the streaming aggregate runs once per output row,
-    also once the table exists and batches merge into it."""
+    """parquet_batch_writer executes the micro-batch plan once: a UDF
+    placed above an update-mode streaming aggregate runs once per
+    output row, in every batch."""
     from pyspark.sql.types import DoubleType
-
-    from spark_flink_streaming_example_with_test_spark.streaming.sinks import upsert_parquet_writer
 
     src = tmp_path / "src"
     src.mkdir()
@@ -445,7 +444,7 @@ def test_upsert_sink_runs_upstream_once_per_row(spark, tmp_path):
         F.sum("value").alias("total")
     ).withColumn("total", counted_udf("total"))
     query = (
-        totals.writeStream.foreachBatch(upsert_parquet_writer(out, keys=["user_id"]))
+        totals.writeStream.foreachBatch(parquet_batch_writer(out))
         .outputMode("update")
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .start()
@@ -457,10 +456,88 @@ def test_upsert_sink_runs_upstream_once_per_row(spark, tmp_path):
         query.stop()
 
     assert len(batches) == 4
-    table = {r.user_id: r.total for r in spark.read.parquet(out).collect()}
-    assert table == {u: 6.0 for u in range(10)}
+    assert _current_rows(spark, out) == {u: (6.0,) for u in range(10)}
     # 4 batches x 10 updated users.
     assert calls.value == 40
+
+
+def _crash_replay(spark, tmp_path, build, files: list[list[str]], k: int):
+    """Drive ``build(stream)`` into parquet_batch_writer, one JSON file
+    per micro-batch: run batches 0..k, stop, then delete ``commits/k``
+    and its ``.k.crc`` sidecar, as a crash between batch k's sink write
+    and its commit leaves the checkpoint (with the sidecar left behind
+    the restart refuses to run). Restart on the same checkpoint with
+    the remaining files and drain. Returns the output path and the
+    restarted query's first batch id."""
+    src, out, ckpt = tmp_path / "src", str(tmp_path / "out"), tmp_path / "ckpt"
+    src.mkdir()
+
+    def run():
+        stream = (
+            spark.readStream.schema("user_id long, value double")
+            .option("maxFilesPerTrigger", 1)
+            .json(str(src))
+        )
+        query = (
+            build(stream)
+            .writeStream.foreachBatch(parquet_batch_writer(out))
+            .outputMode("update")
+            .option("checkpointLocation", str(ckpt))
+            .start()
+        )
+        try:
+            _process_all_available(query)
+            return [p["batchId"] for p in _executed_batches(query)]
+        finally:
+            query.stop()
+
+    for i in range(k + 1):
+        _write_file(str(src), f"f{i}.json", files[i])
+    assert run() == list(range(k + 1))
+    (ckpt / "commits" / str(k)).unlink()
+    (ckpt / "commits" / f".{k}.crc").unlink()
+    for i in range(k + 1, len(files)):
+        _write_file(str(src), f"f{i}.json", files[i])
+    return out, run()[0]
+
+
+_CRASH_FILES = [
+    [json.dumps({"user_id": u, "value": float(10 * b + u)}) for u in users]
+    for b, users in enumerate([[1, 2, 3], [2, 3, 4], [1, 4], [3, 5, 6]])
+]
+
+
+def test_parquet_sink_crash_replay_lands_rows_once(spark, tmp_path):
+    """A batch re-run after a crash between its sink write and its
+    commit replaces its own output: a stateless passthrough lands
+    every input row exactly once."""
+    out, first = _crash_replay(spark, tmp_path, lambda s: s, _CRASH_FILES, k=1)
+    assert first == 1  # the restart re-ran the uncommitted batch
+    rows = sorted(
+        (r.user_id, r.value) for r in spark.read.parquet(out).collect()
+    )
+    expect = sorted(
+        (r["user_id"], r["value"])
+        for f in _CRASH_FILES
+        for r in map(json.loads, f)
+    )
+    assert rows == expect
+
+
+def test_parquet_sink_crash_replay_update_totals(spark, tmp_path):
+    """The same crash under update-mode running totals: each user's
+    row with the largest batch_id equals the batch aggregate."""
+    from spark_flink_streaming_example_with_test_spark.plans.reference_queries import (
+        _user_totals,
+    )
+
+    out, first = _crash_replay(spark, tmp_path, _user_totals, _CRASH_FILES, k=2)
+    assert first == 2
+    expect: dict[int, tuple[int, float]] = {}
+    for r in (json.loads(line) for f in _CRASH_FILES for line in f):
+        n, total = expect.get(r["user_id"], (0, 0.0))
+        expect[r["user_id"]] = (n + 1, total + r["value"])
+    assert _current_rows(spark, out) == expect
 
 
 def test_state_metadata_reader_describes_operator(spark, tmp_path):
@@ -567,40 +644,10 @@ def test_chained_windows_multibatch_matches_single_batch(spark, tmp_path):
     assert multi == single
 
 
-def test_upsert_sink_releases_local_checkpoints(spark, tmp_path):
-    """upsert_parquet_writer frees each batch's local checkpoints once
-    its overwrite returns: no batch leaves blocks in the block manager,
-    where they used to pile up until a driver GC."""
-    from spark_flink_streaming_example_with_test_spark.streaming.sinks import upsert_parquet_writer
-
-    sc = spark.sparkContext._jsc.sc()
-
-    def stored() -> set[int]:
-        """Ids of the RDDs holding blocks (earlier tests' may be freed
-        meanwhile, so the check is that no new one stays)."""
-        return {i.id() for i in sc.getRDDStorageInfo()}
-
-    out = str(tmp_path / "table")
-    sink = upsert_parquet_writer(out, keys=["user_id"], n_buckets=4)
-    before = stored()
-    for b in range(6):
-        # Half of each batch's keys were in the previous one, so every
-        # batch after the first merges (survivors checkpoint included).
-        sink(
-            spark.range(b * 500, b * 500 + 1000).selectExpr(
-                "id AS user_id", f"CAST({b} AS double) AS total"
-            ),
-            b,
-        )
-        assert stored() <= before, f"storage grew after batch {b}"
-    table = spark.read.parquet(out)
-    assert table.count() == 3500
-    assert table.filter("user_id >= 3000").agg(F.min("total")).first()[0] == 5.0
-
-
 def test_streaming_upsert_sink_e2e_replays_several_batches(spark, sf_dir):
     """The catalog's upsert-sink replay runs as several micro-batches,
-    so its oracle check reaches the sink's merge path."""
+    so its oracle check reaches the merge-on-read choice between a
+    user's rows."""
     from pyspark.sql.streaming import StreamingQueryListener
 
     from spark_flink_streaming_example_with_test_spark.plans.reference_queries import (
