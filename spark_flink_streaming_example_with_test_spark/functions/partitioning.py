@@ -5,7 +5,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def ensure_min_partitions(df: DataFrame, target: int | None = None) -> DataFrame:
+def ensure_min_partitions(df: DataFrame) -> DataFrame:
     """Repartition iff the input scan is narrower than the session's
     parallelism.
 
@@ -34,7 +34,7 @@ def ensure_min_partitions(df: DataFrame, target: int | None = None) -> DataFrame
     """
     if df.isStreaming:
         return df
-    target = target or df.sparkSession.sparkContext.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     try:
         n_splits = max(len(df.inputFiles()), 1)
     except Exception:

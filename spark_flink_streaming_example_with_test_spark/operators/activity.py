@@ -121,9 +121,8 @@ def split_by_event_types(
     """
     keep_lower = [k.lower() for k in keep]
     col = F.col(column)
-    matching = df.filter(col.isNotNull() & F.lower(col).isin(keep_lower))
     rest = df.filter(col.isNull() | ~F.lower(col).isin(keep_lower))
-    return matching, rest
+    return filter_event_types(df, keep, column), rest
 
 
 def windowed_counts(

@@ -76,27 +76,6 @@ def fingerprint(text: Column | str) -> Column:
     return F.md5(F.col(text) if isinstance(text, str) else text)
 
 
-def word_ngrams(text: Column | str, n: int = 3) -> Column:
-    """Distinct word n-gram (shingle) set as an array column —
-    transform-over-sequence with 1-based element_at, pure Catalyst
-    expressions (no UDF). Documents shorter than ``n`` tokens yield
-    an empty set."""
-    col = F.col(text) if isinstance(text, str) else text
-    toks = tokenize(F.lower(col))
-
-    def gram_at(i: Column) -> Column:
-        return F.concat_ws(
-            " ", *[F.element_at(toks, i + j + 1) for j in range(n)]
-        )
-
-    grams = F.array_distinct(
-        F.transform(F.sequence(F.lit(0), F.size(toks) - n), gram_at)
-    )
-    return F.when(F.size(toks) >= n, grams).otherwise(
-        F.array().cast("array<string>")
-    )
-
-
 #: BPE-ish pre-tokenization pattern (GPT-2 style, simplified for
 #: cross-engine portability): word pieces with optional leading
 #: space, digit runs, punctuation runs.

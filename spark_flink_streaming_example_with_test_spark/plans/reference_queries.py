@@ -433,10 +433,7 @@ def streaming_split_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         keep = list(FLAGSHIP_KEEP)
 
         def t_kept(df: DataFrame) -> DataFrame:
-            return df.filter(
-                F.col("event_type").isNotNull()
-                & F.lower("event_type").isin(keep)
-            )
+            return filter_event_types(df, keep)
 
         def t_rest(df: DataFrame) -> DataFrame:
             return df.filter(
@@ -692,9 +689,10 @@ FROM events GROUP BY event_type
 def streaming_manifest_sink_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The Python-DataSource WRITER on the real engine: events
     replayed through a bounded file stream land in a
-    ``manifest_jsonl`` directory (per-task part files + per-batch
-    atomic manifests), then the COMMITTED content — resolved through
-    the manifest set exactly as a downstream reader would — is
+    ``manifest_parquet`` directory (Arrow RecordBatches streamed to
+    per-task parquet part files + per-batch atomic manifests), then
+    the COMMITTED content — resolved through the manifest set exactly
+    as a downstream reader would, with the written column types — is
     aggregated and checked against batch SQL over the original
     table. Proves the sink's commit protocol end to end: every input
     row visible exactly once, no uncommitted partials."""
@@ -711,19 +709,15 @@ def streaming_manifest_sink_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         sink_dir = r.dir("sink")
         r.drain(
             r.stream(maxFilesPerTrigger=1)
-            .writeStream.format("manifest_jsonl")
+            .writeStream.format("manifest_parquet")
             .option("path", sink_dir)
             .option("checkpointLocation", r.dir("ckpt"))
             .start
         )
         try:
-            landed = read_committed(
-                spark,
-                sink_dir,
-                schema="event_id long, user_id long, event_type string, value double",
-            )
             rows = (
-                landed.groupBy("event_type")
+                read_committed(spark, sink_dir)
+                .groupBy("event_type")
                 .agg(
                     F.count("*").alias("n"),
                     F.round(F.sum("value"), 4).alias("sum_value"),

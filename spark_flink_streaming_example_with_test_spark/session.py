@@ -44,27 +44,13 @@ RUNTIME_CONFS: dict[str, str] = {
 #: Checkpoint files are written to a temp file and renamed atomically
 #: with ``FileSystem.rename``: Spark's default ``FileContext`` manager
 #: forks a shell (readlink, chmod) per file without the native Hadoop
-#: library. The class is Spark-internal and moved package in 4.0, so
-#: ``apply_runtime_confs`` sets it only once the JVM loads one of these.
+#: library. The class is Spark-internal, so ``apply_runtime_confs``
+#: sets it only once the JVM loads it.
 CHECKPOINT_MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
-RENAME_CHECKPOINT_MANAGERS = (
+RENAME_CHECKPOINT_MANAGER = (
     "org.apache.spark.sql.execution.streaming.checkpointing."
-    "FileSystemBasedCheckpointFileManager",  # Spark 4.x
-    "org.apache.spark.sql.execution.streaming."
-    "FileSystemBasedCheckpointFileManager",  # Spark 3.x
+    "FileSystemBasedCheckpointFileManager"
 )
-
-
-def _rename_checkpoint_manager(spark: SparkSession) -> str | None:
-    """The first of ``RENAME_CHECKPOINT_MANAGERS`` the session's JVM can
-    load, else None (also when the session has no JVM bridge)."""
-    for name in RENAME_CHECKPOINT_MANAGERS:
-        try:
-            spark._jvm.java.lang.Class.forName(name)
-        except Exception:
-            continue
-        return name
-    return None
 
 
 def apply_runtime_confs(spark: SparkSession) -> SparkSession:
@@ -77,9 +63,11 @@ def apply_runtime_confs(spark: SparkSession) -> SparkSession:
     """
     confs = dict(RUNTIME_CONFS)
     if not spark.conf.get(CHECKPOINT_MANAGER_CONF, None):
-        manager = _rename_checkpoint_manager(spark)
-        if manager:
-            confs[CHECKPOINT_MANAGER_CONF] = manager
+        try:
+            spark._jvm.java.lang.Class.forName(RENAME_CHECKPOINT_MANAGER)
+            confs[CHECKPOINT_MANAGER_CONF] = RENAME_CHECKPOINT_MANAGER
+        except Exception:
+            pass  # no JVM bridge, or the class does not load
     for key, value in confs.items():
         try:
             spark.conf.set(key, value)
@@ -94,30 +82,31 @@ def apply_runtime_confs(spark: SparkSession) -> SparkSession:
 def get_session(
     app_name: str = "spark_flink_streaming_example_with_test-spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
 ) -> SparkSession:
     """Create (or fetch) a SparkSession with engine defaults.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (or
-    ``local[*]``). On a real cluster, pass ``master=None`` and let
-    spark-submit own deployment; the runtime confs still apply.
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]``. With neither
+    set, the builder names no master: spark-submit owns deployment
+    (a plain ``python`` run gets its ``local[*]`` default). Shuffle
+    partitions follow the started context's ``defaultParallelism``
+    (the local core count; a cluster's executor cores), and AQE
+    coalesces them where a stage needs fewer.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    master = master or f"local[{cpus}]"
-    if shuffle_partitions is None:
-        # Local mode: match parallelism; a cluster deployment would
-        # size this to ~2-3x total cores or rely on AQE coalescing.
-        shuffle_partitions = int(cpus) if cpus.isdigit() else 32
-
+    cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    master = master or (f"local[{cpus}]" if cpus else None)
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         # Bound local-mode memory; harmless on a cluster where
         # spark-submit overrides it.
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
     )
+    if master:
+        builder = builder.master(master)
     for key, value in RUNTIME_CONFS.items():
         builder = builder.config(key, value)
-    return apply_runtime_confs(builder.getOrCreate())
+    spark = apply_runtime_confs(builder.getOrCreate())
+    spark.conf.set(
+        "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
+    )
+    return spark

@@ -1,17 +1,18 @@
 """Custom sink via Spark 4's Python DataSource API: a
-manifest-committing JSON-lines directory sink —
-``df.write.format("manifest_jsonl")`` and
-``df.writeStream.format("manifest_jsonl")`` — the pure-Python analog
+manifest-committing parquet directory sink —
+``df.write.format("manifest_parquet")`` and
+``df.writeStream.format("manifest_parquet")`` — the pure-Python analog
 of a DataSourceV2 writer with a commit protocol (SURVEY §2.1's JDBC
 sink is the JVM instance of the same extension point).
 
 Commit protocol (the point of this module — the file IO is plain
-local/NFS ``open()`` here; a production build swaps in an object
-store client without touching the protocol):
+local/NFS IO here; a production build swaps in an object store client
+without touching the protocol):
 
-- every write task streams its partition to a uniquely-named
-  ``data/part-<uuid>.jsonl`` and returns the filename + row count as
-  its ``WriterCommitMessage``;
+- every write task streams its pyarrow RecordBatches, one at a time,
+  into a uniquely-named ``data/part-<uuid>.parquet`` and returns the
+  filename + row count as its ``WriterCommitMessage`` (an empty
+  partition writes no file);
 - nothing is visible until the DRIVER commit writes a manifest under
   ``_manifest/`` listing exactly the committed files — readers
   resolve the manifest set, so half-written task output and files
@@ -25,9 +26,10 @@ store client without touching the protocol):
 - ``abort`` best-effort deletes the reported task files.
 
 Scale posture: tasks write independently (no driver data path, no
-renames); the driver handles only filenames — O(tasks) metadata, the
-same shape as a cloud-committer. Append-only by design: overwrite
-semantics belong to a table format and are rejected loudly.
+renames, no per-row Python, no partition buffered in memory); the
+driver handles only filenames — O(tasks) metadata, the same shape as
+a cloud-committer. Append-only by design: overwrite semantics belong
+to a table format and are rejected loudly.
 """
 
 from __future__ import annotations
@@ -41,8 +43,6 @@ from pyspark.sql.datasource import (
     DataSource,
     DataSourceArrowWriter,
     DataSourceStreamArrowWriter,
-    DataSourceStreamWriter,
-    DataSourceWriter,
     WriterCommitMessage,
 )
 
@@ -53,28 +53,13 @@ class _FileCommit(WriterCommitMessage):
     rows: int
 
 
-def _default(o):
-    return str(o)
-
-
-def _write_partition(path: str, iterator) -> _FileCommit:
-    data_dir = os.path.join(path, "data")
-    os.makedirs(data_dir, exist_ok=True)
-    fname = os.path.join(data_dir, f"part-{uuid.uuid4().hex}.jsonl")
-    n = 0
-    with open(fname, "w", encoding="utf-8") as f:
-        for row in iterator:
-            f.write(json.dumps(row.asDict(), default=_default))
-            f.write("\n")
-            n += 1
-    return _FileCommit(file=fname, rows=n)
-
-
 def _write_manifest(path: str, name: str, messages) -> None:
     mdir = os.path.join(path, "_manifest")
     os.makedirs(mdir, exist_ok=True)
     files = [
-        {"file": m.file, "rows": m.rows} for m in messages if m is not None
+        {"file": m.file, "rows": m.rows}
+        for m in messages
+        if m is not None and m.file
     ]
     tmp = os.path.join(mdir, f".{name}.tmp-{uuid.uuid4().hex}")
     with open(tmp, "w", encoding="utf-8") as f:
@@ -85,35 +70,50 @@ def _write_manifest(path: str, name: str, messages) -> None:
 
 def _abort(messages) -> None:
     for m in messages or []:
-        if m is not None:
+        if m is not None and m.file:
             try:
                 os.remove(m.file)
             except OSError:
                 pass
 
 
-class _ManifestBatchWriter(DataSourceWriter):
+class _ManifestParquetWriter(DataSourceArrowWriter):
     def __init__(self, options):
         self.path = options["path"]
 
     def write(self, iterator):
-        return _write_partition(self.path, iterator)
+        import pyarrow.parquet as pq
+
+        fname, rows, out = "", 0, None
+        try:
+            for batch in iterator:
+                if out is None:
+                    data_dir = os.path.join(self.path, "data")
+                    os.makedirs(data_dir, exist_ok=True)
+                    fname = os.path.join(
+                        data_dir, f"part-{uuid.uuid4().hex}.parquet"
+                    )
+                    out = pq.ParquetWriter(fname, batch.schema)
+                out.write_batch(batch)
+                rows += batch.num_rows
+        finally:
+            if out is not None:
+                out.close()
+        return _FileCommit(file=fname, rows=rows)
 
     def commit(self, messages):
-        _write_manifest(
-            self.path, f"batch-{uuid.uuid4().hex}.json", messages
-        )
+        _write_manifest(self.path, f"batch-{uuid.uuid4().hex}.json", messages)
 
     def abort(self, messages):
         _abort(messages)
 
 
-class _ManifestStreamWriter(DataSourceStreamWriter):
+class _ManifestParquetStreamWriter(DataSourceStreamArrowWriter):
     def __init__(self, options):
         self.path = options["path"]
 
-    def write(self, iterator):
-        return _write_partition(self.path, iterator)
+    # Reuse the batch task-side logic; only the commit keying differs.
+    write = _ManifestParquetWriter.write
 
     def commit(self, messages, batchId: int):
         # batchId-keyed + os.replace = idempotent on micro-batch
@@ -125,23 +125,23 @@ class _ManifestStreamWriter(DataSourceStreamWriter):
         _abort(messages)
 
 
-class ManifestJsonlDataSource(DataSource):
+class ManifestParquetDataSource(DataSource):
     @classmethod
     def name(cls) -> str:
-        return "manifest_jsonl"
+        return "manifest_parquet"
 
-    def writer(self, schema, overwrite: bool) -> DataSourceWriter:
+    def writer(self, schema, overwrite: bool):
         if overwrite:
             raise ValueError(
-                "manifest_jsonl is append-only: overwrite semantics need a "
-                "table format; use mode('append')"
+                "manifest_parquet is append-only: overwrite semantics need "
+                "a table format; use mode('append')"
             )
-        return _ManifestBatchWriter(self.options)
+        return _ManifestParquetWriter(self.options)
 
-    def streamWriter(self, schema, overwrite: bool) -> DataSourceStreamWriter:
+    def streamWriter(self, schema, overwrite: bool):
         if overwrite:
-            raise ValueError("manifest_jsonl is append-only")
-        return _ManifestStreamWriter(self.options)
+            raise ValueError("manifest_parquet is append-only")
+        return _ManifestParquetStreamWriter(self.options)
 
 
 def committed_files(path: str) -> list[str]:
@@ -160,98 +160,14 @@ def committed_files(path: str) -> list[str]:
     return out
 
 
-def read_committed(spark, path: str, schema=None):
-    """Read the committed content of a manifest_jsonl directory."""
-    files = committed_files(path)
-    if not files:
-        raise FileNotFoundError(f"no committed manifests under {path}")
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.json(files)
-
-
-def register(spark) -> None:
-    spark.dataSource.register(ManifestJsonlDataSource)
-
-
-class _ManifestParquetWriter(DataSourceArrowWriter):
-    """Arrow fast path: each task receives pyarrow RecordBatches
-    (zero per-row Python) and lands them as one parquet part file —
-    the writer shape to use when the sink format speaks Arrow
-    natively. Shares the manifest commit protocol with the JSONL
-    form."""
-
-    def __init__(self, options):
-        self.path = options["path"]
-
-    def write(self, iterator):
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        data_dir = os.path.join(self.path, "data")
-        os.makedirs(data_dir, exist_ok=True)
-        fname = os.path.join(data_dir, f"part-{uuid.uuid4().hex}.parquet")
-        batches = list(iterator)
-        table = (
-            pa.Table.from_batches(batches)
-            if batches
-            else None
-        )
-        n = 0
-        if table is not None:
-            pq.write_table(table, fname)
-            n = table.num_rows
-        else:
-            # empty partition: no file, no manifest entry
-            return _FileCommit(file="", rows=0)
-        return _FileCommit(file=fname, rows=n)
-
-    def commit(self, messages):
-        live = [m for m in messages if m is not None and m.file]
-        _write_manifest(self.path, f"batch-{uuid.uuid4().hex}.json", live)
-
-    def abort(self, messages):
-        _abort([m for m in (messages or []) if m is not None and m.file])
-
-
-class _ManifestParquetStreamWriter(DataSourceStreamArrowWriter):
-    def __init__(self, options):
-        self.path = options["path"]
-
-    # Reuse the batch task-side logic; only the commit keying differs.
-    write = _ManifestParquetWriter.write
-
-    def commit(self, messages, batchId: int):
-        live = [m for m in messages if m is not None and m.file]
-        _write_manifest(self.path, f"streambatch-{batchId:020d}.json", live)
-
-    def abort(self, messages, batchId: int):
-        _abort([m for m in (messages or []) if m is not None and m.file])
-
-
-class ManifestParquetDataSource(DataSource):
-    @classmethod
-    def name(cls) -> str:
-        return "manifest_parquet"
-
-    def writer(self, schema, overwrite: bool):
-        if overwrite:
-            raise ValueError("manifest_parquet is append-only")
-        return _ManifestParquetWriter(self.options)
-
-    def streamWriter(self, schema, overwrite: bool):
-        if overwrite:
-            raise ValueError("manifest_parquet is append-only")
-        return _ManifestParquetStreamWriter(self.options)
-
-
-def read_committed_parquet(spark, path: str):
+def read_committed(spark, path: str):
+    """Read the committed content of a manifest_parquet directory;
+    parquet keeps the written column types."""
     files = committed_files(path)
     if not files:
         raise FileNotFoundError(f"no committed manifests under {path}")
     return spark.read.parquet(*files)
 
 
-def register_parquet(spark) -> None:
+def register(spark) -> None:
     spark.dataSource.register(ManifestParquetDataSource)

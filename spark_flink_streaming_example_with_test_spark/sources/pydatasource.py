@@ -10,12 +10,15 @@ synthetic_activity`` (same modular arithmetic, same micros cadence),
 so the source shares the generator's DuckDB RANGE oracle — the
 connector is value-checked, not just smoke-run.
 
-Scale posture: the batch reader splits the row range into
-``parts`` input partitions (each Python worker generates its own
-slice — no driver materialization); the stream reader tracks a
-row-index offset, emits ``rows_per_batch`` per micro-batch, and
-splits each batch across ``parts`` partitions. Rows stream from a
-generator expression — nothing is buffered per partition.
+One source serves both halves. Scale posture: the batch reader
+splits the row range into ``parts`` input partitions (each Python
+worker generates its own slice — no driver materialization); the
+stream reader tracks a row-index offset, emits ``rows_per_batch`` per
+micro-batch, and splits each batch across ``parts`` partitions, so no
+row passes through the driver (the API's driver-side
+``SimpleDataSourceStreamReader`` would materialize every micro-batch
+there). Rows stream from a generator expression — nothing is
+buffered per partition.
 """
 
 from __future__ import annotations
@@ -27,7 +30,6 @@ from pyspark.sql.datasource import (
     DataSourceReader,
     DataSourceStreamReader,
     InputPartition,
-    SimpleDataSourceStreamReader,
 )
 
 from spark_flink_streaming_example_with_test_spark.sources.generator import (
@@ -129,38 +131,7 @@ class _ActivityStreamReader(DataSourceStreamReader):
         self._current = max(self._current, self._floor)
         return _split(lo, hi, self.parts)
 
-    def read(self, partition: _RangePartition):
-        for i in range(partition.start, partition.end):
-            yield _row(i)
-
-    def commit(self, end):
-        pass
-
-
-class _ActivitySimpleStreamReader(SimpleDataSourceStreamReader):
-    """The SIMPLE stream-reader variant: ``read(start)`` returns
-    (rows, next_offset) in one driver-side call, so restart
-    correctness is free — Spark hands back the checkpointed offset
-    and replay reads from exactly there (``readBetweenOffsets``
-    re-derives any range on demand). The cost is no partitioning:
-    rows materialize through the driver, so this variant is for
-    low-volume feeds; the partitioned reader above is the scale
-    path."""
-
-    def __init__(self, options):
-        self.n = int(options.get("n", 10_000))
-        self.rows_per_batch = int(options.get("rows_per_batch", 1_000))
-
-    def initialOffset(self):
-        return {"index": 0}
-
-    def read(self, start):
-        lo = start["index"]
-        hi = min(lo + self.rows_per_batch, self.n)
-        return iter([_row(i) for i in range(lo, hi)]), {"index": hi}
-
-    def readBetweenOffsets(self, start, end):
-        return iter([_row(i) for i in range(start["index"], end["index"])])
+    read = _ActivityBatchReader.read
 
     def commit(self, end):
         pass
@@ -181,21 +152,5 @@ class ActivityDataSource(DataSource):
         return _ActivityStreamReader(self.options)
 
 
-class ActivitySimpleDataSource(DataSource):
-    """Same rows as ``synthetic_activity`` through the simple
-    (driver-side, offset-in-read) stream-reader API."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "synthetic_activity_simple"
-
-    def schema(self) -> str:
-        return SCHEMA
-
-    def simpleStreamReader(self, schema):
-        return _ActivitySimpleStreamReader(self.options)
-
-
 def register(spark) -> None:
     spark.dataSource.register(ActivityDataSource)
-    spark.dataSource.register(ActivitySimpleDataSource)

@@ -18,7 +18,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 def spark():
     from spark_flink_streaming_example_with_test_spark.session import get_session
 
-    spark = get_session(app_name="engine-tests", master="local[4]", shuffle_partitions=4)
+    spark = get_session(app_name="engine-tests", master="local[4]")
     spark.sparkContext.setLogLevel("ERROR")
     yield spark
     spark.stop()

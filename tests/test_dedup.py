@@ -52,6 +52,14 @@ def test_dedup_keep_first_survivors(docs):
     assert survivors == [0, 2, 3, 4]  # doc 1 dropped (dup of 0)
 
 
+def test_shingle_sets_values(spark):
+    """Lower-cased distinct word 3-grams in order; a document shorter
+    than the gram length has no grams and no row."""
+    df = spark.createDataFrame([(1, "A b c d"), (2, "one two")], ["doc_id", "text"])
+    got = [tuple(r) for r in shingle_sets(df, shingle_len=3).collect()]
+    assert got == [(1, ["a b c", "b c d"])]
+
+
 def test_minhash_finds_planted_near_dups(docs):
     pairs = {
         (r.id_a, r.id_b): r.jaccard

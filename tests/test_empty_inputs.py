@@ -78,7 +78,7 @@ def test_cogroup_one_empty_side(spark, no_clicks_sf_dir):
     "name, read",
     [
         ("streaming_upsert_sink_e2e", "parquet"),
-        ("streaming_manifest_sink_e2e", "json"),
+        ("streaming_manifest_sink_e2e", "parquet"),
         ("streaming_state_reader_e2e", "load"),
     ],
 )

@@ -108,16 +108,16 @@ def test_ensure_min_partitions_skips_shuffled_plans(spark, sf_dir):
 
     base = spark.read.parquet(f"{sf_dir}/documents.parquet")
     agg = base.groupBy("source").count()
-    assert ensure_min_partitions(agg, target=64) is agg
+    assert ensure_min_partitions(agg) is agg
 
 
 def test_ensure_min_partitions_widens_local_frames(spark):
     from spark_flink_streaming_example_with_test_spark.functions.partitioning import ensure_min_partitions
 
     df = spark.createDataFrame([(i,) for i in range(10)], ["x"])
-    out = ensure_min_partitions(df, target=8)
+    out = ensure_min_partitions(df)
     assert out is not df
-    assert out.rdd.getNumPartitions() == 8
+    assert out.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
 
 
 def test_label_centroids_expected_dim_guard(spark):

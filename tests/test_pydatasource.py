@@ -52,28 +52,3 @@ def test_stream_read_drains_in_bounded_batches(spark):
     # empty batch at the end is fine).
     assert n_batches >= 3
 
-
-def test_simple_stream_reader_matches_generator(spark):
-    """The simple (driver-side) stream-reader variant drains the
-    same rows as the partitioned reader — and restarting against the
-    checkpoint resumes rather than replaying (offset-in-read makes
-    that free)."""
-    register(spark)
-    q = (
-        spark.readStream.format("synthetic_activity_simple")
-        .option("n", 1_500)
-        .option("rows_per_batch", 500)
-        .load()
-        .groupBy("user_id")
-        .agg(F.count("*").alias("n"))
-        .writeStream.format("memory")
-        .queryName("pyds_simple_stream")
-        .outputMode("complete")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = {r.user_id: r.n for r in spark.table("pyds_simple_stream").collect()}
-    assert got == {u: 150 for u in range(1, 11)}

@@ -461,16 +461,22 @@ def test_upsert_sink_runs_upstream_once_per_row(spark, tmp_path):
     assert calls.value == 40
 
 
-def _crash_replay(spark, tmp_path, build, files: list[list[str]], k: int):
-    """Drive ``build(stream)`` into parquet_batch_writer, one JSON file
-    per micro-batch: run batches 0..k, stop, then delete ``commits/k``
-    and its ``.k.crc`` sidecar, as a crash between batch k's sink write
-    and its commit leaves the checkpoint (with the sidecar left behind
-    the restart refuses to run). Restart on the same checkpoint with
-    the remaining files and drain. Returns the output path and the
+def _crash_replay(
+    spark, tmp_path, build, files: list[list[str]], k: int, sink=None
+):
+    """Drive ``build(stream)`` into ``sink(writer, out)`` (by default
+    parquet_batch_writer in update mode), one JSON file per
+    micro-batch: run batches 0..k, stop, then delete ``commits/k`` and
+    its ``.k.crc`` sidecar, as a crash between batch k's sink write and
+    its commit leaves the checkpoint (with the sidecar left behind the
+    restart refuses to run). Restart on the same checkpoint with the
+    remaining files and drain. Returns the output path and the
     restarted query's first batch id."""
     src, out, ckpt = tmp_path / "src", str(tmp_path / "out"), tmp_path / "ckpt"
     src.mkdir()
+    sink = sink or (
+        lambda w, path: w.foreachBatch(parquet_batch_writer(path)).outputMode("update")
+    )
 
     def run():
         stream = (
@@ -479,9 +485,7 @@ def _crash_replay(spark, tmp_path, build, files: list[list[str]], k: int):
             .json(str(src))
         )
         query = (
-            build(stream)
-            .writeStream.foreachBatch(parquet_batch_writer(out))
-            .outputMode("update")
+            sink(build(stream).writeStream, out)
             .option("checkpointLocation", str(ckpt))
             .start()
         )
@@ -538,6 +542,42 @@ def test_parquet_sink_crash_replay_update_totals(spark, tmp_path):
         n, total = expect.get(r["user_id"], (0, 0.0))
         expect[r["user_id"]] = (n + 1, total + r["value"])
     assert _current_rows(spark, out) == expect
+
+
+def test_manifest_sink_crash_replay_lands_rows_once(spark, tmp_path):
+    """The same crash into the manifest_parquet sink: the re-run batch
+    overwrites its own manifest, so the committed rows equal the input
+    exactly once and the failed attempt's part files (batch k's rows)
+    stay on disk in no manifest."""
+    from spark_flink_streaming_example_with_test_spark.sources.pydatasink import (
+        committed_files,
+        read_committed,
+        register,
+    )
+
+    register(spark)
+    out, first = _crash_replay(
+        spark, tmp_path, lambda s: s, _CRASH_FILES, k=1,
+        sink=lambda w, path: w.format("manifest_parquet").option("path", path),
+    )
+    assert first == 1
+
+    def rows(df):
+        return sorted((r.user_id, r.value) for r in df.collect())
+
+    def expect(files):
+        return sorted(
+            (r["user_id"], r["value"]) for f in files for r in map(json.loads, f)
+        )
+
+    assert rows(read_committed(spark, out)) == expect(_CRASH_FILES)
+    data = os.path.join(out, "data")
+    orphans = sorted(
+        set(os.path.join(data, f) for f in os.listdir(data) if f.endswith(".parquet"))
+        - set(committed_files(out))
+    )
+    assert orphans
+    assert rows(spark.read.parquet(*orphans)) == expect(_CRASH_FILES[1:2])
 
 
 def test_state_metadata_reader_describes_operator(spark, tmp_path):
@@ -687,7 +727,7 @@ def test_streaming_upsert_sink_e2e_replays_several_batches(spark, sf_dir):
 
 
 # Streaming checkpoints go through Spark's rename-based checkpoint file
-# manager (session.RENAME_CHECKPOINT_MANAGERS), resolved in the JVM.
+# manager (session.RENAME_CHECKPOINT_MANAGER), resolved in the JVM.
 
 
 def _checkpoint_manager(session, path: str):
@@ -703,12 +743,12 @@ def _checkpoint_manager(session, path: str):
 def test_session_uses_rename_checkpoint_manager(spark, tmp_path):
     from spark_flink_streaming_example_with_test_spark.session import (
         CHECKPOINT_MANAGER_CONF,
-        RENAME_CHECKPOINT_MANAGERS,
+        RENAME_CHECKPOINT_MANAGER,
     )
 
     manager = _checkpoint_manager(spark, f"file:{tmp_path}/ckpt")
-    assert manager.getClass().getName() == RENAME_CHECKPOINT_MANAGERS[0]
-    assert spark.conf.get(CHECKPOINT_MANAGER_CONF) == RENAME_CHECKPOINT_MANAGERS[0]
+    assert manager.getClass().getName() == RENAME_CHECKPOINT_MANAGER
+    assert spark.conf.get(CHECKPOINT_MANAGER_CONF) == RENAME_CHECKPOINT_MANAGER
 
 
 def test_session_keeps_a_checkpoint_manager_it_already_names(spark):
@@ -769,7 +809,7 @@ def test_unresolvable_checkpoint_manager_keeps_spark_default(
     from spark_flink_streaming_example_with_test_spark import session as engine_session
 
     monkeypatch.setattr(
-        engine_session, "RENAME_CHECKPOINT_MANAGERS", ("org.example.NoSuchManager",)
+        engine_session, "RENAME_CHECKPOINT_MANAGER", "org.example.NoSuchManager"
     )
     other = engine_session.apply_runtime_confs(spark.newSession())
     assert other.conf.get(engine_session.CHECKPOINT_MANAGER_CONF, None) is None

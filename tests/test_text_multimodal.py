@@ -19,7 +19,6 @@ from spark_flink_streaming_example_with_test_spark.operators.text import (
     predict_language,
     stopword_hits,
     with_token_stats,
-    word_ngrams,
 )
 
 
@@ -30,17 +29,6 @@ def test_token_stats(spark):
     assert row.n_chars == 10
     assert row.avg_token_len == 2.5
     assert row.ttr == 0.75  # 3 distinct of 4
-
-
-def test_word_ngrams_short_doc_is_empty(spark):
-    df = spark.createDataFrame([(1, "one two")], ["doc_id", "text"])
-    assert df.select(word_ngrams("text", 3).alias("g")).collect()[0].g == []
-
-
-def test_word_ngrams_values(spark):
-    df = spark.createDataFrame([(1, "A b c d")], ["doc_id", "text"])
-    grams = df.select(word_ngrams("text", 3).alias("g")).collect()[0].g
-    assert grams == ["a b c", "b c d"]
 
 
 def test_language_heuristic(spark):
