@@ -23,6 +23,7 @@ from spark_flink_streaming_example_with_test_spark.functions.numerics import (
     half_up_duck_sql,
     half_up_spark_sql,
 )
+from spark_flink_streaming_example_with_test_spark.session import scoped_confs
 from spark_flink_streaming_example_with_test_spark.sources.tables import load_table
 
 SESSION_GAP_SEC = 12 * 3600
@@ -2452,48 +2453,46 @@ def bucketed_join_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_orderkey", "l_extendedprice", "l_discount"
     )
     ob, lb = "r07_orders_bkt", "r07_lineitem_bkt"
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     # Broadcast off for the probe: at fixture scale the optimizer
     # would broadcast the small side (its own BroadcastExchange),
     # hiding exactly the exchange-elimination a 100 TB fact-fact
     # sort-merge join needs proven.
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        write_bucketed(orders, ob, "o_orderkey", n_buckets=8,
-                       sort_cols="o_orderkey")
-        write_bucketed(li, lb, "l_orderkey", n_buckets=8,
-                       sort_cols="l_orderkey")
-        joined = bucketed_table(spark, ob).join(
-            bucketed_table(spark, lb),
-            F.col("o_orderkey") == F.col("l_orderkey"),
-        )
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        shuffle_free = (
-            "Exchange" not in plan and "SortMergeJoin" in plan
-        )
-        out = (
-            joined.groupBy("o_orderpriority")
-            .agg(
-                F.count("*").alias("n_lines"),
-                F.round(
-                    F.sum(
-                        F.col("l_extendedprice") * (1 - F.col("l_discount"))
-                    ),
-                    2,
-                ).alias("revenue"),
+        with scoped_confs(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
+            write_bucketed(orders, ob, "o_orderkey", n_buckets=8,
+                           sort_cols="o_orderkey")
+            write_bucketed(li, lb, "l_orderkey", n_buckets=8,
+                           sort_cols="l_orderkey")
+            joined = bucketed_table(spark, ob).join(
+                bucketed_table(spark, lb),
+                F.col("o_orderkey") == F.col("l_orderkey"),
             )
-            .withColumn("join_shuffle_free", F.lit(shuffle_free))
-        )
-        rows = out.collect()
-        return spark.createDataFrame(
-            rows,
-            "o_orderpriority string, n_lines long, revenue double, "
-            "join_shuffle_free boolean",
-        )
+            plan = joined._jdf.queryExecution().executedPlan().toString()
+            shuffle_free = (
+                "Exchange" not in plan and "SortMergeJoin" in plan
+            )
+            out = (
+                joined.groupBy("o_orderpriority")
+                .agg(
+                    F.count("*").alias("n_lines"),
+                    F.round(
+                        F.sum(
+                            F.col("l_extendedprice") * (1 - F.col("l_discount"))
+                        ),
+                        2,
+                    ).alias("revenue"),
+                )
+                .withColumn("join_shuffle_free", F.lit(shuffle_free))
+            )
+            rows = out.collect()
     finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
         spark.sql(f"DROP TABLE IF EXISTS {ob}")
         spark.sql(f"DROP TABLE IF EXISTS {lb}")
+    return spark.createDataFrame(
+        rows,
+        "o_orderpriority string, n_lines long, revenue double, "
+        "join_shuffle_free boolean",
+    )
 
 
 BUCKETED_JOIN_ORACLE = """
@@ -3674,42 +3673,34 @@ def dpp_partition_pruning_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id", "event_type", "value"
     )
     d = tempfile.mkdtemp(prefix="engine_dpp_")
-    prev = spark.conf.get(
-        "spark.sql.optimizer.dynamicPartitionPruning.reuseBroadcastOnly"
-    )
     try:
-        spark.conf.set(
-            "spark.sql.optimizer.dynamicPartitionPruning.reuseBroadcastOnly",
-            "false",
-        )
-        ev.write.mode("overwrite").partitionBy("event_type").parquet(d)
-        back = spark.read.schema(
-            "user_id long, value double, event_type string"
-        ).parquet(d)
-        dim = (
-            ev.select("event_type")
-            .distinct()
-            .filter(F.col("event_type").isin("click", "purchase"))
-        )
-        joined = back.join(dim, "event_type")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        dpp = "dynamicpruningexpression" in plan.lower()
-        out = joined.groupBy("event_type").agg(
-            F.count("*").cast("long").alias("n"),
-            F.round(F.sum("value"), 2).alias("total_value"),
-        ).withColumn("dpp_at_runtime", F.lit(dpp))
-        rows = out.collect()
-        return spark.createDataFrame(
-            rows,
-            "event_type string, n long, total_value double, "
-            "dpp_at_runtime boolean",
-        )
+        with scoped_confs(spark, {
+            "spark.sql.optimizer.dynamicPartitionPruning.reuseBroadcastOnly": "false"
+        }):
+            ev.write.mode("overwrite").partitionBy("event_type").parquet(d)
+            back = spark.read.schema(
+                "user_id long, value double, event_type string"
+            ).parquet(d)
+            dim = (
+                ev.select("event_type")
+                .distinct()
+                .filter(F.col("event_type").isin("click", "purchase"))
+            )
+            joined = back.join(dim, "event_type")
+            plan = joined._jdf.queryExecution().executedPlan().toString()
+            dpp = "dynamicpruningexpression" in plan.lower()
+            out = joined.groupBy("event_type").agg(
+                F.count("*").cast("long").alias("n"),
+                F.round(F.sum("value"), 2).alias("total_value"),
+            ).withColumn("dpp_at_runtime", F.lit(dpp))
+            rows = out.collect()
     finally:
-        spark.conf.set(
-            "spark.sql.optimizer.dynamicPartitionPruning.reuseBroadcastOnly",
-            prev,
-        )
         shutil.rmtree(d, ignore_errors=True)
+    return spark.createDataFrame(
+        rows,
+        "event_type string, n long, total_value double, "
+        "dpp_at_runtime boolean",
+    )
 
 
 DPP_JOIN_ORACLE = """
@@ -3742,10 +3733,7 @@ def bloom_filter_join_proof(spark: SparkSession, sf_dir: str) -> DataFrame:
         "spark.sql.optimizer.runtime.bloomFilter."
         "applicationSideScanSizeThreshold": "0",
     }
-    prev = {k: spark.conf.get(k, None) for k in confs}
-    try:
-        for k, v in confs.items():
-            spark.conf.set(k, v)
+    with scoped_confs(spark, confs):
         orders = load_table(spark, sf_dir, "orders")
         li = load_table(spark, sf_dir, "lineitem")
         sel = orders.filter(F.col("o_totalprice") > 400000).select(
@@ -3765,12 +3753,6 @@ def bloom_filter_join_proof(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_lineitems long, n_orders long, sum_quantity double, "
             "bloom_pushed boolean",
         )
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 BLOOM_JOIN_ORACLE = """
@@ -3946,10 +3928,7 @@ def aqe_coalesce_proof(spark: SparkSession, sf_dir: str) -> DataFrame:
         "spark.sql.shuffle.partitions": "32",
         "spark.sql.adaptive.coalescePartitions.enabled": "true",
     }
-    prev = {k: spark.conf.get(k, None) for k in confs}
-    try:
-        for k, v in confs.items():
-            spark.conf.set(k, v)
+    with scoped_confs(spark, confs):
         ev = load_table(spark, sf_dir, "events")
         agg = ev.groupBy("event_type").agg(
             F.count("*").cast("long").alias("n"),
@@ -3966,12 +3945,6 @@ def aqe_coalesce_proof(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type string, n long, total_value double, "
             "aqe_coalesced boolean",
         )
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 AQE_COALESCE_ORACLE = """

@@ -694,8 +694,10 @@ def streaming_manifest_sink_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     the COMMITTED content — resolved through the manifest set exactly
     as a downstream reader would, with the written column types — is
     aggregated and checked against batch SQL over the original
-    table. Proves the sink's commit protocol end to end: every input
-    row visible exactly once, no uncommitted partials."""
+    table. Four part files and ``maxFilesPerTrigger=1`` make four
+    micro-batches, so several batch-keyed manifests commit. Proves the
+    sink's commit protocol end to end: every input row visible exactly
+    once, no uncommitted partials."""
     from spark_flink_streaming_example_with_test_spark.sources.pydatasink import (
         read_committed,
         register,
@@ -705,7 +707,7 @@ def streaming_manifest_sink_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value"
     )
-    with bounded_replay(spark, events) as r:
+    with bounded_replay(spark, events.repartition(4)) as r:
         sink_dir = r.dir("sink")
         r.drain(
             r.stream(maxFilesPerTrigger=1)

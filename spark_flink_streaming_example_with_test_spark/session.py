@@ -10,7 +10,9 @@ partitions, nested-schema pruning for struct columns.
 
 from __future__ import annotations
 
+import contextlib
 import os
+from collections.abc import Iterator
 
 from pyspark.sql import SparkSession
 
@@ -77,6 +79,23 @@ def apply_runtime_confs(spark: SparkSession) -> SparkSession:
             # except nanosAsLong which the loader re-checks.
             pass
     return spark
+
+
+@contextlib.contextmanager
+def scoped_confs(spark: SparkSession, confs: dict[str, str]) -> Iterator[None]:
+    """Set runtime ``confs`` for the block, then restore each key's
+    prior value, or unset a key that was not set, also on exception."""
+    prev = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def get_session(

@@ -37,6 +37,8 @@ from collections.abc import Callable, Iterator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructField, StructType
 
+from spark_flink_streaming_example_with_test_spark.session import scoped_confs
+
 _SHUFFLE_CONF = "spark.sql.shuffle.partitions"
 #: Source bytes per state partition: for replays of batch fixtures the
 #: source size is the proxy for state (state is at most proportional).
@@ -61,16 +63,6 @@ def derive_partitions(spark: SparkSession, *src_paths: str) -> int:
     total = sum(_tree_bytes(p) for p in src_paths)
     derived = max(_FLOOR, math.ceil(total / DEFAULT_BYTES_PER_PARTITION))
     return min(session_n, derived)
-
-
-@contextlib.contextmanager
-def _replay_partitions(spark: SparkSession, *src_paths: str) -> Iterator[None]:
-    prev = spark.conf.get(_SHUFFLE_CONF)
-    spark.conf.set(_SHUFFLE_CONF, str(derive_partitions(spark, *src_paths)))
-    try:
-        yield
-    finally:
-        spark.conf.set(_SHUFFLE_CONF, prev)
 
 
 def _nullable(schema: StructType) -> StructType:
@@ -108,7 +100,8 @@ class Replay:
         """Call ``start`` (e.g. ``writer.start``; it may return one query
         or a list) under the derived partition count, process all
         available input, stop, and return what ``start`` returned."""
-        with _replay_partitions(self._spark, self.dir("src")):
+        n = derive_partitions(self._spark, self.dir("src"))
+        with scoped_confs(self._spark, {_SHUFFLE_CONF: str(n)}):
             started = start()
             queries = started if isinstance(started, list) else [started]
             try:

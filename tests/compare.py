@@ -116,3 +116,10 @@ def assert_rows_equal(spark_df, expected: pd.DataFrame, context: str = ""):
     actual = normalize(spark_df.toPandas())
     exp = normalize(expected)
     assert actual == exp, f"{context}: {actual} != {exp}"
+
+
+def half_up(num: int, den: int, k: int) -> float:
+    """``num / den`` rounded half-up to ``k`` decimals in exact integer
+    arithmetic (NUMERICS.md)."""
+    scale = 10**k
+    return ((2 * num * scale + den) // (2 * den)) / scale

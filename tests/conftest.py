@@ -27,3 +27,16 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture(scope="module")
+def duck():
+    """A DuckDB connection with the ``events`` and ``documents`` fixture
+    tables as views; other tables are read by path."""
+    import duckdb
+
+    con = duckdb.connect()
+    for t in ("events", "documents"):
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
+    yield con
+    con.close()

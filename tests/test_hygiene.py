@@ -174,3 +174,37 @@ def test_welch_ttest_excludes_degenerate_groups(spark, tmp_path):
     assert ("a", "b") in pairs
     assert all(r.t_stat is not None and r.welch_dof is not None for r in out)
     assert all(r.n_a >= 2 and r.n_b >= 2 for r in out)
+
+
+def test_sessions_come_from_the_session_factory():
+    """Every session the package, ``tools/`` and ``bench.py`` start goes
+    through ``session.get_session``, so each one gets the engine's UTC
+    pin, state store, checkpoint manager and partition sizing."""
+    from tests.conftest import REPO_ROOT
+
+    package = REPO_ROOT / "spark_flink_streaming_example_with_test_spark"
+    files = [*package.rglob("*.py"), *(REPO_ROOT / "tools").glob("*.py"), REPO_ROOT / "bench.py"]
+    builders = {
+        str(p.relative_to(REPO_ROOT)) for p in files if "SparkSession.builder" in p.read_text()
+    }
+    assert builders == {"spark_flink_streaming_example_with_test_spark/session.py"}
+
+
+def test_scoped_confs_restores_or_unsets(spark):
+    from spark_flink_streaming_example_with_test_spark.session import scoped_confs
+
+    unset = "spark.sql.optimizer.dynamicPartitionPruning.reuseBroadcastOnly"
+    was_set = "spark.sql.shuffle.partitions"
+    assert spark.conf.get(unset, None) is None
+    before = spark.conf.get(was_set)
+    with scoped_confs(spark, {unset: "false", was_set: "3"}):
+        assert spark.conf.get(unset) == "false"
+        assert spark.conf.get(was_set) == "3"
+    assert spark.conf.get(unset, None) is None
+    assert spark.conf.get(was_set) == before
+
+    with pytest.raises(RuntimeError, match="inside"):
+        with scoped_confs(spark, {unset: "false", was_set: "3"}):
+            raise RuntimeError("inside")
+    assert spark.conf.get(unset, None) is None
+    assert spark.conf.get(was_set) == before

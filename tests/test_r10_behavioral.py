@@ -21,12 +21,8 @@ import pytest
 
 from spark_flink_streaming_example_with_test_spark.plans import analytics as an
 from spark_flink_streaming_example_with_test_spark.plans import measures as me
+from tests.compare import half_up
 from tests.conftest import SF_DIR
-
-
-def _half_up(num: int, den: int, k: int) -> float:
-    scale = 10**k
-    return ((2 * num * scale + den) // (2 * den)) / scale
 
 
 @pytest.fixture(scope="module")
@@ -74,10 +70,10 @@ def test_funnel_matches_bruteforce(spark, user_events):
     assert n1 >= n2 >= n3
     assert got["view"]["conv_from_prev"] == (1.0 if n1 else 0.0)
     assert got["click"]["conv_from_prev"] == (
-        _half_up(n2, n1, 6) if n1 else 0.0
+        half_up(n2, n1, 6) if n1 else 0.0
     )
     assert got["purchase"]["conv_from_prev"] == (
-        _half_up(n3, n2, 6) if n2 else 0.0
+        half_up(n3, n2, 6) if n2 else 0.0
     )
 
 
@@ -100,7 +96,7 @@ def test_markov_matches_bruteforce(spark, user_events):
     for r in rows:
         key = (r["from_type"], r["to_type"])
         assert trans[key] == r["n"]
-        assert r["p"] == _half_up(trans[key], totals[r["from_type"]], 4)
+        assert r["p"] == half_up(trans[key], totals[r["from_type"]], 4)
         by_from[r["from_type"]].append(r["p"])
     # each row of the transition matrix sums to 1 within rounding
     for probs in by_from.values():
@@ -111,7 +107,7 @@ def test_gini_matches_bruteforce(spark, user_events):
     counts = sorted(len(s) for s in user_events.values())
     n, s = len(counts), sum(counts)
     two_b = 2 * sum((i + 1) * x for i, x in enumerate(counts))
-    expected = _half_up(two_b - (n + 1) * s, n * s, 6)
+    expected = half_up(two_b - (n + 1) * s, n * s, 6)
 
     row = me.gini_user_activity(spark, SF_DIR).collect()[0]
     assert row["n_users"] == n
@@ -145,8 +141,8 @@ def test_ab_test_matches_bruteforce(spark, user_events):
     assert (row["n_a"], row["conv_a"], row["n_b"], row["conv_b"]) == (
         na, xa, nb, xb,
     )
-    assert row["rate_a"] == _half_up(xa, na, 6)
-    assert row["rate_b"] == _half_up(xb, nb, 6)
+    assert row["rate_a"] == half_up(xa, na, 6)
+    assert row["rate_b"] == half_up(xb, nb, 6)
     x = xa + xb
     num = (xa * nb - xb * na) ** 2 * (na + nb)
     den = na * nb * x * (na + nb - x)
@@ -177,8 +173,8 @@ def test_fano_matches_bruteforce(spark, user_events):
         nd, sc, scc = len(cs), sum(cs), sum(c * c for c in cs)
         assert r["n_days"] == nd
         assert r["n_events"] == sc
-        assert r["mean_daily"] == _half_up(sc, nd, 6)
-        assert r["fano_factor"] == _half_up(nd * scc - sc * sc, nd * sc, 6)
+        assert r["mean_daily"] == half_up(sc, nd, 6)
+        assert r["fano_factor"] == half_up(nd * scc - sc * sc, nd * sc, 6)
         assert r["bursty"] == (nd * scc - sc * sc > nd * sc)
 
 
@@ -196,7 +192,7 @@ def test_survival_curve_matches_bruteforce(spark, user_events):
         surv = sum(1 for x in lives if x >= r["min_lifetime_days"])
         assert r["n_surviving"] == surv
         assert r["n_users"] == n
-        assert r["surviving_share"] == _half_up(surv, n, 6)
+        assert r["surviving_share"] == half_up(surv, n, 6)
         if prev is not None:
             assert r["n_surviving"] <= prev  # monotone non-increasing
         prev = r["n_surviving"]

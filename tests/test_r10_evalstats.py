@@ -12,12 +12,8 @@ from __future__ import annotations
 from fractions import Fraction
 
 from spark_flink_streaming_example_with_test_spark.plans import evalstats as ev
+from tests.compare import half_up
 from tests.conftest import SF_DIR
-
-
-def _half_up(num: int, den: int, k: int) -> float:
-    scale = 10**k
-    return ((2 * num * scale + den) // (2 * den)) / scale
 
 
 def test_auc_matches_bruteforce_pair_count(spark):
@@ -46,7 +42,7 @@ def test_auc_matches_bruteforce_pair_count(spark):
     assert row["n_neg"] == len(neg)
     assert row["n_wins"] == wins
     assert row["n_ties"] == ties
-    assert row["auc"] == _half_up(
+    assert row["auc"] == half_up(
         2 * wins + ties, 2 * len(pos) * len(neg), 6
     )
 
@@ -155,7 +151,7 @@ def test_token_budget_selection_matches_greedy_replay(spark):
     for src, toks in sel.items():
         assert out[src]["n_selected"] == len(toks)
         assert out[src]["tokens_selected"] == sum(toks)
-        assert out[src]["budget_share"] == _half_up(
+        assert out[src]["budget_share"] == half_up(
             sum(toks), budget, 6
         )
     assert sum(r["tokens_selected"] for r in out.values()) <= budget
@@ -207,7 +203,7 @@ def test_link_prediction_matches_bruteforce(spark):
     assert [(r["common_neighbors"], r["u"], r["v"]) for r in out] == expect
     for r in out:
         denom = r["deg_u"] + r["deg_v"] - r["common_neighbors"]
-        assert r["jaccard"] == _half_up(r["common_neighbors"], denom, 6)
+        assert r["jaccard"] == half_up(r["common_neighbors"], denom, 6)
         assert (r["u"], r["v"]) not in und
 
 
@@ -257,7 +253,7 @@ def test_ttr_and_nucleus_match_bruteforce(spark):
         assert (t["n_tokens"], t["vocab_size"], t["n_hapax"]) == (
             total, vocab, hapax,
         )
-        assert t["ttr"] == _half_up(vocab, total, 6)
+        assert t["ttr"] == half_up(vocab, total, 6)
 
         # nucleus: smallest prefix of (freq desc, term) covering 90%
         ranked = sorted(c.items(), key=lambda kv: (-kv[1], kv[0]))
@@ -268,7 +264,7 @@ def test_ttr_and_nucleus_match_bruteforce(spark):
                 break
         nr = nuc_out[src]
         assert nr["v90_terms"] == i
-        assert nr["coverage_at_v90"] == _half_up(cum, total, 6)
+        assert nr["coverage_at_v90"] == half_up(cum, total, 6)
         # minimality: one fewer term covers < 90%
         if i > 1:
             assert (cum - ranked[i - 1][1]) * 10 < total * 9

@@ -14,12 +14,8 @@ import duckdb
 import pytest
 
 from spark_flink_streaming_example_with_test_spark.plans import governance as gv
+from tests.compare import half_up
 from tests.conftest import SF_DIR
-
-
-def _half_up(num: int, den: int, k: int) -> float:
-    scale = 10**k
-    return ((2 * num * scale + den) // (2 * den)) / scale
 
 
 @pytest.fixture(scope="module")
@@ -66,7 +62,7 @@ def test_split_leakage_matches_bruteforce(spark, docs_pd):
     assert row["n_cross_split_pairs"] == len(crossed)
     assert row["n_holdout_contaminated"] == len(contaminated)
     if pairs:
-        assert row["leak_share"] == _half_up(len(crossed), len(pairs), 6)
+        assert row["leak_share"] == half_up(len(crossed), len(pairs), 6)
 
 
 def test_soft_dedup_weights_matches_bruteforce(spark, docs_pd):
@@ -84,7 +80,7 @@ def test_soft_dedup_weights_matches_bruteforce(spark, docs_pd):
         r = rows[k]
         assert r["n_groups"] == n_groups
         assert r["n_docs"] == k * n_groups
-        assert r["inv_k_weight"] == _half_up(1, k, 6)
+        assert r["inv_k_weight"] == half_up(1, k, 6)
         assert r["inv_sqrt_weight"] == pytest.approx(
             1.0 / math.sqrt(k), abs=1e-6
         )
@@ -180,8 +176,8 @@ def test_datacard_matches_bruteforce(spark, docs_pd):
         "vocab_size": float(len(set(tokens))),
         "exact_dup_docs": float(len(sub) - sub.text.nunique()),
         "canonical_dup_docs": float(len(sub) - len(keys)),
-        "type_token_ratio": _half_up(len(set(tokens)), len(tokens), 6),
-        "mean_doc_chars": _half_up(int(sub.n_chars.sum()), len(sub), 6),
+        "type_token_ratio": half_up(len(set(tokens)), len(tokens), 6),
+        "mean_doc_chars": half_up(int(sub.n_chars.sum()), len(sub), 6),
     }
     got = {
         r["metric"]: r["value"]

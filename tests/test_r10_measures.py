@@ -16,12 +16,8 @@ import duckdb
 import pytest
 
 from spark_flink_streaming_example_with_test_spark.plans import measures as me
+from tests.compare import half_up
 from tests.conftest import SF_DIR
-
-
-def _half_up(num: int, den: int, k: int) -> float:
-    scale = 10**k
-    return ((2 * num * scale + den) // (2 * den)) / scale
 
 
 @pytest.fixture(scope="module")
@@ -60,8 +56,8 @@ def test_fleiss_kappa_matches_bruteforce(spark, docs_pd):
     row = me.fleiss_kappa_raters(spark, SF_DIR).collect()[0]
     assert row["n_docs"] == n
     assert row["total_en_votes"] == t_en
-    assert row["p_observed"] == _half_up(po_num, 6 * n, 6)
-    assert row["p_expected"] == _half_up(e, 9 * n * n, 6)
+    assert row["p_observed"] == half_up(po_num, 6 * n, 6)
+    assert row["p_expected"] == half_up(e, 9 * n * n, 6)
     assert row["fleiss_kappa"] == expected
     # raters mostly agree with truth, so agreement beats chance
     assert row["fleiss_kappa"] > 0.5
@@ -122,7 +118,7 @@ def test_benford_shares_sum_to_one_and_spine_complete(spark):
     )
     for r in rows:
         assert r["chi2_contrib"] >= 0.0
-        assert r["obs_share"] == _half_up(r["observed"], n, 6)
+        assert r["obs_share"] == half_up(r["observed"], n, 6)
 
 
 def test_info_gain_nonnegative_and_feature_set(spark):
@@ -168,7 +164,7 @@ def test_vocab_jaccard_bounds_and_orientation(spark, docs_pd):
         inter = len(va & vb)
         assert r["n_common"] == inter
         assert r["vocab_a"] == len(va) and r["vocab_b"] == len(vb)
-        assert r["vocab_jaccard"] == _half_up(
+        assert r["vocab_jaccard"] == half_up(
             inter, len(va) + len(vb) - inter, 6
         )
 
@@ -220,9 +216,9 @@ def test_jackknife_matches_bruteforce(spark, docs_pd):
         sub = docs_pd[docs_pd.source == r["source"]]
         s_i, n_i = int(sub.n_chars.sum()), len(sub)
         assert r["n_docs"] == n_i
-        assert r["overall_mean"] == _half_up(s, n, 6)
-        assert r["loo_mean"] == _half_up(s - s_i, n - n_i, 6)
-        assert r["abs_shift"] == _half_up(
+        assert r["overall_mean"] == half_up(s, n, 6)
+        assert r["loo_mean"] == half_up(s - s_i, n - n_i, 6)
+        assert r["abs_shift"] == half_up(
             abs(s * n_i - s_i * n), n * (n - n_i), 6
         )
         assert r["pulls_mean_down"] == (s * n_i - s_i * n > 0)
@@ -427,7 +423,7 @@ def test_wilson_ci_brackets_p_hat_and_matches_bruteforce(
     row = me.wilson_ci_dup_rate(spark, SF_DIR).collect()[0]
     assert row["n_sampled"] == n
     assert row["n_flagged"] == flagged
-    assert row["p_hat"] == _half_up(flagged, n, 6)
+    assert row["p_hat"] == half_up(flagged, n, 6)
     assert row["ci_low_95"] == pytest.approx(
         max((center - half) / denom, 0.0), abs=2e-6
     )
@@ -447,8 +443,8 @@ def test_crossval_folds_partition_every_language(spark, docs_pd):
         assert 0.0 <= r["share_of_lang"] <= 1.0
         # exact identity between the two emitted ratios
         n_lang = int(docs_pd[docs_pd.lang == r["lang"]].shape[0])
-        assert r["share_of_lang"] == _half_up(r["n_docs"], n_lang, 6)
-        assert r["abs_dev_from_fifth"] == _half_up(
+        assert r["share_of_lang"] == half_up(r["n_docs"], n_lang, 6)
+        assert r["abs_dev_from_fifth"] == half_up(
             abs(5 * r["n_docs"] - n_lang), 5 * n_lang, 6
         )
     assert per_lang == docs_pd.lang.value_counts().to_dict()

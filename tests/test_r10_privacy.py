@@ -15,23 +15,9 @@ from __future__ import annotations
 import math
 from collections import Counter, defaultdict
 
-import duckdb
-import pytest
-
 from spark_flink_streaming_example_with_test_spark.plans import measures as me
+from tests.compare import half_up
 from tests.conftest import SF_DIR
-
-
-def _half_up(num: int, den: int, k: int) -> float:
-    scale = 10**k
-    return ((2 * num * scale + den) // (2 * den)) / scale
-
-
-@pytest.fixture(scope="module")
-def duck():
-    con = duckdb.connect()
-    yield con
-    con.close()
 
 
 def test_k_anonymity_matches_bruteforce(spark, duck):
@@ -56,7 +42,7 @@ def test_k_anonymity_matches_bruteforce(spark, duck):
         assert r["k_min"] == k_min
         assert r["n_small_groups"] == len(small)
         assert r["n_suppressed_rows"] == sum(small)
-        assert r["suppressed_share"] == _half_up(sum(small), n_rows, 6)
+        assert r["suppressed_share"] == half_up(sum(small), n_rows, 6)
         # suppression is monotone non-decreasing in k
         assert r["n_small_groups"] >= prev_g and r["n_suppressed_rows"] >= prev_r
         prev_g, prev_r = r["n_small_groups"], r["n_suppressed_rows"]
@@ -87,7 +73,7 @@ def test_stratified_allocation_matches_bruteforce(spark, duck):
         assert r["allocated"] == alloc[k]
         assert r["budget"] == budget
         assert r["sums_to_budget"] is True
-        assert r["sampling_rate"] == _half_up(alloc[k], strata[k], 6)
+        assert r["sampling_rate"] == half_up(alloc[k], strata[k], 6)
         # quota rule: within 1 of the exact proportional share, and
         # never more than the stratum holds (B <= N)
         exact = budget * strata[k] / total
@@ -125,7 +111,7 @@ def test_blocking_pairs_match_bruteforce(spark, duck):
         assert r["candidate_pairs"] == pairs
         assert r["total_pairs"] == total_pairs
         assert r["candidate_pairs"] <= r["total_pairs"]
-        assert r["reduction_ratio"] == _half_up(
+        assert r["reduction_ratio"] == half_up(
             n * (n - 1) - 2 * pairs, n * (n - 1), 6
         )
 
@@ -154,7 +140,7 @@ def test_l_diversity_matches_bruteforce(spark, duck):
         assert r["n_groups"] == hist_groups[r["l"]]
         assert r["rows_at_l"] == hist_rows[r["l"]]
         assert r["l_min"] == l_min
-        assert r["group_share"] == _half_up(hist_groups[r["l"]], g_total, 6)
+        assert r["group_share"] == half_up(hist_groups[r["l"]], g_total, 6)
     assert abs(sum(r["group_share"] for r in rows) - 1.0) <= len(rows) * 5e-7
 
 
@@ -185,7 +171,7 @@ def test_t_closeness_matches_bruteforce(spark, duck):
     assert (row["worst_nationkey"], row["worst_bal_band"]) == worst
     wnum, wden, wng = stats[worst]
     assert row["worst_group_rows"] == wng
-    assert row["worst_tvd"] == _half_up(wnum, wden, 6)
+    assert row["worst_tvd"] == half_up(wnum, wden, 6)
     assert 0.0 <= row["worst_tvd"] <= 1.0  # TVD is a [0,1] metric
 
 
@@ -220,7 +206,7 @@ def test_join_cardinality_matches_bruteforce(spark, duck):
     assert fk_exact == sum(cl.values())
     est = sum(co.values()) * sum(cl.values()) // max(len(co), len(cl))
     assert fk["uniform_estimate"] == est
-    assert fk["estimate_over_exact"] == _half_up(est, fk_exact, 6)
+    assert fk["estimate_over_exact"] == half_up(est, fk_exact, 6)
 
     sj = rows["lineitem_selfjoin_partkey"]
     assert sj["rows_a"] == sj["rows_b"] == sum(cp.values())
@@ -228,7 +214,7 @@ def test_join_cardinality_matches_bruteforce(spark, duck):
     assert sj["exact_rows"] == sj_exact
     est2 = sum(cp.values()) ** 2 // len(cp)
     assert sj["uniform_estimate"] == est2
-    assert sj["estimate_over_exact"] == _half_up(est2, sj_exact, 6)
+    assert sj["estimate_over_exact"] == half_up(est2, sj_exact, 6)
     # Cauchy-Schwarz: sum c^2 >= (sum c)^2 / ndv — uniformity is the
     # floor, skew only pushes the exact count ABOVE the estimate
     assert sj_exact * len(cp) >= sum(cp.values()) ** 2

@@ -12,23 +12,9 @@ import hashlib
 import math
 from collections import Counter, defaultdict
 
-import duckdb
-import pytest
-
 from spark_flink_streaming_example_with_test_spark.plans import measures as me
+from tests.compare import half_up
 from tests.conftest import SF_DIR
-
-
-def _half_up(num: int, den: int, k: int) -> float:
-    scale = 10**k
-    return ((2 * num * scale + den) // (2 * den)) / scale
-
-
-@pytest.fixture(scope="module")
-def duck():
-    con = duckdb.connect()
-    yield con
-    con.close()
 
 
 def test_conformal_threshold_matches_bruteforce(spark, duck):
@@ -54,7 +40,7 @@ def test_conformal_threshold_matches_bruteforce(spark, duck):
     assert row["cal_rank"] == k
     assert row["threshold_ppm"] == thr
     assert row["n_covered"] == n_cov
-    assert row["eval_coverage"] == _half_up(n_cov, n_eval, 6)
+    assert row["eval_coverage"] == half_up(n_cov, n_eval, 6)
     assert row["covered_at_alpha"] == (n_cov * 10 >= 9 * n_eval)
     # the integer ceil identity used in-query
     assert k == (9 * (n_cal + 1) + 9) // 10
@@ -107,7 +93,7 @@ def test_rfm_segments_match_bruteforce(spark, duck):
     for r in rows:
         key = (r["r_bucket"], r["f_bucket"], r["m_bucket"])
         assert seg[key] == r["n_users"]
-        assert r["user_share"] == _half_up(seg[key], total, 6)
+        assert r["user_share"] == half_up(seg[key], total, 6)
         assert r["champions"] == (key == (1, 3, 3))
         share_sum += r["user_share"]
     assert abs(share_sum - 1.0) <= len(rows) * 5e-7
@@ -131,7 +117,7 @@ def test_ab_power_matches_bruteforce(spark, duck):
 
     row = me.ab_test_power_mde(spark, SF_DIR).collect()[0]
     assert (row["n_a"], row["n_b"], row["pooled_conv"]) == (na, nb, x)
-    assert row["pooled_rate"] == _half_up(x, n, 6)
+    assert row["pooled_rate"] == half_up(x, n, 6)
     if 0 < x < n:
         expected = round(
             2.801586 * math.sqrt(x * (n - x) * n / (n * n * na * nb)), 6
@@ -163,7 +149,7 @@ def test_per_source_cap_matches_bruteforce(spark, duck):
         # the admission cutoff pins the selected set exactly
         expected_cutoff = ordered[499][0] if n >= 500 else None
         assert r["cutoff_hash"] == expected_cutoff
-        assert r["kept_share"] == _half_up(kept, n, 6)
+        assert r["kept_share"] == half_up(kept, n, 6)
 
 
 def test_epoch_plan_matches_bruteforce(spark, duck):
@@ -187,7 +173,7 @@ def test_epoch_plan_matches_bruteforce(spark, duck):
         if a >= alloc:
             assert r["unique_fraction"] == 1.0
         else:
-            assert r["unique_fraction"] == _half_up(a, alloc, 6)
+            assert r["unique_fraction"] == half_up(a, alloc, 6)
         assert r["effective_tokens"] == min(alloc, 4 * a)
         # an equal-mix 3x budget forces repetition on any source
         # holding less than a third of the corpus
@@ -217,7 +203,7 @@ def test_theil_sen_matches_bruteforce(spark, duck):
     assert (row["med_num"], row["med_den"]) == (med[1], med[2])
     num, den = med[1], med[2]
     expected = (
-        _half_up(num, den, 6) if num >= 0 else -_half_up(-num, den, 6)
+        half_up(num, den, 6) if num >= 0 else -half_up(-num, den, 6)
     )
     assert row["slope_per_day"] == expected
 

@@ -17,12 +17,8 @@ import duckdb
 import pytest
 
 from spark_flink_streaming_example_with_test_spark.plans import measures as me
+from tests.compare import half_up
 from tests.conftest import SF_DIR
-
-
-def _half_up(num: int, den: int, k: int) -> float:
-    scale = 10**k
-    return ((2 * num * scale + den) // (2 * den)) / scale
 
 
 @pytest.fixture(scope="module")
@@ -71,7 +67,7 @@ def test_cohort_retention_matches_bruteforce(spark, user_days):
         r = got[(cd.isoformat(), off)]
         assert r["n_active"] == len(users)
         assert r["cohort_size"] == sizes[cd]
-        assert r["retention"] == _half_up(len(users), sizes[cd], 6)
+        assert r["retention"] == half_up(len(users), sizes[cd], 6)
     # day-0 retention is 1 by construction (cohorting day IS activity)
     for r in rows:
         if r["day_offset"] == 0:
@@ -129,7 +125,7 @@ def test_cusum_matches_bruteforce(spark, daily_counts):
     assert row["total_events"] == n
     assert row["changepoint_day"] == best[1].isoformat()
     assert row["changepoint_index"] == best[2]
-    assert row["cusum_peak"] == _half_up(best[0], nd, 4)
+    assert row["cusum_peak"] == half_up(best[0], nd, 4)
 
 
 def test_autocorr_matches_bruteforce(spark, daily_counts):
@@ -184,7 +180,7 @@ def test_wasserstein_matches_bruteforce(spark):
 
     row = me.wasserstein_length_drift(spark, SF_DIR).collect()[0]
     assert row["n_src0"] == n0 and row["n_src1"] == n1
-    assert row["w1_tokens"] == _half_up(num, n0 * n1, 6)
+    assert row["w1_tokens"] == half_up(num, n0 * n1, 6)
     assert row["w1_tokens"] >= 0.0
 
 

@@ -13,22 +13,10 @@ from __future__ import annotations
 
 import math
 
-import duckdb
 import pytest
 
 from spark_flink_streaming_example_with_test_spark.plans import experiments as ex
 from tests.conftest import SF_DIR
-
-
-@pytest.fixture(scope="module")
-def duck():
-    con = duckdb.connect()
-    for t in ["events", "documents"]:
-        con.sql(
-            f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'"
-        )
-    yield con
-    con.close()
 
 
 def _half_up(num: int, den: int) -> int:

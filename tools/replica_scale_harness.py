@@ -1,24 +1,29 @@
-"""Replica-scaling harness behind SCALE_NOTES.md's measured table.
+"""Build synthetic N-multiples of the sf0.1 fixtures for scale runs.
 
-Builds synthetic N-multiples of the sf0.1 fixtures (id offsets;
-per-replica vowel-permuted text so near-dup pairs stay
-replica-local; sign-flipped embeddings on odd replicas) and times
-catalog queries warm (noop sink, no driver collect) at 1x/2x/4x.
+Each ``x<N>`` dir under ``$SPARK_GRAFT_SCALE_TMP`` (default
+/tmp/engine_scale_harness) is a full table layout: ``documents``,
+``embeddings`` and ``events`` are N id-offset replicas of
+``$SPARK_GRAFT_SF_DIR`` (default: the sf0.1 fixture dir), with
+per-replica vowel-permuted text, so near-dup pairs stay
+replica-local, and sign-flipped embeddings on odd replicas; the
+TPC-H tables are copied once. Time or check queries against one with
 
-Usage:
-    python tools/replica_scale_harness.py dedup_minhash_lsh bpe_first_merges
-    python tools/replica_scale_harness.py --mults 1 2 4 8 <ops...>
+    python tools/replica_scale_harness.py --mults 4 16
+    SPARK_GRAFT_SF_DIR=/tmp/engine_scale_harness/x4 python bench.py <names>
+    SPARK_GRAFT_TEST_SF_DIR=/tmp/engine_scale_harness/x4 python -m pytest tests/test_oracle_parity.py
 
-Timing convention matches bench.py (warm; scan included). The
-replica construction keeps per-user / per-label / duplicate-pair
-structure LOCAL to each replica, so super-linear growth in a
-measurement reflects the operator's own cost model, not
-cross-replica interaction — UP TO 5x: the vowel permutation has
-only five distinct rotations (k % 5), so past 5x each rotation
-class holds multiple replicas whose texts are mutual near-dups and
-planted PAIR counts grow ~quadratically in (mult/5). Interpret
-pair-emitting measurements at 16x+ against the emitted pair count
-(see SCALE_NOTES "split_leakage_audit across replica octaves").
+Only the requested ``x<N>`` dirs are removed and rebuilt, so never
+build a mult that another process is reading.
+
+The construction keeps per-user / per-label / duplicate-pair structure
+LOCAL to each replica, so super-linear growth in a measurement reflects
+the operator's own cost model, not cross-replica interaction — UP TO
+5x: the vowel permutation has only five distinct rotations (k % 5), so
+past 5x each rotation class holds multiple replicas whose texts are
+mutual near-dups and planted PAIR counts grow ~quadratically in
+(mult/5). Interpret pair-emitting measurements at 16x+ against the
+emitted pair count (see SCALE_NOTES "split_leakage_audit across
+replica octaves").
 """
 
 from __future__ import annotations
@@ -28,7 +33,6 @@ import functools
 import os
 import shutil
 import sys
-import time
 
 REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if REPO_ROOT not in sys.path:
@@ -50,7 +54,8 @@ def build_replicas(spark, mult: int) -> str:
     from pyspark.sql import functions as F
 
     out = f"{BASE}/x{mult}"
-    os.makedirs(out, exist_ok=True)
+    shutil.rmtree(out, ignore_errors=True)
+    os.makedirs(out)
     docs = spark.read.parquet(f"{SRC}/documents.parquet")
     emb = spark.read.parquet(f"{SRC}/embeddings.parquet")
     ev = spark.read.parquet(f"{SRC}/events.parquet")
@@ -89,81 +94,17 @@ def build_replicas(spark, mult: int) -> str:
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("ops", nargs="*", help="catalog query names")
     ap.add_argument("--mults", nargs="+", type=int, default=[1, 2, 4])
-    ap.add_argument(
-        "--build-only",
-        action="store_true",
-        help="build the replica dirs and exit (for pointing "
-        "SPARK_GRAFT_TEST_SF_DIR at /tmp/engine_scale_harness/xN "
-        "to run the FULL oracle-parity sweep at replica scale)",
-    )
-    ap.add_argument(
-        "--keep",
-        action="store_true",
-        help="keep the replica dirs on exit instead of deleting them",
-    )
     args = ap.parse_args()
-    if not args.ops and not args.build_only:
-        ap.error("ops required unless --build-only")
 
-    from pyspark.sql import SparkSession
+    from spark_flink_streaming_example_with_test_spark.session import get_session
 
-    from spark_flink_streaming_example_with_test_spark.plans.catalog import QUERIES
-
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.driver.memory",
-                os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = get_session(app_name="replica-scale")
     spark.sparkContext.setLogLevel("ERROR")
-    unknown = [o for o in args.ops if o not in QUERIES]
-    if unknown:
-        raise SystemExit(f"unknown catalog queries: {unknown}")
-    # remove only the mult dirs being (re)built — wiping all of BASE
-    # destroyed sibling fixtures other sweeps were still pointing at
-    # (building x128 silently deleted x4/x16/x64, round 10)
-    for mult in args.mults:
-        shutil.rmtree(f"{BASE}/x{mult}", ignore_errors=True)
-    results: dict[str, list[float]] = {}
-    if args.build_only:
-        for mult in args.mults:
-            d = build_replicas(spark, mult)
-            print(f"built {d}", flush=True)
-        spark.stop()
-        return
-    from spark_flink_streaming_example_with_test_spark.functions.persistence import unpersist_after
-
     try:
         for mult in args.mults:
-            d = build_replicas(spark, mult)
-            for op in args.ops:
-                fn = QUERIES[op].fn
-                # unpersist_after: release the gram/token caches each
-                # query registers, so a long multi-query sweep at big
-                # mults doesn't accumulate ~N queries' worth of
-                # persisted blocks (LRU would evict eventually, but
-                # eviction pressure skews the timings we're here to
-                # take).
-                with unpersist_after():
-                    fn(spark, d).write.format("noop").mode("overwrite").save()
-                with unpersist_after():
-                    t0 = time.time()
-                    fn(spark, d).write.format("noop").mode("overwrite").save()
-                    dt = round(time.time() - t0, 2)
-                results.setdefault(op, []).append(dt)
-                print(f"x{mult} {op}: {dt}s", flush=True)
-        header = " | ".join(f"{m}x" for m in args.mults)
-        print(f"\n| Operator | {header} |")
-        for op, ts in results.items():
-            print("| " + op + " | " + " | ".join(f"{t:.2f} s" for t in ts) + " |")
+            print(f"built {build_replicas(spark, mult)}", flush=True)
     finally:
-        if not args.keep:
-            shutil.rmtree(BASE, ignore_errors=True)
         spark.stop()
 
 
