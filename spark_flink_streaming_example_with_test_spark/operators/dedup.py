@@ -524,6 +524,43 @@ def _gram_pair_intersections(
     )
 
 
+def gram_overlap_duck_ctes(
+    n: int, max_doc_freq: int = DEFAULT_MAX_GRAM_DF
+) -> str:
+    """DuckDB oracle twin of :func:`_gram_pair_intersections`: the
+    ``grams``, ``sizes``, ``inv``, ``inv_r`` and ``inter`` CTEs over a
+    ``toks(doc_id, w)`` CTE the caller defines (``w`` = the lower-cased
+    text split on ' '). ``sizes(doc_id, n)`` is each document's
+    distinct ``n``-gram count; ``inter(id_a, id_b, inter)`` counts a
+    pair's shared distinct grams, kept only when at least one of them
+    has document frequency <= ``max_doc_freq`` — the engine's rare
+    join plus hot-gram add-back, spelled as one flagged self-join.
+    Interpolate it after ``toks``: ``WITH toks AS (...), {ctes} ...``."""
+    gram = " || ' ' || ".join(
+        "w[i]" if k == 0 else f"w[i+{k}]" for k in range(n)
+    )
+    return f"""grams AS (
+  SELECT doc_id,
+         LIST_DISTINCT(LIST_TRANSFORM(RANGE(1, LEN(w) - {n} + 2),
+                       i -> {gram})) AS g
+  FROM toks WHERE LEN(w) >= {n}
+), sizes AS (
+  SELECT doc_id, LEN(g) AS n FROM grams
+), inv AS (
+  SELECT doc_id, UNNEST(g) AS gram FROM grams
+), inv_r AS (
+  SELECT i.doc_id, i.gram, d.df <= {max_doc_freq} AS rare
+  FROM inv i
+  JOIN (SELECT gram, COUNT(*) AS df FROM inv GROUP BY gram) d
+    ON i.gram = d.gram
+), inter AS (
+  SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS inter
+  FROM inv_r a JOIN inv_r b ON a.gram = b.gram AND a.doc_id < b.doc_id
+  GROUP BY 1, 2
+  HAVING MAX(CASE WHEN a.rare THEN 1 ELSE 0 END) = 1
+)"""
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -798,9 +835,9 @@ def incremental_shard_dedup(
     only pairs shard x base (the shard side of the inverted index is
     small), so cost tracks shard postings, not base^2.
     """
-    b_fp = base.select(fingerprint_col(base, text_col).alias("fp"))
+    b_fp = base.select(fingerprint(text_col).alias("fp"))
     s_fp = shard.select(
-        F.col(id_col), fingerprint_col(shard, text_col).alias("fp")
+        F.col(id_col), fingerprint(text_col).alias("fp")
     )
     exact = (
         s_fp.join(b_fp.distinct(), "fp", "left_semi")
@@ -874,8 +911,3 @@ def incremental_shard_dedup(
             "near_jaccard",
         )
     )
-
-
-def fingerprint_col(df: DataFrame, text_col: str) -> "F.Column":
-    """Stable content fingerprint used by the exact tiers."""
-    return F.md5(F.col(text_col))

@@ -3,11 +3,11 @@ columns with typed metadata, processed by Arrow-batched pandas
 functions over ``mapInPandas``.
 
 The Spark-side contract is real and tested — schemas, partitioning,
-UDF signatures, batch shapes. The actual media decode is STUBBED
-(``NotImplementedError`` unless ``fake=True``) because no
-image/audio libraries ship in this environment; a deployment swaps
-``_decode_image_real`` for a Pillow/ffmpeg call without touching
-the Spark plumbing.
+UDF signatures, batch shapes. The media decode is a deterministic
+stand-in (payload digests, raw bytes as 8-bit samples) because no
+image/audio libraries ship with the package; a deployment swaps
+``_decode_image`` (or the per-batch body) for a Pillow/ffmpeg call
+without touching the Spark plumbing.
 """
 
 from __future__ import annotations
@@ -63,18 +63,10 @@ def documents_as_assets(docs: DataFrame) -> DataFrame:
     )
 
 
-def _decode_image_real(payload: bytes) -> tuple[int, int, int]:
-    raise NotImplementedError(
-        "Media decode requires an image library (e.g. Pillow) that is "
-        "not available in this environment; pass fake=True for the "
-        "deterministic stub, or swap this function in deployment."
-    )
-
-
-def _decode_image_fake(payload: bytes) -> tuple[int, int, int]:
-    """Deterministic fake decode: dimensions derived from the
-    payload digest. STUB — stands in for a real decoder so the
-    Spark-side batch shape and schema are testable."""
+def _decode_image(payload: bytes) -> tuple[int, int, int]:
+    """Deterministic stand-in decode: dimensions derived from the
+    payload digest, so the Spark-side batch shape and schema are
+    testable (and oracle-recomputable) without an image library."""
     digest = hashlib.sha256(payload).digest()
     width = 64 + digest[0] % 192
     height = 64 + digest[1] % 192
@@ -82,18 +74,14 @@ def _decode_image_fake(payload: bytes) -> tuple[int, int, int]:
     return width, height, channels
 
 
-def extract_image_features(
-    assets: DataFrame, fake: bool = False
-) -> DataFrame:
+def extract_image_features(assets: DataFrame) -> DataFrame:
     """Arrow-batched feature extraction over ``mapInPandas``: bytes
     in, typed features out. One Python worker per input partition;
     batch size follows spark.sql.execution.arrow.maxRecordsPerBatch."""
-    decode = _decode_image_fake if fake else _decode_image_real
-
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             payloads = pdf["payload"]
-            dims = [decode(bytes(p)) for p in payloads]
+            dims = [_decode_image(bytes(p)) for p in payloads]
             yield pd.DataFrame(
                 {
                     "asset_id": pdf["asset_id"],
@@ -138,17 +126,10 @@ def binary_payload_features(assets: DataFrame) -> DataFrame:
     return assets.mapInPandas(batches, schema)
 
 
-def resize_images(
-    assets: DataFrame, width: int, height: int, fake: bool = False
-) -> DataFrame:
+def resize_images(assets: DataFrame, width: int, height: int) -> DataFrame:
     """Resize plumbing: payload -> payload' (same schema, new bytes).
-    The fake path re-digests the payload with the target dims so
-    output is deterministic and size-bounded. STUB decode, real
-    Spark plumbing."""
-    if not fake:
-        # Fail fast at plan time with the same message the real
-        # decode raises, instead of per-task Python exceptions.
-        _decode_image_real(b"")
+    The stand-in re-digests the payload with the target dims so
+    output is deterministic and size-bounded."""
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
@@ -163,14 +144,11 @@ def resize_images(
     return assets.mapInPandas(batches, ASSET_SCHEMA)
 
 
-def sample_video_frames(
-    assets: DataFrame, every_n: int = 10, fake: bool = False
-) -> DataFrame:
+def sample_video_frames(assets: DataFrame, every_n: int = 10) -> DataFrame:
     """Frame-sampling plumbing: one input row -> N frame rows
-    (flatMap shape via mapInPandas). The fake path emits
-    ``len(payload) // (every_n * 32)`` deterministic frame digests."""
-    if not fake:
-        _decode_image_real(b"")
+    (flatMap shape via mapInPandas). The stand-in emits
+    ``max(1, len(payload) // (every_n * 32))`` deterministic frame
+    digests."""
 
     schema = StructType(
         [
@@ -246,16 +224,14 @@ def payload_sizes_arrow(assets: DataFrame) -> DataFrame:
     )
 
 
-def audio_frame_energy(
-    assets: DataFrame, frame_len: int = 256, fake: bool = False
-) -> DataFrame:
+def audio_frame_energy(assets: DataFrame, frame_len: int = 256) -> DataFrame:
     """Windowed RMS energy over an audio payload — the
     voice-activity / silence-trim primitive of an audio-data
     pipeline: payload bytes in, one (asset_id, frame_id, rms) row
     per full ``frame_len``-sample frame out (the tail shorter than a
     frame is dropped, standard framing semantics).
 
-    The real path would ffmpeg-decode to PCM; the fake path treats
+    A real decoder would ffmpeg-decode to PCM; the stand-in treats
     each payload byte as an unsigned 8-bit sample centered at 128 —
     deterministic, numpy-vectorized, and (for ASCII payloads)
     reproducible by the DuckDB oracle from the text itself, so the
@@ -267,11 +243,6 @@ def audio_frame_energy(
     input partitioning); downstream aggregates see
     (assets x frames) rows, never raw samples.
     """
-    if not fake:
-        raise NotImplementedError(
-            "real audio decode needs an audio library absent from this "
-            "environment; pass fake=True for the deterministic stand-in"
-        )
     import numpy as np
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

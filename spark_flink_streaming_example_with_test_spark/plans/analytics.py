@@ -1506,21 +1506,14 @@ SELECT node, COUNT(*) AS n_triangles FROM corners GROUP BY node
 """
 
 
-def rolling_wau(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Trailing-7-day active users (rolling WAU) per observed day —
-    computed WITHOUT a range join: COUNT(DISTINCT ...) cannot ride a
-    RANGE window frame, and the textbook day-spine theta join builds
-    |days| x |activity| comparisons. Instead each (user, active day)
-    CONTRIBUTES itself to the 7 report days it can be visible from
-    (explode of a 7-element sequence), turning the rolling distinct
-    into a plain equi-keyed distinct-count — shuffle keys only,
-    linear in activity, the shape that survives 100 TB. The
+def _trailing_7d_distinct_users(days: DataFrame) -> DataFrame:
+    """Exact trailing-7-day distinct users ``(report_day, wau)`` per
+    observed day of a distinct ``(user_id, day)`` frame. Each
+    (user, active day) CONTRIBUTES itself to the 7 report days it can
+    be visible from (explode of a 7-element sequence), turning the
+    rolling distinct into a plain equi-keyed distinct-count; the
     observed-day spine (tiny) is semi-joined back so no report day
     beyond the data's horizon appears."""
-    ev = load_table(spark, sf_dir, "events")
-    days = ev.select(
-        "user_id", F.date_trunc("day", F.col("ts")).alias("day")
-    ).distinct()
     contrib = days.select(
         "user_id",
         F.explode(
@@ -1538,6 +1531,20 @@ def rolling_wau(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("report_day")
         .agg(F.count_distinct("user_id").alias("wau"))
     )
+
+
+def rolling_wau(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Trailing-7-day active users (rolling WAU) per observed day —
+    computed WITHOUT a range join: COUNT(DISTINCT ...) cannot ride a
+    RANGE window frame, and the textbook day-spine theta join builds
+    |days| x |activity| comparisons. The contribution explode of
+    :func:`_trailing_7d_distinct_users` keeps it shuffle keys only,
+    linear in activity, the shape that survives 100 TB."""
+    ev = load_table(spark, sf_dir, "events")
+    days = ev.select(
+        "user_id", F.date_trunc("day", F.col("ts")).alias("day")
+    ).distinct()
+    return _trailing_7d_distinct_users(days)
 
 
 ROLLING_WAU_ORACLE = """
@@ -1851,14 +1858,8 @@ def rolling_wau_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("report_day")
         .agg(F.hll_sketch_estimate(F.hll_union_agg("sk")).alias("est"))
     )
-    exact_contrib = days.select("user_id", off, "day").select(
-        "user_id",
-        F.timestamp_add("DAY", F.col("off"), F.col("day")).alias("report_day"),
-    )
-    exact = (
-        exact_contrib.join(spine, "report_day", "left_semi")
-        .groupBy("report_day")
-        .agg(F.count_distinct("user_id").alias("wau_exact"))
+    exact = _trailing_7d_distinct_users(days).withColumnRenamed(
+        "wau", "wau_exact"
     )
     return exact.join(merged, "report_day").select(
         "report_day",

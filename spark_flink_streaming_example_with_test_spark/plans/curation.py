@@ -178,29 +178,10 @@ def dedup_threshold_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-DEDUP_THRESHOLD_ORACLE = """
+DEDUP_THRESHOLD_ORACLE = f"""
 WITH toks AS (
   SELECT doc_id, STRING_SPLIT(LOWER(text), ' ') AS w FROM documents
-), grams AS (
-  SELECT doc_id,
-         LIST_DISTINCT(LIST_TRANSFORM(RANGE(1, LEN(w) - 1),
-                       i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS g
-  FROM toks WHERE LEN(w) >= 3
-), sizes AS (
-  SELECT doc_id, LEN(g) AS n FROM grams
-), inv AS (
-  SELECT doc_id, UNNEST(g) AS gram FROM grams
-), inv_r AS (
-  SELECT i.doc_id, i.gram, d.df <= 10000 AS rare
-  FROM inv i
-  JOIN (SELECT gram, COUNT(*) AS df FROM inv GROUP BY gram) d
-    ON i.gram = d.gram
-), inter AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS inter
-  FROM inv_r a JOIN inv_r b ON a.gram = b.gram AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-  HAVING MAX(CASE WHEN a.rare THEN 1 ELSE 0 END) = 1
-), pairs AS (
+), {dd.gram_overlap_duck_ctes(3)}, pairs AS (
   SELECT id_a, id_b, inter, sa.n + sb.n - inter AS uni
   FROM inter
   JOIN sizes sa ON sa.doc_id = id_a
@@ -279,29 +260,10 @@ def cross_source_duplicate_matrix(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-CROSS_SOURCE_DUP_ORACLE = """
+CROSS_SOURCE_DUP_ORACLE = f"""
 WITH toks AS (
   SELECT doc_id, STRING_SPLIT(LOWER(text), ' ') AS w FROM documents
-), grams AS (
-  SELECT doc_id,
-         LIST_DISTINCT(LIST_TRANSFORM(RANGE(1, LEN(w) - 1),
-                       i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS g
-  FROM toks WHERE LEN(w) >= 3
-), sizes AS (
-  SELECT doc_id, LEN(g) AS n FROM grams
-), inv AS (
-  SELECT doc_id, UNNEST(g) AS gram FROM grams
-), inv_r AS (
-  SELECT i.doc_id, i.gram, d.df <= 10000 AS rare
-  FROM inv i
-  JOIN (SELECT gram, COUNT(*) AS df FROM inv GROUP BY gram) d
-    ON i.gram = d.gram
-), inter AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS inter
-  FROM inv_r a JOIN inv_r b ON a.gram = b.gram AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-  HAVING MAX(CASE WHEN a.rare THEN 1 ELSE 0 END) = 1
-), near AS (
+), {dd.gram_overlap_duck_ctes(3)}, near AS (
   SELECT id_a, id_b, inter, sa.n AS n_a, sb.n AS n_b
   FROM inter
   JOIN sizes sa ON sa.doc_id = id_a

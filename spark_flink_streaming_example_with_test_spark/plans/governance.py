@@ -93,27 +93,7 @@ def split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 SPLIT_LEAKAGE_ORACLE = f"""
 WITH toks AS (
   SELECT doc_id, STRING_SPLIT(LOWER(text), ' ') AS w FROM documents
-), grams AS (
-  SELECT doc_id,
-         LIST_DISTINCT(LIST_TRANSFORM(RANGE(1, LEN(w) - 1),
-                       i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS g
-  FROM toks WHERE LEN(w) >= 3
-), sizes AS (
-  SELECT doc_id, LEN(g) AS n FROM grams
-), inv AS (
-  SELECT doc_id, UNNEST(g) AS gram FROM grams
-), inv_r AS (
-  -- df cap mirror (operators/dedup.py DEFAULT_MAX_GRAM_DF)
-  SELECT i.doc_id, i.gram, d.df <= 10000 AS rare
-  FROM inv i
-  JOIN (SELECT gram, COUNT(*) AS df FROM inv GROUP BY gram) d
-    ON i.gram = d.gram
-), inter AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS inter
-  FROM inv_r a JOIN inv_r b ON a.gram = b.gram AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-  HAVING MAX(CASE WHEN a.rare THEN 1 ELSE 0 END) = 1
-), pairs AS (
+), {dd.gram_overlap_duck_ctes(3)}, pairs AS (
   SELECT id_a, id_b,
          SUBSTR(MD5(CAST(id_a AS VARCHAR)), 1, 2) < 'e6' AS train_a,
          SUBSTR(MD5(CAST(id_b AS VARCHAR)), 1, 2) < 'e6' AS train_b

@@ -15,13 +15,6 @@ from spark_flink_streaming_example_with_test_spark.operators import similarity a
 from spark_flink_streaming_example_with_test_spark.operators import text as tx
 from spark_flink_streaming_example_with_test_spark.sources.tables import load_table
 
-# Document-frequency cap for the inline inverted-index queries
-# (dedup_cross_lingual, dedup_weighted_jaccard) — same value and
-# rationale as operators/dedup.py DEFAULT_MAX_GRAM_DF, and mirrored
-# literally (10000) in their oracles.
-HOT_GRAM_DF_CAP = dd.DEFAULT_MAX_GRAM_DF
-
-
 # md5-nibble decode lives in functions/hashing.py (shared with
 # plans/analytics.py); kept under the historical private aliases.
 from spark_flink_streaming_example_with_test_spark.functions import numerics as nm
@@ -92,31 +85,10 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-DEDUP_MINHASH_LSH_ORACLE = """
+DEDUP_MINHASH_LSH_ORACLE = f"""
 WITH toks AS (
   SELECT doc_id, STRING_SPLIT(LOWER(text), ' ') AS w FROM documents
-), grams AS (
-  SELECT doc_id,
-         LIST_DISTINCT(LIST_TRANSFORM(RANGE(1, LEN(w) - 1),
-                       i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS g
-  FROM toks WHERE LEN(w) >= 3
-), sizes AS (
-  SELECT doc_id, LEN(g) AS n FROM grams
-), inv AS (
-  SELECT doc_id, UNNEST(g) AS gram FROM grams
-), inv_r AS (
-  -- df cap mirror (operators/dedup.py DEFAULT_MAX_GRAM_DF): a pair
-  -- is a candidate only via grams with document frequency <= 10000
-  SELECT i.doc_id, i.gram, d.df <= 10000 AS rare
-  FROM inv i
-  JOIN (SELECT gram, COUNT(*) AS df FROM inv GROUP BY gram) d
-    ON i.gram = d.gram
-), inter AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS inter
-  FROM inv_r a JOIN inv_r b ON a.gram = b.gram AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-  HAVING MAX(CASE WHEN a.rare THEN 1 ELSE 0 END) = 1
-)
+), {dd.gram_overlap_duck_ctes(3)}
 SELECT id_a, id_b,
        ((CAST(inter AS HUGEINT) * 20000 + (sa.n + sb.n - inter)) // (2 * (sa.n + sb.n - inter))) / 1e4 AS jaccard,
        TRUE AS verified_in_exact
@@ -134,31 +106,10 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dd.ngram_jaccard_pairs(docs, shingle_len=3, threshold=0.4)
 
 
-DEDUP_NGRAM_ORACLE = """
+DEDUP_NGRAM_ORACLE = f"""
 WITH toks AS (
   SELECT doc_id, STRING_SPLIT(LOWER(text), ' ') AS w FROM documents
-), grams AS (
-  SELECT doc_id,
-         LIST_DISTINCT(LIST_TRANSFORM(RANGE(1, LEN(w) - 1),
-                       i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS g
-  FROM toks WHERE LEN(w) >= 3
-), sizes AS (
-  SELECT doc_id, LEN(g) AS n FROM grams
-), inv AS (
-  SELECT doc_id, UNNEST(g) AS gram FROM grams
-), inv_r AS (
-  -- df cap mirror (operators/dedup.py DEFAULT_MAX_GRAM_DF): a pair
-  -- is a candidate only via grams with document frequency <= 10000
-  SELECT i.doc_id, i.gram, d.df <= 10000 AS rare
-  FROM inv i
-  JOIN (SELECT gram, COUNT(*) AS df FROM inv GROUP BY gram) d
-    ON i.gram = d.gram
-), inter AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS inter
-  FROM inv_r a JOIN inv_r b ON a.gram = b.gram AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-  HAVING MAX(CASE WHEN a.rare THEN 1 ELSE 0 END) = 1
-)
+), {dd.gram_overlap_duck_ctes(3)}
 SELECT id_a, id_b,
        ((CAST(inter AS HUGEINT) * 20000 + (sa.n + sb.n - inter)) // (2 * (sa.n + sb.n - inter))) / 1e4 AS jaccard
 FROM inter
@@ -213,31 +164,10 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sh.agg(F.count("*").alias("n_docs")).crossJoin(stats)
 
 
-DEDUP_SIMHASH_ORACLE = """
+DEDUP_SIMHASH_ORACLE = f"""
 WITH toks AS (
   SELECT doc_id, STRING_SPLIT(LOWER(text), ' ') AS w FROM documents
-), grams AS (
-  SELECT doc_id,
-         LIST_DISTINCT(LIST_TRANSFORM(RANGE(1, LEN(w) - 1),
-                       i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS g
-  FROM toks WHERE LEN(w) >= 3
-), sizes AS (
-  SELECT doc_id, LEN(g) AS n FROM grams
-), inv AS (
-  SELECT doc_id, UNNEST(g) AS gram FROM grams
-), inv_r AS (
-  -- df cap mirror (operators/dedup.py DEFAULT_MAX_GRAM_DF): a pair
-  -- is a candidate only via grams with document frequency <= 10000
-  SELECT i.doc_id, i.gram, d.df <= 10000 AS rare
-  FROM inv i
-  JOIN (SELECT gram, COUNT(*) AS df FROM inv GROUP BY gram) d
-    ON i.gram = d.gram
-), inter AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS inter
-  FROM inv_r a JOIN inv_r b ON a.gram = b.gram AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-  HAVING MAX(CASE WHEN a.rare THEN 1 ELSE 0 END) = 1
-), pairs AS (
+), {dd.gram_overlap_duck_ctes(3)}, pairs AS (
   SELECT id_a, id_b FROM inter
   JOIN sizes sa ON sa.doc_id = id_a
   JOIN sizes sb ON sb.doc_id = id_b
@@ -309,31 +239,10 @@ def dedup_minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-DEDUP_MINHASH_RECALL_ORACLE = """
+DEDUP_MINHASH_RECALL_ORACLE = f"""
 WITH toks AS (
   SELECT doc_id, STRING_SPLIT(LOWER(text), ' ') AS w FROM documents
-), grams AS (
-  SELECT doc_id,
-         LIST_DISTINCT(LIST_TRANSFORM(RANGE(1, LEN(w) - 1),
-                       i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS g
-  FROM toks WHERE LEN(w) >= 3
-), sizes AS (
-  SELECT doc_id, LEN(g) AS n FROM grams
-), inv AS (
-  SELECT doc_id, UNNEST(g) AS gram FROM grams
-), inv_r AS (
-  -- df cap mirror (operators/dedup.py DEFAULT_MAX_GRAM_DF): a pair
-  -- is a candidate only via grams with document frequency <= 10000
-  SELECT i.doc_id, i.gram, d.df <= 10000 AS rare
-  FROM inv i
-  JOIN (SELECT gram, COUNT(*) AS df FROM inv GROUP BY gram) d
-    ON i.gram = d.gram
-), inter AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS inter
-  FROM inv_r a JOIN inv_r b ON a.gram = b.gram AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-  HAVING MAX(CASE WHEN a.rare THEN 1 ELSE 0 END) = 1
-), pairs AS (
+), {dd.gram_overlap_duck_ctes(3)}, pairs AS (
   SELECT id_a, id_b FROM inter
   JOIN sizes sa ON sa.doc_id = id_a
   JOIN sizes sb ON sb.doc_id = id_b
@@ -767,12 +676,12 @@ WHERE doc_id IN (SELECT MIN(doc_id) FROM documents GROUP BY MD5(text))
 
 def multimodal_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full multimodal decode path over mapInPandas with the
-    deterministic STUB decoder (digest-derived dimensions) — proves
-    the Arrow batch shape and schema end to end; a real Pillow
+    deterministic stand-in decoder (digest-derived dimensions) —
+    proves the Arrow batch shape and schema end to end; a real Pillow
     decode swaps in without touching the plumbing. Oracle re-derives
-    the stub's dims from SHA256 hex in SQL."""
+    the stand-in's dims from SHA256 hex in SQL."""
     docs = load_table(spark, sf_dir, "documents")
-    return mm.extract_image_features(mm.documents_as_assets(docs), fake=True)
+    return mm.extract_image_features(mm.documents_as_assets(docs))
 
 
 MULTIMODAL_FEATURES_ORACLE = """
@@ -960,31 +869,10 @@ def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cc.groupBy("component").agg(F.count("*").alias("n_docs"))
 
 
-DEDUP_CLUSTER_ORACLE = """
+DEDUP_CLUSTER_ORACLE = f"""
 WITH RECURSIVE toks AS (
   SELECT doc_id, STRING_SPLIT(LOWER(text), ' ') AS w FROM documents
-), grams AS (
-  SELECT doc_id,
-         LIST_DISTINCT(LIST_TRANSFORM(RANGE(1, LEN(w) - 1),
-                       i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS g
-  FROM toks WHERE LEN(w) >= 3
-), sizes AS (
-  SELECT doc_id, LEN(g) AS n FROM grams
-), inv AS (
-  SELECT doc_id, UNNEST(g) AS gram FROM grams
-), inv_r AS (
-  -- df cap mirror (operators/dedup.py DEFAULT_MAX_GRAM_DF): a pair
-  -- is a candidate only via grams with document frequency <= 10000
-  SELECT i.doc_id, i.gram, d.df <= 10000 AS rare
-  FROM inv i
-  JOIN (SELECT gram, COUNT(*) AS df FROM inv GROUP BY gram) d
-    ON i.gram = d.gram
-), inter AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS inter
-  FROM inv_r a JOIN inv_r b ON a.gram = b.gram AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-  HAVING MAX(CASE WHEN a.rare THEN 1 ELSE 0 END) = 1
-), pairs AS (
+), {dd.gram_overlap_duck_ctes(3)}, pairs AS (
   SELECT id_a, id_b
   FROM inter
   JOIN sizes sa ON sa.doc_id = id_a
@@ -2266,7 +2154,7 @@ FROM (SELECT UNNEST(STRING_SPLIT(text, ' ')) AS token FROM documents)
 
 
 def multimodal_resize_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Resize plumbing end-to-end on the fake decode path: payload ->
+    """Resize plumbing end-to-end on the stand-in decode: payload ->
     payload' with the target dims folded into the deterministic
     digest, so the oracle can recompute the exact output bytes
     (sha256(payload || '64x64')) without any media library. Proves
@@ -2274,7 +2162,7 @@ def multimodal_resize_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     columns through correctly."""
     docs = load_table(spark, sf_dir, "documents")
     assets = mm.documents_as_assets(docs)
-    resized = mm.resize_images(assets, width=64, height=64, fake=True)
+    resized = mm.resize_images(assets, width=64, height=64)
     return resized.select(
         "asset_id", F.lower(F.hex("payload")).alias("resized_sha")
     )
@@ -2292,12 +2180,10 @@ def multimodal_frame_sample_counts(spark: SparkSession, sf_dir: str) -> DataFram
     flatMap-shaped mapInPandas): per-asset frame count and index
     range recomputed exactly by the oracle from payload length
     (n = max(1, bytes // (every_n * 32))), plus a digest-uniqueness
-    property the fake decode guarantees. The expansion shape — not
-    the stub decode — is what must survive a refactor."""
+    property the stand-in decode guarantees. The expansion shape — not
+    the stand-in decode — is what must survive a refactor."""
     docs = load_table(spark, sf_dir, "documents")
-    frames = mm.sample_video_frames(
-        mm.documents_as_assets(docs), every_n=4, fake=True
-    )
+    frames = mm.sample_video_frames(mm.documents_as_assets(docs), every_n=4)
     return frames.groupBy("asset_id").agg(
         F.count("*").alias("n_frames"),
         F.max("frame_index").cast("int").alias("max_idx"),
@@ -2525,32 +2411,10 @@ def dedup_containment_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dd.containment_pairs(docs, shingle_len=5, threshold=0.5)
 
 
-DEDUP_CONTAINMENT_ORACLE = """
+DEDUP_CONTAINMENT_ORACLE = f"""
 WITH toks AS (
   SELECT doc_id, STRING_SPLIT(LOWER(text), ' ') AS w FROM documents
-), grams AS (
-  SELECT doc_id,
-         LIST_DISTINCT(LIST_TRANSFORM(RANGE(1, LEN(w) - 3),
-             i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2] || ' ' ||
-                  w[i+3] || ' ' || w[i+4])) AS g
-  FROM toks WHERE LEN(w) >= 5
-), sizes AS (
-  SELECT doc_id, LEN(g) AS n FROM grams
-), inv AS (
-  SELECT doc_id, UNNEST(g) AS gram FROM grams
-), inv_r AS (
-  -- df cap mirror (operators/dedup.py DEFAULT_MAX_GRAM_DF): a pair
-  -- is a candidate only via grams with document frequency <= 10000
-  SELECT i.doc_id, i.gram, d.df <= 10000 AS rare
-  FROM inv i
-  JOIN (SELECT gram, COUNT(*) AS df FROM inv GROUP BY gram) d
-    ON i.gram = d.gram
-), inter AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS inter
-  FROM inv_r a JOIN inv_r b ON a.gram = b.gram AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-  HAVING MAX(CASE WHEN a.rare THEN 1 ELSE 0 END) = 1
-)
+), {dd.gram_overlap_duck_ctes(5)}
 SELECT id_a, id_b, inter AS n_shared,
        ((CAST(inter AS HUGEINT) * 20000 + (LEAST(sa.n, sb.n))) // (2 * (LEAST(sa.n, sb.n)))) / 1e4 AS containment
 FROM inter
@@ -2569,30 +2433,11 @@ def dedup_exact_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dd.shared_gram_pairs(docs, window_len=8, min_shared=1)
 
 
-DEDUP_EXACT_SUBSTRING_ORACLE = """
+DEDUP_EXACT_SUBSTRING_ORACLE = f"""
 WITH toks AS (
   SELECT doc_id, STRING_SPLIT(LOWER(text), ' ') AS w FROM documents
-), grams AS (
-  SELECT doc_id,
-         LIST_DISTINCT(LIST_TRANSFORM(RANGE(1, LEN(w) - 6),
-             i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2] || ' ' ||
-                  w[i+3] || ' ' || w[i+4] || ' ' || w[i+5] || ' ' ||
-                  w[i+6] || ' ' || w[i+7])) AS g
-  FROM toks WHERE LEN(w) >= 8
-), inv AS (
-  SELECT doc_id, UNNEST(g) AS gram FROM grams
-), inv_r AS (
-  -- df cap mirror (operators/dedup.py DEFAULT_MAX_GRAM_DF)
-  SELECT i.doc_id, i.gram, d.df <= 10000 AS rare
-  FROM inv i
-  JOIN (SELECT gram, COUNT(*) AS df FROM inv GROUP BY gram) d
-    ON i.gram = d.gram
-)
-SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-       COUNT(*) AS n_shared_windows
-FROM inv_r a JOIN inv_r b ON a.gram = b.gram AND a.doc_id < b.doc_id
-GROUP BY 1, 2
-HAVING MAX(CASE WHEN a.rare THEN 1 ELSE 0 END) = 1
+), {dd.gram_overlap_duck_ctes(8)}
+SELECT id_a, id_b, inter AS n_shared_windows FROM inter
 """
 
 
@@ -4012,7 +3857,7 @@ FROM stats ORDER BY dim_var DESC, pos ASC LIMIT 8
 def multimodal_audio_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Audio-modality plumbing: windowed RMS energy per 64-sample
     frame over the payload (operators/multimodal.py
-    audio_frame_energy, fake 8-bit decode), then per-asset energy
+    audio_frame_energy, stand-in 8-bit decode), then per-asset energy
     stats — the silence-trim / voice-activity screen. For the ASCII
     fixture payloads the oracle recomputes every frame's RMS from
     the text bytes, so the full mapInPandas framing path is
@@ -4026,9 +3871,7 @@ def multimodal_audio_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle's frame range is derived from each doc's
     OCTET_LENGTH, not a fixed literal, so longer docs stay exact."""
     docs = load_table(spark, sf_dir, "documents")
-    frames = mm.audio_frame_energy(
-        mm.documents_as_assets(docs), frame_len=64, fake=True
-    )
+    frames = mm.audio_frame_energy(mm.documents_as_assets(docs), frame_len=64)
     # Round ONCE, on the aggregate: nesting round(6) inside
     # round(4) double-rounds, and Spark (BigDecimal, decimal-string
     # semantics) disagrees with DuckDB (float-arithmetic semantics)
@@ -4167,31 +4010,10 @@ def dedup_keep_best_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-DEDUP_KEEP_BEST_ORACLE = """
+DEDUP_KEEP_BEST_ORACLE = f"""
 WITH RECURSIVE toks AS (
   SELECT doc_id, STRING_SPLIT(LOWER(text), ' ') AS w FROM documents
-), grams AS (
-  SELECT doc_id,
-         LIST_DISTINCT(LIST_TRANSFORM(RANGE(1, LEN(w) - 1),
-                       i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS g
-  FROM toks WHERE LEN(w) >= 3
-), sizes AS (
-  SELECT doc_id, LEN(g) AS n FROM grams
-), inv AS (
-  SELECT doc_id, UNNEST(g) AS gram FROM grams
-), inv_r AS (
-  -- df cap mirror (operators/dedup.py DEFAULT_MAX_GRAM_DF): a pair
-  -- is a candidate only via grams with document frequency <= 10000
-  SELECT i.doc_id, i.gram, d.df <= 10000 AS rare
-  FROM inv i
-  JOIN (SELECT gram, COUNT(*) AS df FROM inv GROUP BY gram) d
-    ON i.gram = d.gram
-), inter AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS inter
-  FROM inv_r a JOIN inv_r b ON a.gram = b.gram AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-  HAVING MAX(CASE WHEN a.rare THEN 1 ELSE 0 END) = 1
-), pairs AS (
+), {dd.gram_overlap_duck_ctes(3)}, pairs AS (
   SELECT id_a, id_b
   FROM inter
   JOIN sizes sa ON sa.doc_id = id_a
@@ -4456,28 +4278,7 @@ WITH RECURSIVE toks AS (
          ROUND(1.0 / (1.0 + EXP(-(AVG(w) * 4.0
                + LN(COUNT(*) + 1.0) * 0.05))), 6) >= 0.5 AS accept
   FROM wts GROUP BY doc_id
-), grams AS (
-  SELECT doc_id,
-         LIST_DISTINCT(LIST_TRANSFORM(RANGE(1, LEN(w) - 1),
-                       i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS g
-  FROM toks WHERE LEN(w) >= 3
-), sizes AS (
-  SELECT doc_id, LEN(g) AS n FROM grams
-), inv AS (
-  SELECT doc_id, UNNEST(g) AS gram FROM grams
-), inv_r AS (
-  -- df cap mirror (operators/dedup.py DEFAULT_MAX_GRAM_DF): a pair
-  -- is a candidate only via grams with document frequency <= 10000
-  SELECT i.doc_id, i.gram, d.df <= 10000 AS rare
-  FROM inv i
-  JOIN (SELECT gram, COUNT(*) AS df FROM inv GROUP BY gram) d
-    ON i.gram = d.gram
-), inter AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS inter
-  FROM inv_r a JOIN inv_r b ON a.gram = b.gram AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-  HAVING MAX(CASE WHEN a.rare THEN 1 ELSE 0 END) = 1
-), jpairs AS (
+), {dd.gram_overlap_duck_ctes(3)}, jpairs AS (
   SELECT id_a, id_b
   FROM inter
   JOIN sizes sa ON sa.doc_id = id_a
@@ -4799,8 +4600,8 @@ def dedup_cross_lingual(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     gram_df = grams.groupBy("gram").agg(F.count("*").alias("df"))
-    rare = gram_df.filter(F.col("df") <= HOT_GRAM_DF_CAP).select("gram")
-    n_dropped = gram_df.filter(F.col("df") > HOT_GRAM_DF_CAP).agg(
+    rare = gram_df.filter(F.col("df") <= dd.DEFAULT_MAX_GRAM_DF).select("gram")
+    n_dropped = gram_df.filter(F.col("df") > dd.DEFAULT_MAX_GRAM_DF).agg(
         F.count("*").cast("long").alias("n_hot_grams_dropped")
     )
     capped = grams.join(rare, "gram")
@@ -4826,7 +4627,7 @@ def dedup_cross_lingual(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).crossJoin(F.broadcast(n_dropped))
 
 
-DEDUP_CROSS_LINGUAL_ORACLE = """
+DEDUP_CROSS_LINGUAL_ORACLE = f"""
 WITH grams AS (
   SELECT doc_id, lang,
          UNNEST(LIST_DISTINCT(LIST_TRANSFORM(
@@ -4838,12 +4639,12 @@ WITH grams AS (
   SELECT gram, COUNT(*) AS df FROM grams GROUP BY gram
 ), dropped AS (
   -- df cap mirror (operators/dedup.py DEFAULT_MAX_GRAM_DF)
-  SELECT CAST(COUNT(*) FILTER (WHERE df > 10000) AS BIGINT)
+  SELECT CAST(COUNT(*) FILTER (WHERE df > {dd.DEFAULT_MAX_GRAM_DF}) AS BIGINT)
     AS n_hot_grams_dropped
   FROM gram_df
 ), capped AS (
   SELECT g.doc_id, g.lang, g.gram
-  FROM grams g JOIN gram_df d ON g.gram = d.gram AND d.df <= 10000
+  FROM grams g JOIN gram_df d ON g.gram = d.gram AND d.df <= {dd.DEFAULT_MAX_GRAM_DF}
 ), pairs AS (
   SELECT a.doc_id AS id_a, b.doc_id AS id_b,
          a.lang AS lang_a, b.lang AS lang_b, COUNT(*) AS shared
@@ -4904,11 +4705,11 @@ def dedup_weighted_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     n_docs = docs.agg(F.count("*").alias("n"))
     gram_df = grams.groupBy("gram").agg(F.count("*").alias("df"))
-    n_dropped = gram_df.filter(F.col("df") > HOT_GRAM_DF_CAP).agg(
+    n_dropped = gram_df.filter(F.col("df") > dd.DEFAULT_MAX_GRAM_DF).agg(
         F.count("*").cast("long").alias("n_hot_grams_dropped")
     )
     idf = (
-        gram_df.filter(F.col("df") <= HOT_GRAM_DF_CAP)
+        gram_df.filter(F.col("df") <= dd.DEFAULT_MAX_GRAM_DF)
         .crossJoin(F.broadcast(n_docs))
         .select(
             "gram",
@@ -4965,7 +4766,7 @@ def dedup_weighted_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-DEDUP_WEIGHTED_JACCARD_ORACLE = """
+DEDUP_WEIGHTED_JACCARD_ORACLE = f"""
 WITH toks AS (
   SELECT doc_id, STRING_SPLIT(LOWER(text), ' ') AS w FROM documents
 ), grams AS (
@@ -4979,12 +4780,12 @@ WITH toks AS (
   SELECT gram, COUNT(*) AS df FROM grams GROUP BY gram
 ), dropped AS (
   -- df cap mirror (operators/dedup.py DEFAULT_MAX_GRAM_DF)
-  SELECT CAST(COUNT(*) FILTER (WHERE df > 10000) AS BIGINT)
+  SELECT CAST(COUNT(*) FILTER (WHERE df > {dd.DEFAULT_MAX_GRAM_DF}) AS BIGINT)
     AS n_hot_grams_dropped
   FROM gram_df
 ), idf AS (
   SELECT gram, LN((n_docs.n + 1.0) / (df + 1.0)) AS idf
-  FROM gram_df, n_docs WHERE df <= 10000
+  FROM gram_df, n_docs WHERE df <= {dd.DEFAULT_MAX_GRAM_DF}
 ), weighted AS (
   SELECT g.doc_id, g.gram, i.idf FROM grams g JOIN idf i ON g.gram = i.gram
 ), totals AS (

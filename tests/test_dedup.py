@@ -223,6 +223,60 @@ def test_gram_df_cap_stops_hot_gram_pair_blowup(spark):
     assert pair.inter == exact[(0, 1)]  # score undistorted by the cap
 
 
+def test_gram_overlap_duck_ctes_applies_the_engine_df_cap(spark):
+    """The oracles' DuckDB gram-overlap chain and the engine's
+    ``_gram_pair_intersections`` agree with a pure-Python count on
+    the df-cap branch: a 3-gram in more than ``k`` docs generates no
+    pair by itself, while pairs that also share rare grams keep their
+    exact intersection (hot grams included)."""
+    from collections import Counter
+
+    import duckdb
+    import pandas as pd
+
+    from spark_flink_streaming_example_with_test_spark.operators.dedup import (
+        _gram_pair_intersections,
+        gram_overlap_duck_ctes,
+    )
+
+    k = 3
+    hot = "terms of service"  # in all 8 docs, df 8 > k
+    rows = [(i, f"{hot} document body number {i} entirely") for i in range(8)]
+    rows[0] = (0, f"{hot} shared rare content alpha beta gamma")
+    rows[1] = (1, f"{hot} shared rare content alpha beta delta")
+    rows[2] = (2, f"Planted Second pair {hot} tail")
+    rows[3] = (3, f"planted second pair {hot} tail end")
+
+    words = {i: t.lower().split(" ") for i, t in rows}
+    grams = {
+        i: {" ".join(w[j : j + 3]) for j in range(len(w) - 2)}
+        for i, w in words.items()
+    }
+    df = Counter(g for gs in grams.values() for g in gs)
+    assert df[hot] > k
+    expected = {}
+    for a in grams:
+        for b in grams:
+            shared = grams[a] & grams[b]
+            if a < b and any(df[g] <= k for g in shared):
+                expected[(a, b)] = len(shared)
+    assert set(expected) == {(0, 1), (2, 3)}
+
+    docs = pd.DataFrame(rows, columns=["doc_id", "text"])
+    engine = _gram_pair_intersections(
+        spark.createDataFrame(docs), "doc_id", "text", 3, max_doc_freq=k
+    )
+    con = duckdb.connect()
+    con.register("documents", docs)
+    duck = con.execute(
+        "WITH toks AS (SELECT doc_id, STRING_SPLIT(LOWER(text), ' ') AS w"
+        f" FROM documents), {gram_overlap_duck_ctes(3, max_doc_freq=k)}"
+        " SELECT id_a, id_b, inter FROM inter"
+    ).fetchall()
+    assert {(a, b): n for a, b, n in duck} == expected
+    assert {(r.id_a, r.id_b): r.inter for r in engine.collect()} == expected
+
+
 def test_weighted_jaccard_and_cross_lingual_emit_dropped_count(spark, tmp_path):
     """The inline capped queries must surface the hot-gram drop
     count (no-silent-caps rule); on the fixture nothing is hot, so

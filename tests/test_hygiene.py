@@ -190,6 +190,21 @@ def test_sessions_come_from_the_session_factory():
     assert builders == {"spark_flink_streaming_example_with_test_spark/session.py"}
 
 
+def test_gram_overlap_chain_is_spelled_once():
+    """The oracles' exact gram-overlap CTE chain (inverted index, df
+    cap flag, pair intersections) lives only in
+    ``operators/dedup.gram_overlap_duck_ctes``; no plan module spells
+    its own copy or its own df-cap literal."""
+    from tests.conftest import REPO_ROOT
+
+    plans = REPO_ROOT / "spark_flink_streaming_example_with_test_spark" / "plans"
+    markers = ("AS rare", "JOIN (SELECT gram, COUNT(*) AS df FROM inv")
+    copies = {
+        p.name for p in plans.glob("*.py") if any(m in p.read_text() for m in markers)
+    }
+    assert copies == set()
+
+
 def test_scoped_confs_restores_or_unsets(spark):
     from spark_flink_streaming_example_with_test_spark.session import scoped_confs
 

@@ -566,7 +566,7 @@ def test_audio_frame_energy_matches_numpy(spark, payload):
     )
     got = {
         r.frame_id: r.rms
-        for r in audio_frame_energy(assets, frame_len=8, fake=True).collect()
+        for r in audio_frame_energy(assets, frame_len=8).collect()
     }
     x = np.frombuffer(payload, dtype=np.uint8)
     n = len(x) // 8

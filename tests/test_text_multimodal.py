@@ -69,7 +69,7 @@ def test_assets_schema(assets):
 
 
 def test_extract_image_features_fake_decode(assets):
-    rows = {r.asset_id: r for r in extract_image_features(assets, fake=True).collect()}
+    rows = {r.asset_id: r for r in extract_image_features(assets).collect()}
     r = rows[1]
     assert r.n_bytes == 11
     assert r.sha256 == hashlib.sha256(b"hello world").hexdigest()
@@ -78,21 +78,11 @@ def test_extract_image_features_fake_decode(assets):
     assert 1 <= r.channels <= 4
 
 
-def test_extract_image_features_real_decode_is_stubbed(assets):
-    with pytest.raises(Exception, match="NotImplementedError|image library"):
-        extract_image_features(assets, fake=False).collect()
-
-
 def test_resize_images_preserves_schema(assets):
-    out = resize_images(assets, 224, 224, fake=True)
+    out = resize_images(assets, 224, 224)
     assert out.schema == ASSET_SCHEMA
     rows = out.collect()
     assert all(len(bytes(r.payload)) == 32 for r in rows)  # sha256 digest
-
-
-def test_resize_images_unstubbed_fails_fast(assets):
-    with pytest.raises(NotImplementedError):
-        resize_images(assets, 224, 224, fake=False)
 
 
 def test_sample_video_frames_shape(spark):
@@ -100,7 +90,7 @@ def test_sample_video_frames_shape(spark):
         [(1, "x" * 2000, "en", "s", 2000)],
         ["doc_id", "text", "lang", "source", "n_chars"],
     )
-    frames = sample_video_frames(documents_as_assets(docs), every_n=10, fake=True)
+    frames = sample_video_frames(documents_as_assets(docs), every_n=10)
     rows = frames.collect()
     assert len(rows) == 2000 // (10 * 32)
     assert [r.frame_index for r in rows] == list(range(len(rows)))
@@ -217,7 +207,7 @@ def test_pii_patterns_edge_cases(spark):
 
 
 def test_audio_frame_energy_framing_and_values(spark):
-    """Fake audio decode: bytes are unsigned 8-bit samples centered
+    """Stand-in audio decode: bytes are unsigned 8-bit samples centered
     at 128; frames of 4 with tail dropped; RMS computed per frame."""
     from spark_flink_streaming_example_with_test_spark.operators.multimodal import audio_frame_energy
 
@@ -228,19 +218,9 @@ def test_audio_frame_energy_framing_and_values(spark):
         ],
         "asset_id long, payload binary",
     )
-    rows = audio_frame_energy(assets, frame_len=4, fake=True).collect()
+    rows = audio_frame_energy(assets, frame_len=4).collect()
     got = {(r.asset_id, r.frame_id): r.rms for r in rows}
     assert got == {(1, 0): 0.0, (1, 1): 2.0}  # tail byte + short asset drop
-
-
-def test_audio_frame_energy_real_path_stubbed(spark):
-    import pytest
-
-    from spark_flink_streaming_example_with_test_spark.operators.multimodal import audio_frame_energy
-
-    assets = spark.createDataFrame([(1, bytearray(b"x"))], "asset_id long, payload binary")
-    with pytest.raises(NotImplementedError, match="audio"):
-        audio_frame_energy(assets, fake=False)
 
 
 def test_documents_fixture_is_ascii(spark, sf_dir):
